@@ -371,7 +371,7 @@ def _load_shard_table(path) -> np.ndarray:
 class CuckooShardStore:
     """Sharded cuckoo seen-sketch whose shards live in FILES, not in any
     process: ``root/shard_{sid:05d}.npy`` (one uint16 table each) plus
-    ``root/meta.json`` ({n_shards, stamp}).
+    ``root/meta.json`` ({n_shards, stamp, load}).
 
     This is the scale-safe residency for the north_rule's 10^10-URL
     frontier, replacing the r4 design that concatenated every shard's
@@ -410,6 +410,9 @@ class CuckooShardStore:
             meta = json.load(fh)
         self.n_shards = int(meta["n_shards"])
         self.stamp = meta.get("stamp")
+        # the build's target load; shards created later by add_many size
+        # at it too, so a fresh shard gets the same per-epoch headroom
+        self.load = float(meta.get("load", 0.84))
 
     # -- layout --------------------------------------------------------------
 
@@ -422,7 +425,10 @@ class CuckooShardStore:
 
         tmp = self.root / "meta.json.tmp"
         with open(tmp, "w") as fh:
-            json.dump({"n_shards": self.n_shards, "stamp": self.stamp}, fh)
+            json.dump(
+                {"n_shards": self.n_shards, "stamp": self.stamp, "load": self.load},
+                fh,
+            )
         os.replace(tmp, self.root / "meta.json")
 
     def set_stamp(self, stamp) -> None:
@@ -518,7 +524,10 @@ class CuckooShardStore:
             part, schema="shard int, n_buckets long, n_keys long"
         ).collect()
         with open(rootp / "meta.json", "w") as fh:
-            json.dump({"n_shards": int(n_shards), "stamp": None}, fh)
+            json.dump(
+                {"n_shards": int(n_shards), "stamp": None, "load": float(load)},
+                fh,
+            )
         store = cls(rootp)
         store._built_stats = {int(r["shard"]): int(r["n_keys"]) for r in stats}
         return store
@@ -583,7 +592,7 @@ class CuckooShardStore:
         for sid, vals in self._touched(hashes).items():
             filt = self._filter(sid)
             if filt.n_buckets == 64 and not self._shard_path(sid).exists():
-                filt = CuckooFilter.sized(max(len(vals), 64))
+                filt = CuckooFilter.sized(max(len(vals), 64), load=self.load)
             filt.add_many(vals)
             self._write_shard(sid, filt)
 

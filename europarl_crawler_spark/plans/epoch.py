@@ -59,6 +59,12 @@ def _url_state_delta(fetched: DataFrame) -> DataFrame:
     )
 
 
+def _url_ids(df: DataFrame) -> np.ndarray:
+    """The ``url_id`` column on the driver as int64 numpy, through the Arrow
+    collect path — no per-row ``Row`` objects."""
+    return df.select("url_id").toArrow().column("url_id").to_numpy()
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -281,14 +287,8 @@ class CrawlEngine:
             # bounded by the prefetch limits, vs the bloom path's O(frontier)
             # rebuild per epoch. Overflow (headroom exhausted) drops the
             # sketch; it is rebuilt below from the merged frontier.
-            ids = np.unique(
-                np.fromiter(
-                    (r.url_id for r in fresh.select("url_id").collect()),
-                    dtype=np.int64,
-                )
-            )
             try:
-                self._cuckoo.add_many(ids)
+                self._cuckoo.add_many(np.unique(_url_ids(fresh)))
             except RuntimeError:
                 self._cuckoo = None
             fresh.unpersist()
@@ -478,11 +478,13 @@ class CrawlEngine:
             # compact rewrite the underlying files. A huge drop set would
             # make rebuild cheaper than delete — past the broadcast
             # threshold just discard the sketch; the next epoch rebuilds.
-            ids = np.fromiter(
-                (r.url_id for r in uncrawled.select("url_id").collect()),
-                dtype=np.int64,
-            )
-            if len(ids) <= self.config.broadcast_threshold_rows:
+            # At most threshold + 1 ids cross to the driver either way.
+            thr = self.config.broadcast_threshold_rows
+            ids = _url_ids(uncrawled.limit(thr + 1))
+            # unstamp first: a crash mid-eviction must leave no checkpoint
+            # that matches the frontier head (save_sketch re-stamps below)
+            self._cuckoo.set_stamp(None)
+            if len(ids) <= thr:
                 self._cuckoo.delete_many(np.unique(ids))
             else:
                 self._cuckoo = None

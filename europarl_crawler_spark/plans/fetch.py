@@ -6,25 +6,37 @@ postprocessing extract stage (workers/postprocessingworker.py:37-65, F7/F8) —
 collapsed into one pass because with a content-store join there is no I/O
 boundary between "download" and "extract".
 
-Physical shape — **the image payloads never shuffle**:
+Physical shape — **the content store's payloads never shuffle**; only this
+epoch's budget-bounded hit rows do, once for decode balance and once for
+file sizing:
 
 1. status join     : drained (thin) ⋈ web.select(url_hash, kind) — a
                      key+tag shuffle, bytes not involved.
 2. store filter    : web LEFT SEMI broadcast(ok url_hashes) — a map-side
                      filter over the content store's own partitions (the
                      broadcast is 8 bytes/URL, budget-bounded).
-3. extract         : Arrow ``mapInPandas`` decode+phash ON those partitions —
-                     payload bytes are read, decoded, and written from the
-                     same tasks; they cross no exchange.
-4. metadata attach : extract output ⋈ broadcast(thin crawl metadata).
+3. extract         : the hit rows are hash-repartitioned on ``url_hash``
+                     into ``defaultParallelism`` partitions, then Arrow
+                     ``mapInPandas`` decodes + phashes them. An epoch's hits
+                     are one contiguous id block, which can sit in a single
+                     scan split: decoding on the scan's own partitions would
+                     run on one core whatever the cluster size. The explicit
+                     count keeps AQE from coalescing this shuffle back to
+                     one task.
+4. metadata attach : extract output ⋈ broadcast(thin crawl metadata), then
+                     ``repartition("url_hash")`` with no count, which AQE
+                     coalesces by bytes — one ``documents`` file on a toy
+                     epoch, ~64 MB files at scale.
 
 At 10^10-URL scale the drained side is politeness-budget-bounded
-(n_hosts × ≤100), so the broadcasts stay small; when a deployment exceeds
-broadcast comfort (EngineConfig.broadcast_threshold_rows), the engine passes
+(n_hosts × ≤100), so the broadcasts and the hit-row shuffles stay small;
+when a deployment exceeds broadcast comfort
+(EngineConfig.broadcast_threshold_rows), the engine passes
 ``hint_broadcast=False`` and steps 2/4 degrade to thin-key shuffles with AQE
-choosing the strategy — the payload-stationarity property is what matters
-(a naive drained ⋈ web join shuffles the store's binary columns and turns
-the epoch disk-bound; measured 2.3× slower at 32 cores on the scale bench).
+choosing the strategy — the payload-stationarity of the STORE is what
+matters (a naive drained ⋈ web join shuffles the store's binary columns and
+turns the epoch disk-bound; measured 2.3× slower at 32 cores on the scale
+bench).
 
 Status codes are pure column expressions (epoch-dependent for flaky rows);
 dead-letter lanes (408/429/460/5xx) stay in the request log and are re-drained
@@ -135,8 +147,9 @@ def extract_documents(
     fetched: DataFrame, web: DataFrame, rules: DataFrame,
     hint_broadcast: bool = True,
 ) -> DataFrame:
-    """200-status rows → documents rows; decode+phash runs ON the content
-    store's partitions (payload-stationary, see module docstring).
+    """200-status rows → documents rows. The store is filtered in place;
+    only the epoch's hit rows shuffle, so decode+phash runs at the
+    cluster's width whatever the store's file layout (module docstring).
 
     image_id = hex(xxhash64(url)) — content-addressed, so re-fetching the same
     URL merges idempotently (reference delete-then-index dedup, SURVEY T8).
@@ -162,7 +175,10 @@ def extract_documents(
             F.coalesce("final_url", "url").alias("url"),
         )
     )
-    core = hit.mapInPandas(_extract_batches, schema=_CORE)
+    width = web.sparkSession.sparkContext.defaultParallelism
+    core = hit.repartition(width, "url_hash").mapInPandas(
+        _extract_batches, schema=_CORE
+    )
     meta = (
         ok.join(F.broadcast(rules.select("rule_id", "rulename")), "rule_id")
         .select(
@@ -190,4 +206,8 @@ def extract_documents(
         .drop("_rn", "rule_id")
     )
     cols = [f.name for f in DOCUMENTS.fields]
-    return core.join(maybe_b(meta), "url_hash").select(*cols)
+    return (
+        core.join(maybe_b(meta), "url_hash")
+        .repartition("url_hash")
+        .select(*cols)
+    )

@@ -157,3 +157,78 @@ def test_shutdown_checkpoint_loads_on_restart(spark, tmp_path, monkeypatch):
         dtype=np.int64,
     )
     assert eng2._cuckoo.might_contain(ids).all()
+
+
+def _engine_on_copy(runs, name):
+    """A fresh engine over a copy of the cuckoo crawl's store, holding the
+    sketch from the copied shard files."""
+    import shutil
+
+    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
+
+    old_eng, store = runs["cuckoo"]
+    root = Path(f"{store.root}-{name}")
+    shutil.copytree(store.root, root)
+    cfg = EngineConfig(seen_sketch="cuckoo", cuckoo_shards=4)
+    eng = CrawlEngine(
+        old_eng.spark, EpochStore(root), old_eng.web,
+        prefetch_limit=50, epoch_secs=600.0, config=cfg,
+    )
+    eng._cuckoo = CuckooShardStore(root / "_seen_sketch" / "store")
+    return eng, eng.store
+
+
+def test_shutdown_size_guard_collects_at_most_threshold_plus_one(
+    runs, monkeypatch
+):
+    """Past broadcast_threshold_rows the eviction is abandoned for a rebuild
+    — and the driver must learn that from at most threshold + 1 ids, not by
+    collecting the whole uncrawled set first."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    eng, store = _engine_on_copy(runs, "guard")
+    spark = eng.spark
+    thr = 3
+    # the toy crawl drains its whole frontier: add never-requested rows
+    frontier = store.read("frontier", spark).drop("_epoch", "_deleted")
+    extra = frontier.limit(3 * thr).withColumn(
+        "url_id", F.xxhash64("url_id", F.lit("never-requested"))
+    )
+    store.merge("frontier", extra, store.latest("frontier") + 1, keys=["url_id"])
+    eng.config = dataclasses.replace(eng.config, broadcast_threshold_rows=thr)
+
+    seen = []
+    cls = type(frontier)  # the concrete DataFrame class (classic vs connect)
+    for name in ("collect", "toArrow", "toPandas"):
+        orig = getattr(cls, name)
+
+        def spy(self, _orig=orig):
+            out = _orig(self)
+            if self.columns == ["url_id"]:
+                seen.append(len(out))
+            return out
+
+        monkeypatch.setattr(cls, name, spy)
+    eng.shutdown_compact()
+    assert seen and max(seen) <= thr + 1, seen
+    assert eng._cuckoo is None  # dropped; the next epoch rebuilds
+
+
+def test_crash_mid_eviction_leaves_no_loadable_checkpoint(runs):
+    """A crash inside the in-place eviction leaves some shards evicted while
+    the frontier still holds those ids. A checkpoint stamped with the
+    current frontier head would then load as a sketch with false
+    negatives — so the stamp must be cleared before any shard changes."""
+    eng, store = _engine_on_copy(runs, "crash")
+    eng.save_sketch()  # a checkpoint that matches the frontier head
+    assert eng._load_sketch() is not None
+
+    def crash(hashes):
+        raise RuntimeError("simulated crash during eviction")
+
+    eng._cuckoo.delete_many = crash
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        eng.shutdown_compact()
+    assert eng._load_sketch() is None

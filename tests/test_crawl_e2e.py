@@ -117,6 +117,29 @@ def test_image_invariants_vs_web(world):
         assert r.phash == imaging.phash64(got)
 
 
+# (rows, sha256 of the sorted (image_id, phash, caption, url) rows) of the
+# 4-epoch toy crawl's documents table. How the extract stage partitions and
+# shuffles its rows must never change what it extracts; only a change to
+# the extraction itself may move these numbers.
+TOY_DOCUMENTS = (
+    119, "5ae39779a1b96b8fed47cce8f3b4f00dd5a1fec70a6fd698ea96e228075cbe0a"
+)
+
+
+def test_documents_match_pinned_fingerprint(world):
+    import hashlib
+
+    spark = world["eng"].spark
+    rows = sorted(
+        tuple(r)
+        for r in world["store"].read("documents", spark)
+        .select("image_id", "phash", "caption", "url")
+        .collect()
+    )
+    digest = hashlib.sha256(repr(rows).encode()).hexdigest()
+    assert (len(rows), digest) == TOY_DOCUMENTS
+
+
 def test_png_lane_flows_end_to_end(world):
     """The compressed-PNG lane (half the .html rule slice) must land real
     png documents whose decoded pixels equal the origin's exactly — the

@@ -286,3 +286,23 @@ def test_shard_store_probe_plan_shape(spark, tmp_path):
     assert "pmod" in plan and "Exchange" in plan, plan[:500]
     assert plan.count("MapInPandas") == 1, plan[:500]
     assert "BatchEvalPython" not in plan  # no per-row Python anywhere
+
+
+def test_shard_store_fresh_shard_sized_at_build_load(tmp_path, spark):
+    """A shard that add_many creates sizes at the store's BUILD load, not
+    the 0.84 default: at the engine's 0.21 a fresh shard must take a second
+    delta as large as its first. At 0.84 the pair (2 200 keys) overflows
+    the 2 048 slots the first delta sized it at."""
+    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
+
+    keys = _keys(4000, 37)
+    keys = keys[np.mod(keys, 4) == 0]  # build fills shard 0 only
+    df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
+    CuckooShardStore.build(df, tmp_path / "store", n_shards=4, load=0.21)
+    assert not (tmp_path / "store" / "shard_00001.npy").exists()
+    delta = np.arange(1, 1 + 4 * 2200, 4, dtype=np.int64) + 2**40
+    first, second = delta[:1100], delta[1100:]
+    st = CuckooShardStore(tmp_path / "store")  # the load survives a reopen
+    st.add_many(first)
+    st.add_many(second)
+    assert st.might_contain(delta).all()

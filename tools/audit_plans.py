@@ -12,8 +12,14 @@ plan regression (a lost broadcast hint, a filter that stopped pushing, a
 Python stage sneaking into a JVM lane) shows up as a diff of this table
 rather than a benchmark surprise two rounds later.
 
+``--engine`` audits the crawl engine's extract stage instead: it builds the
+toy simulated web (10 days), plans ``extract_documents`` over one drained
+batch and prints the same feature row. A change that moves the decode back
+onto the content store's scan partitions shows up as a diff of that row.
+
 Usage:
     python tools/audit_plans.py [query ...]       # default: all queries
+    python tools/audit_plans.py --engine
     SPARK_GRAFT_SF_DIR=... python tools/audit_plans.py
 """
 
@@ -53,12 +59,83 @@ def features(plan: str) -> dict:
     }
 
 
+def executed_plan(df) -> str:
+    # collect() executes the df's OWN QueryExecution so AQE's FINAL
+    # physical plan — runtime join choices + codegen spans — is what gets
+    # audited, not the pre-execution sketch (a count() or a noop write each
+    # build a separate QueryExecution and leave this one unexecuted).
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def row(name: str, f: dict) -> str:
+    return (
+        f"| {name} | {f['exchange']} | {f['bhj']} | {f['smj']} | {f['py']} "
+        f"| {f['scans']} ({f['pushed']}) | {f['wscg']} |"
+    )
+
+
+HEADER = """| query | exchanges | bcast join | smj | py stages | scans (pushed) | wscg |
+|---|---|---|---|---|---|---|"""
+
+
+def engine_extract(spark, root: str):
+    """``extract_documents`` over one drained batch of the toy simulated
+    web: every candidate URL of a 10-day calendar, fetched at epoch 2."""
+    from datetime import date, datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    from europarl_crawler_spark.functions.rules import rules_df
+    from europarl_crawler_spark.plans.fetch import extract_documents, simulate_requests
+    from europarl_crawler_spark.sources.synthetic import (
+        candidate_urls,
+        session_days_df,
+        simulated_web,
+    )
+
+    days = session_days_df(spark, start=date(2019, 7, 2), n_days=10)
+    simulated_web(spark, days).write.mode("overwrite").parquet(root)
+    web = spark.read.parquet(root)
+    drained = candidate_urls(spark, days).select(
+        F.xxhash64("rule_id", "url").alias("url_id"),
+        "rule_id", "dates", "url", "url_hash", "host_hash",
+    )
+    now = datetime(2021, 1, 1, tzinfo=timezone.utc)
+    fetched = simulate_requests(drained, web, 2, now)
+    return extract_documents(fetched, web, rules_df(spark))
+
+
+def engine_main(spark) -> None:
+    import tempfile
+
+    print("""# Plan-shape audit: the crawl engine's extract stage (AQE final plan)
+
+Generated by `python tools/audit_plans.py --engine`. Exchanges include the
+broadcast exchanges of the dimension joins. Two of them move the epoch's
+hit rows: the decode-balance repartition under the py stage
+(`hashpartitioning(url_hash, defaultParallelism)`, not coalesced by AQE)
+and the byte-sized `documents` repartition. The store scan feeds the
+left-semi filter with no exchange between them, so the store's payloads
+never shuffle. `tests/test_extract_balance.py` pins both properties.
+""")
+    print(HEADER)
+    with tempfile.TemporaryDirectory() as root:
+        plan = executed_plan(engine_extract(spark, root + "/web"))
+    print(row("extract_documents", features(plan)))
+
+
 def main() -> None:
     from europarl_crawler_spark import get_spark
-    import __spark_entry__ as entrymod
 
     spark = get_spark("audit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
+    if sys.argv[1:] == ["--engine"]:
+        engine_main(spark)
+        return
+
+    import __spark_entry__ as entrymod
+
     qs = entrymod.queries()
     names = sys.argv[1:] or list(qs)
 
@@ -92,26 +169,15 @@ Generated by `python tools/audit_plans.py`. How to read it:
 - `dedup_groups` / `dedup_image_groups` audit the post-checkpoint result
   frame (the iterations' lineage is cut by design), hence 0 exchanges.
 
-| query | exchanges | bcast join | smj | py stages | scans (pushed) | wscg |
-|---|---|---|---|---|---|---|""")
+{HEADER}""")
     for name in names:
         try:
-            df = qs[name](spark, SF_DIR)
-            # collect() executes the df's OWN QueryExecution so AQE's FINAL
-            # physical plan — runtime join choices + codegen spans — is what
-            # gets audited, not the pre-execution sketch (a count() or a
-            # noop write each build a separate QueryExecution and leave this
-            # one unexecuted). sf0.01 result sets are small.
-            df.collect()
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            f = features(plan)
+            # sf0.01 result sets are small enough to collect
+            f = features(executed_plan(qs[name](spark, SF_DIR)))
         except Exception as e:  # keep auditing the rest
             print(f"| {name} | ERROR: {type(e).__name__}: {e} |")
             continue
-        print(
-            f"| {name} | {f['exchange']} | {f['bhj']} | {f['smj']} | {f['py']} "
-            f"| {f['scans']} ({f['pushed']}) | {f['wscg']} |"
-        )
+        print(row(name, f))
 
     if not sys.argv[1:]:  # full audit only: append the candidate-fraction table
         candidate_fractions(spark)
