@@ -1275,10 +1275,7 @@ def q_t6_windowed_streaming(spark, sf_dir):
     src = os.path.join(root, "src")
     _t(spark, sf_dir, "events").repartition(4).write.parquet(src)
     return drain_windowed_counts(
-        spark,
-        src,
-        checkpoint=os.path.join(root, "ckpt"),
-        name="winstream_" + os.path.basename(root).replace("-", "_"),
+        spark, src, checkpoint=os.path.join(root, "ckpt")
     )
 
 

@@ -5,6 +5,13 @@ The reference reads an INI file with DEFAULT-section inheritance
 worker sections (settings.ini:6,16,19,30,33,55,63,78). Here the same knobs
 are one dataclass, loadable from the same INI shape, consumed by
 CrawlEngine / bench / jobs.
+
+The URL-seen sketch has no knobs: the engine always maintains its cuckoo
+shard store once a frontier exists (falling back to the exact anti-join
+until then) and derives the shard count from the frontier's manifest row
+count (``functions.cuckoo.shard_count_policy``). Keys that earlier versions
+read — ``Salts``, ``BloomFpp``, ``UseBloom``, ``SeenSketch``,
+``CuckooShards`` — are ignored, so old settings files still load.
 """
 
 from __future__ import annotations
@@ -30,19 +37,6 @@ class EngineConfig:
     probe_offset_days: int = 30
     # O8 spaced-refresh recrawl lane (reference downloader.py:39-68)
     recrawl_enabled: bool = True
-    # physical knobs (ours): frontier salt shards, bloom target fpp
-    n_salts: int = 16
-    bloom_fpp: float = 0.01
-    use_bloom: bool = True
-    # seen-set pre-filter backend (north_rule "bloom/cuckoo URL-seen"):
-    # "bloom"  — rebuilt from the frontier every epoch (O(frontier)/epoch,
-    #            OR-merged per partition; insert-only)
-    # "cuckoo" — built once, then maintained INCREMENTALLY: O(delta)/epoch
-    #            adds, in-place deletes at shutdown_compact (D4) — the
-    #            deletable sketch the reference's row-delete semantics map to
-    # use_bloom=False disables the pre-filter entirely (exact anti-join only)
-    seen_sketch: str = "bloom"
-    cuckoo_shards: int = 16
     # drop the F.broadcast hints on the hot-path dimension joins (budgets,
     # ok-url keys, crawl metadata) when their estimated row count exceeds
     # this — AQE then picks the join strategy, so a 10^8-host deployment
@@ -73,11 +67,6 @@ class EngineConfig:
             epoch_secs=get("Engine", "EpochSecs", 300.0),
             probe_offset_days=get("SessionDayChecker", "ProbeOffsetDays", 30),
             recrawl_enabled=get("Engine", "RecrawlEnabled", True),
-            n_salts=get("Engine", "Salts", 16),
-            bloom_fpp=get("Engine", "BloomFpp", 0.01),
-            use_bloom=get("Engine", "UseBloom", True),
-            seen_sketch=get("Engine", "SeenSketch", "bloom"),
-            cuckoo_shards=get("Engine", "CuckooShards", 16),
             broadcast_threshold_rows=get(
                 "Engine", "BroadcastThresholdRows", 4_000_000
             ),

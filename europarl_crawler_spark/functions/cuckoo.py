@@ -1,39 +1,68 @@
-"""Sharded cuckoo-filter URL-seen set — the deletable sibling of the Bloom path.
+"""Sharded cuckoo-filter URL-seen sketch — the crawl engine's one seen sketch.
 
 north_rule: "sharded bloom-filter/cuckoo URL-seen set keyed by
-canonicalized+hashed URLs". ``functions/seen.py`` implements the Bloom half;
-this module implements the cuckoo half (Fan, Andersen, Kaminsky, Mitzenmacher:
-"Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014 — public paper).
-The trade the crawler cares about is DELETION: the reference evicts a URL from
-its seen set by deleting the row under the UNIQUE(rule_id, url) constraint
-(reference: europarl/db/url.py:45, delete paths europarl/db/url.py:117-129);
-a Bloom filter cannot forget, so a recrawl-eviction forces a full sketch
-rebuild, while a cuckoo filter removes the fingerprint in place and the next
-frontier epoch reuses the same broadcast artifact.
+canonicalized+hashed URLs". This module is the sketch (Fan, Andersen,
+Kaminsky, Mitzenmacher: "Cuckoo Filter: Practically Better Than Bloom",
+CoNEXT 2014 — public paper); ``functions/seen.py`` is the exact anti-join it
+pre-filters. A cuckoo filter is chosen for DELETION: the reference evicts a URL
+from its seen set by deleting the row under the UNIQUE(rule_id, url)
+constraint (reference: europarl/db/url.py:45, delete paths
+europarl/db/url.py:117-129). A cuckoo filter removes the fingerprint in place,
+so recrawl eviction and shutdown compaction never force a rebuild, and the
+per-epoch maintenance is O(new urls), not O(frontier).
 
-Like the Bloom path, the filter is strictly a *pre-filter* for the exact
-anti-join (SURVEY §4.2): false positives only cost a recheck against the seen
-table; false negatives are impossible for inserted keys, so correctness never
-depends on the sketch. FPR is bounded by ~2·BUCKET_SLOTS/2^FP_BITS
-(= 8/65536 ≈ 0.012% at the defaults here).
+The filter is strictly a *pre-filter* for the exact anti-join (SURVEY §4.2):
+false positives only cost a recheck against the seen table; false negatives
+are impossible for inserted keys, so correctness never depends on the sketch.
+FPR is bounded by ~2·BUCKET_SLOTS/2^FP_BITS (= 8/65536 ≈ 0.012% at the
+defaults here).
 
 Scale design: one filter per *shard*, shard = pmod(url_hash, n_shards) — the
 same arithmetic in Catalyst (`F.pmod`) and numpy (`np.mod`), so the build can
 hash-partition rows by shard Spark-side (each shard's rows land in exactly one
-partition; cuckoo tables, unlike Bloom bitsets, cannot be OR-merged) while the
-probe routes vectorized numpy lookups shard-locally. At 10^10 URLs each shard
-stays a few hundred MB and shards can be built/rebuilt/persisted independently
-alongside the epoch manifest.
+partition; cuckoo tables cannot be merged) while the probe routes vectorized
+numpy lookups shard-locally. :class:`CuckooShardStore` keeps each shard's
+table in its own file; :func:`shard_count_policy` sizes the shard count from
+the frontier's row count.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .seen import _mix
+_MASK = (1 << 64) - 1
+# splitmix64 finalizer — cheap independent rehash of the already-uniform
+# xxhash64 url_hash for the fingerprint, bucket and kick positions
+_C1, _C2 = 0xBF58476D1CE4E5B9, 0x94D049BB133111EB
+
+
+def _mix(h: np.ndarray, seed: int) -> np.ndarray:
+    z = (h + np.uint64(seed * 0x9E3779B97F4A7C15 & _MASK)) & np.uint64(_MASK)
+    z = ((z ^ (z >> np.uint64(30))) * np.uint64(_C1)) & np.uint64(_MASK)
+    z = ((z ^ (z >> np.uint64(27))) * np.uint64(_C2)) & np.uint64(_MASK)
+    return z ^ (z >> np.uint64(31))
+
+
+# keys per shard the engine sizes for: at its build load 0.21 a shard of
+# 2^21 keys needs 2^21 / (4 · 0.21) ≈ 2.5M buckets, rounded up to 2^22 —
+# a 32 MB uint16 table, the unit one probe task loads
+SHARD_KEYS = 1 << 21
+
+
+def shard_count_policy(rows: int) -> int:
+    """Frontier-size policy for the seen sketch's shard count:
+    ``max(1, ceil(rows / 2^21))`` — one shard per ~2M frontier rows, so
+    per-task probe memory stays ~32 MB whatever the frontier size. The
+    engine recomputes it on every (re)build from the frontier's manifest
+    row count, so a frontier that outgrew its shards re-shards itself at
+    the rebuild that follows an overflow."""
+    return max(1, math.ceil(rows / SHARD_KEYS))
+
 
 _FP_SEED = 0xF1  # fingerprint rehash seed (independent of index seed)
 _IX_SEED = 0x11  # primary-bucket rehash seed
@@ -200,144 +229,6 @@ class CuckooFilter:
                     out[n] = True
                     break
         return out
-
-
-class ShardedCuckoo:
-    """n_shards independent cuckoo filters routed by pmod(url_hash, n_shards).
-
-    The shard function is deliberately the one expression both engines share:
-    Catalyst `F.pmod(col, n)` == numpy `np.mod(h, n)` for positive n. Shards
-    build in separate Spark partitions (cuckoo tables cannot be merged the way
-    Bloom bitsets OR together) and probe/delete route vectorized per shard.
-    """
-
-    def __init__(self, n_shards: int, shards: dict[int, CuckooFilter]):
-        self.n_shards = n_shards
-        self.shards = shards
-
-    @property
-    def size(self) -> int:
-        return sum(f.size for f in self.shards.values())
-
-    def _route(self, hashes: np.ndarray) -> np.ndarray:
-        return np.mod(np.asarray(hashes, dtype=np.int64), self.n_shards)
-
-    def might_contain(self, hashes: np.ndarray) -> np.ndarray:
-        h = np.asarray(hashes, dtype=np.int64)
-        out = np.zeros(len(h), dtype=bool)
-        s = self._route(h)
-        for sid, filt in self.shards.items():
-            m = s == sid
-            if m.any():
-                out[m] = filt.might_contain(h[m])
-        return out
-
-    def delete_many(self, hashes: np.ndarray) -> np.ndarray:
-        h = np.asarray(hashes, dtype=np.int64)
-        out = np.zeros(len(h), dtype=bool)
-        s = self._route(h)
-        for sid, filt in self.shards.items():
-            m = s == sid
-            if m.any():
-                out[m] = filt.delete_many(h[m])
-        return out
-
-    def add_many(self, hashes: np.ndarray) -> None:
-        """Driver-side incremental insert (epoch deltas); build_cuckoo for bulk."""
-        h = np.asarray(hashes, dtype=np.int64)
-        s = self._route(h)
-        for sid in np.unique(s):
-            filt = self.shards.get(int(sid))
-            if filt is None:
-                filt = CuckooFilter.sized(max(len(h), 64))
-                self.shards[int(sid)] = filt
-            filt.add_many(h[s == sid])
-
-
-def save_sharded(sc: ShardedCuckoo, path) -> None:
-    """Persist a sharded filter as one compressed npz (per-shard tables +
-    shard count), published atomically via rename — the epoch-stamped
-    checkpoint artifact the crawl engine writes beside the store so a
-    restart skips the full-frontier rebuild."""
-    import os
-
-    tmp = str(path) + ".tmp"
-    arrs = {f"shard_{sid}": f.table for sid, f in sc.shards.items()}
-    with open(tmp, "wb") as fh:
-        np.savez_compressed(
-            fh, n_shards=np.array([sc.n_shards], dtype=np.int64), **arrs
-        )
-    os.replace(tmp, path)
-
-
-def load_sharded(path) -> ShardedCuckoo:
-    with np.load(path) as z:
-        n_shards = int(z["n_shards"][0])
-        shards = {
-            int(k.split("_", 1)[1]): CuckooFilter(
-                z[k].shape[0], z[k].astype(np.uint16)
-            )
-            for k in z.files
-            if k.startswith("shard_")
-        }
-    return ShardedCuckoo(n_shards, shards)
-
-
-def build_cuckoo(
-    seen: DataFrame,
-    hash_col: str = "url_hash",
-    n_shards: int = 16,
-    load: float = 0.84,
-) -> ShardedCuckoo:
-    """Distributed build: repartition by shard, one filter per shard.
-
-    `repartition(p, pmod(hash, n_shards))` sends every row of a shard to one
-    partition (a partition may own several whole shards); each partition then
-    bulk-builds its shards with the vectorized placement and ships (shard_id,
-    table) to the driver. Unlike build_bloom there is no OR-reduce — cuckoo
-    tables are positional — so the shard count, not the partition count, is
-    the parallelism unit.
-    """
-    p = max(1, min(n_shards, 64))
-    rows = seen.select(
-        F.col(hash_col).alias("h"),
-        F.pmod(F.col(hash_col), F.lit(n_shards)).alias("s"),
-    ).repartition(p, "s")
-
-    def part(it):
-        import pandas as pd  # noqa: F401  (Arrow batches)
-
-        chunks: dict[int, list[np.ndarray]] = {}
-        for pdf in it:
-            sh = pdf["s"].to_numpy(dtype=np.int64)
-            hv = pdf["h"].to_numpy(dtype=np.int64)
-            for sid in np.unique(sh):
-                chunks.setdefault(int(sid), []).append(hv[sh == sid])
-        for sid, parts_ in chunks.items():
-            vals = np.concatenate(parts_)
-            filt = CuckooFilter.sized(len(vals), load=load)
-            filt.add_many(vals)
-            yield pd.DataFrame(
-                {
-                    "shard": [sid],
-                    "n_buckets": [filt.n_buckets],
-                    "table": [filt.table.tobytes()],
-                }
-            )
-
-    built = rows.mapInPandas(
-        part, schema="shard int, n_buckets long, table binary"
-    ).collect()
-    shards = {
-        int(r["shard"]): CuckooFilter(
-            int(r["n_buckets"]),
-            np.frombuffer(r["table"], dtype=np.uint16)
-            .reshape(int(r["n_buckets"]), BUCKET_SLOTS)
-            .copy(),
-        )
-        for r in built
-    }
-    return ShardedCuckoo(n_shards, shards)
 
 
 # ---------------------------------------------------------------------------
@@ -587,8 +478,8 @@ class CuckooShardStore:
 
     def add_many(self, hashes) -> None:
         """Insert an epoch's delta: one touched shard resident at a time.
-        Raises RuntimeError on shard overflow (caller rebuilds, same
-        contract as ShardedCuckoo)."""
+        Raises RuntimeError on shard overflow (the caller drops the
+        sketch and rebuilds)."""
         for sid, vals in self._touched(hashes).items():
             filt = self._filter(sid)
             if filt.n_buckets == 64 and not self._shard_path(sid).exists():

@@ -1,131 +1,48 @@
-"""Sharded URL-seen set: exact anti-join + Bloom pre-filter.
+"""URL-seen set: exact anti-join behind an optional cuckoo shard-store pre-filter.
 
 north_rule: "bloom/cuckoo URL-seen set keyed by canonicalized+hashed URLs".
 The reference's seen set is the UNIQUE(rule_id, url) constraint on the urls
 table (reference: europarl/db/url.py:45); here membership is EXACT via a
-left_anti join against the frontier table on ``url_hash`` — the Bloom filter
-is strictly a *pre-filter* that lets most provably-new candidates skip the
+left_anti join against the frontier table on ``url_hash`` — the sketch
+(:class:`~europarl_crawler_spark.functions.cuckoo.CuckooShardStore`) is
+strictly a *pre-filter* that lets most provably-new candidates skip the
 anti-join shuffle. False positives only cost a recheck; false negatives are
 impossible, so correctness never depends on the sketch (SURVEY §4.2).
-
-Two physical forms: ``build_bloom`` (per-partition numpy bitsets OR-reduced
-driver-side via treeReduce, probed through a broadcast pandas UDF — the
-small-sketch path), and ``BloomShardStore`` (r5 — per-shard bitset FILES
-written by the executors that built them, probed shard-locally after a
-pmod repartition; no process ever holds more than one shard, the form that
-survives a 10^10-URL frontier). The crawl engine's bloom mode uses the
-shard store; both are strictly pre-filters for the exact anti-join.
+Without a sketch (the crawl engine's first epoch, or after an overflow until
+the rebuild) the gate is the plain anti-join.
 """
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-_MASK = (1 << 64) - 1
-# splitmix64 finalizer — cheap independent rehash of the already-uniform
-# xxhash64 url_hash for the k probe positions
-_C1, _C2 = 0xBF58476D1CE4E5B9, 0x94D049BB133111EB
-
-
-def _mix(h: np.ndarray, seed: int) -> np.ndarray:
-    z = (h + np.uint64(seed * 0x9E3779B97F4A7C15 & _MASK)) & np.uint64(_MASK)
-    z = ((z ^ (z >> np.uint64(30))) * np.uint64(_C1)) & np.uint64(_MASK)
-    z = ((z ^ (z >> np.uint64(27))) * np.uint64(_C2)) & np.uint64(_MASK)
-    return z ^ (z >> np.uint64(31))
-
-
-class BloomFilter:
-    """Fixed-size bitset Bloom filter over int64 keys."""
-
-    def __init__(self, n_bits: int, k: int, bits: np.ndarray | None = None):
-        self.n_bits = n_bits
-        self.k = k
-        self.bits = bits if bits is not None else np.zeros(n_bits // 8 + 1, dtype=np.uint8)
-
-    @classmethod
-    def sized(cls, expected: int, fpp: float = 0.01) -> "BloomFilter":
-        n_bits = max(64, int(-expected * math.log(fpp) / (math.log(2) ** 2)))
-        k = max(1, round(n_bits / max(expected, 1) * math.log(2)))
-        return cls(n_bits, min(k, 8))
-
-    def _positions(self, hashes: np.ndarray) -> list[np.ndarray]:
-        h = hashes.astype(np.int64).view(np.uint64)
-        return [(_mix(h, i) % np.uint64(self.n_bits)).astype(np.int64) for i in range(self.k)]
-
-    def add_many(self, hashes: np.ndarray) -> None:
-        for pos in self._positions(hashes):
-            np.bitwise_or.at(self.bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-
-    def might_contain(self, hashes: np.ndarray) -> np.ndarray:
-        out = np.ones(len(hashes), dtype=bool)
-        for pos in self._positions(hashes):
-            out &= (self.bits[pos >> 3] >> (pos & 7).astype(np.uint8) & 1).astype(bool)
-        return out
-
-    def union(self, other: "BloomFilter") -> "BloomFilter":
-        assert (self.n_bits, self.k) == (other.n_bits, other.k)
-        return BloomFilter(self.n_bits, self.k, self.bits | other.bits)
-
-
-def build_bloom(seen: DataFrame, hash_col: str = "url_hash", expected: int | None = None, fpp: float = 0.01) -> BloomFilter:
-    """Distributed build: per-partition bitsets, OR-combined on the driver."""
-    if expected is None:
-        expected = max(seen.count(), 1)
-    proto = BloomFilter.sized(expected, fpp)
-    n_bits, k = proto.n_bits, proto.k
-
-    def part(rows):
-        bf = BloomFilter(n_bits, k)
-        vals = np.fromiter((r[0] for r in rows), dtype=np.int64)
-        if len(vals):
-            bf.add_many(vals)
-        yield bf.bits
-
-    bits = seen.select(hash_col).rdd.mapPartitions(part).treeReduce(np.bitwise_or)
-    return BloomFilter(n_bits, k, bits)
+if TYPE_CHECKING:
+    from .cuckoo import CuckooShardStore
 
 
 def anti_join_seen(
     candidates: DataFrame,
     seen: DataFrame,
-    sketch: "BloomFilter | object | None" = None,
+    sketch: "CuckooShardStore | None" = None,
     hash_col: str = "url_hash",
 ) -> DataFrame:
     """candidates not in seen — exact; the sketch only short-circuits the shuffle.
 
-    ``sketch`` is anything with a vectorized ``might_contain(np.int64[]) ->
-    bool[]`` — a :class:`BloomFilter` (insert-only, OR-mergeable) or a
-    :class:`~europarl_crawler_spark.functions.cuckoo.ShardedCuckoo`
-    (deletable, so recrawl evictions don't force a rebuild). Provably-new
-    rows (might_contain == false) bypass the anti-join entirely; only the
-    maybe-seen slice shuffles. At a 10^10-row seen set with mostly-fresh
-    candidates this cuts the anti-join input by ~(1 - fpp) and keeps the big
-    shuffle proportional to the *revisit* rate, not the candidate rate.
+    The store's ``tag_maybe`` routes candidates to their shard's partition
+    and each task loads ONLY its shards from files — no whole-filter
+    broadcast, per-task memory O(frontier / n_shards). Provably-new rows
+    (``_maybe`` false) bypass the anti-join entirely; only the maybe-seen
+    slice shuffles. At a 10^10-row seen set with mostly-fresh candidates
+    this cuts the anti-join input by ~(1 - fpp) and keeps the big shuffle
+    proportional to the *revisit* rate, not the candidate rate.
     """
     if sketch is None:
         return candidates.join(seen.select(hash_col), hash_col, "left_anti")
 
-    if hasattr(sketch, "tag_maybe"):
-        # executor-resident shard store (CuckooShardStore / BloomShardStore):
-        # candidates route to their shard's partition and each task loads
-        # ONLY its shards from files — no whole-filter broadcast, per-task
-        # memory O(frontier / n_shards). The scale path at 10^10 URLs.
-        tagged = sketch.tag_maybe(candidates, hash_col)
-    else:
-        obj = sketch  # captured whole (numpy-backed; the small-sketch path)
-
-        @pandas_udf("boolean")
-        def maybe_seen(h: pd.Series) -> pd.Series:
-            return pd.Series(obj.might_contain(h.to_numpy(dtype=np.int64)))
-
-        tagged = candidates.withColumn("_maybe", maybe_seen(F.col(hash_col)))
+    tagged = sketch.tag_maybe(candidates, hash_col)
     fresh = tagged.filter(~F.col("_maybe")).drop("_maybe")
     rechecked = (
         tagged.filter(F.col("_maybe"))
@@ -133,195 +50,3 @@ def anti_join_seen(
         .join(seen.select(hash_col), hash_col, "left_anti")
     )
     return fresh.unionByName(rechecked)
-
-
-class BloomShardStore:
-    """Executor-resident sharded Bloom filter: one uint8 bitset file per
-    shard (``root/shard_NNNNN.npy`` + ``root/meta.json``) — the insert-only
-    twin of :class:`~europarl_crawler_spark.functions.cuckoo.
-    CuckooShardStore`, closing the same 10^10-URL residency hole for the
-    bloom backend (a whole-frontier Bloom at 1% fpp is ~12 GB; the r4 path
-    built it on the driver and broadcast it to every probe task).
-
-    Same physical contract as the cuckoo store: probes repartition by
-    ``pmod(url_hash, n_shards)`` and each task loads ONLY its shards
-    (shared mtime-keyed LRU); builds write shard files from the executors
-    that built them (tmp + atomic rename, idempotent under task retry);
-    incremental adds OR bits into one touched shard at a time. No delete —
-    Bloom bits can't be removed (the deletable backend is the cuckoo
-    store). Strictly a pre-filter: any lost/corrupt shard only costs extra
-    maybe-seen rechecks in the exact anti-join.
-    """
-
-    def __init__(self, root):
-        import json
-        from pathlib import Path
-
-        self.root = Path(root)
-        with open(self.root / "meta.json") as fh:
-            meta = json.load(fh)
-        self.n_shards = int(meta["n_shards"])
-        self.n_bits = int(meta["n_bits"])
-        self.k = int(meta["k"])
-        self.stamp = meta.get("stamp")
-
-    def _shard_path(self, sid: int):
-        return self.root / f"shard_{sid:05d}.npy"
-
-    def set_stamp(self, stamp) -> None:
-        import json
-        import os
-
-        self.stamp = stamp
-        tmp = self.root / "meta.json.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "n_shards": self.n_shards,
-                    "n_bits": self.n_bits,
-                    "k": self.k,
-                    "stamp": stamp,
-                },
-                fh,
-            )
-        os.replace(tmp, self.root / "meta.json")
-
-    @classmethod
-    def build(
-        cls,
-        seen: DataFrame,
-        root,
-        hash_col: str = "url_hash",
-        expected: int | None = None,
-        n_shards: int = 16,
-        fpp: float = 0.01,
-    ) -> "BloomShardStore":
-        """Distributed build, executor-write: every shard's bitset is sized
-        for expected/n_shards keys and written straight to its file; only
-        per-shard stats reach the driver."""
-        import json
-        import os
-        from pathlib import Path
-
-        if expected is None:
-            expected = max(seen.count(), 1)
-        proto = BloomFilter.sized(max(expected // n_shards, 1), fpp)
-        n_bits, k = proto.n_bits, proto.k
-        rootp = Path(root)
-        rootp.mkdir(parents=True, exist_ok=True)
-        for old in rootp.glob("shard_*.npy"):
-            old.unlink()
-        root_s = str(rootp)
-
-        rows = seen.select(
-            F.col(hash_col).alias("h"),
-            F.pmod(F.col(hash_col), F.lit(n_shards)).alias("s"),
-        ).repartition(n_shards, "s")
-
-        def part(it):
-            chunks: dict[int, list[np.ndarray]] = {}
-            for pdf in it:
-                sh = pdf["s"].to_numpy(dtype=np.int64)
-                hv = pdf["h"].to_numpy(dtype=np.int64)
-                for sid in np.unique(sh):
-                    chunks.setdefault(int(sid), []).append(hv[sh == sid])
-            for sid, parts_ in chunks.items():
-                bf = BloomFilter(n_bits, k)
-                bf.add_many(np.concatenate(parts_))
-                p = os.path.join(root_s, f"shard_{sid:05d}.npy")
-                tmp = p + f".tmp-{os.getpid()}"
-                np.save(tmp, bf.bits)
-                os.replace(tmp + ".npy", p)
-                yield pd.DataFrame(
-                    {"shard": [sid], "n_keys": [sum(map(len, parts_))]}
-                )
-
-        rows.mapInPandas(part, schema="shard int, n_keys long").collect()
-        with open(rootp / "meta.json", "w") as fh:
-            json.dump(
-                {
-                    "n_shards": int(n_shards),
-                    "n_bits": int(n_bits),
-                    "k": int(k),
-                    "stamp": None,
-                },
-                fh,
-            )
-        return cls(rootp)
-
-    # -- probe ---------------------------------------------------------------
-
-    def tag_maybe(self, candidates: DataFrame, hash_col: str) -> DataFrame:
-        """candidates + boolean ``_maybe``, shard-local probe (see
-        CuckooShardStore.tag_maybe — same routing, Bloom membership)."""
-        from pyspark.sql import types as T
-
-        from .cuckoo import _load_shard_table
-
-        n_shards, n_bits, k = self.n_shards, self.n_bits, self.k
-        root_s = str(self.root)
-        out_schema = T.StructType(
-            candidates.schema.fields
-            + [T.StructField("_maybe", T.BooleanType())]
-        )
-
-        def probe(it):
-            import os
-
-            for pdf in it:
-                h = pdf[hash_col].to_numpy(dtype=np.int64)
-                maybe = np.zeros(len(h), dtype=bool)
-                s = np.mod(h, n_shards)
-                for sid in np.unique(s):
-                    p = os.path.join(root_s, f"shard_{int(sid):05d}.npy")
-                    if not os.path.exists(p):
-                        continue  # nothing inserted in this shard => all new
-                    bf = BloomFilter(n_bits, k, _load_shard_table(p))
-                    m = s == sid
-                    maybe[m] = bf.might_contain(h[m])
-                out = pdf.copy()
-                out["_maybe"] = pd.Series(maybe, index=pdf.index)
-                yield out
-
-        return (
-            candidates.repartition(
-                n_shards, F.pmod(F.col(hash_col), F.lit(n_shards))
-            ).mapInPandas(probe, schema=out_schema)
-        )
-
-    # -- driver-side (delta-bounded / tests) ---------------------------------
-
-    def add_many(self, hashes) -> None:
-        """Incremental insert: OR bits into one touched shard at a time."""
-        import os
-
-        from .cuckoo import _load_shard_table
-
-        h = np.asarray(hashes, dtype=np.int64)
-        s = np.mod(h, self.n_shards)
-        for sid in np.unique(s):
-            p = self._shard_path(int(sid))
-            bf = BloomFilter(
-                self.n_bits,
-                self.k,
-                _load_shard_table(p).copy() if p.exists() else None,
-            )
-            bf.add_many(h[s == sid])
-            tmp = str(p) + f".tmp-{os.getpid()}"
-            np.save(tmp, bf.bits)
-            os.replace(tmp + ".npy", p)
-
-    def might_contain(self, hashes) -> np.ndarray:
-        from .cuckoo import _load_shard_table
-
-        h = np.asarray(hashes, dtype=np.int64)
-        out = np.zeros(len(h), dtype=bool)
-        s = np.mod(h, self.n_shards)
-        for sid in np.unique(s):
-            p = self._shard_path(int(sid))
-            if not p.exists():
-                continue
-            bf = BloomFilter(self.n_bits, self.k, _load_shard_table(p))
-            m = s == sid
-            out[m] = bf.might_contain(h[m])
-        return out

@@ -877,9 +877,14 @@ def incremental_minhash_dedup(
     hist_sh = store.read(
         shingle_table, spark, schema="doc_id long, sh long"
     ).select("doc_id", "sh")
+    # the increment is a doc's current truth: a re-sent doc_id reads its
+    # shingles from the increment only, never history ∪ increment (which
+    # would count every shingle twice in sz and drop its Jaccard)
     sh_needed = sh_new.unionByName(
-        hist_sh.join(cand_ids, "doc_id", "left_semi")
-    )
+        hist_sh.join(cand_ids, "doc_id", "left_semi").join(
+            new_docs.select(F.col(id_col).alias("doc_id")), "doc_id", "left_anti"
+        )
+    ).distinct()
     arrs = sh_needed.groupBy("doc_id").agg(
         F.collect_list("sh").alias("shs"), F.count("*").alias("sz")
     )

@@ -35,7 +35,7 @@ registers and pytest pins its accuracy against the exact distinct count.
 Plan shape at 100 TB: one projection + one 256-key groupBy max —
 map-side combinable, registers mergeable across shards/epochs by
 element-wise max (the property that makes HLL the right sketch for a
-distributed frontier; the cuckoo/bloom seen-sketches answer membership,
+distributed frontier; the cuckoo seen-sketch answers membership,
 this answers "how many").
 
 Reference analog: the reference counts distincts exactly in Postgres

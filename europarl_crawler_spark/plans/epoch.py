@@ -26,9 +26,9 @@ from pyspark.sql import functions as F
 
 import numpy as np
 
-from ..functions.cuckoo import CuckooShardStore
+from ..functions.cuckoo import CuckooShardStore, shard_count_policy
 from ..functions.rules import rules_df
-from ..functions.seen import BloomShardStore, anti_join_seen
+from ..functions.seen import anti_join_seen
 from ..sources import schema as S
 from ..sources.epochstore import EpochStore
 from .fetch import extract_documents, requests_log, simulate_requests
@@ -74,7 +74,6 @@ class CrawlEngine:
         robots: DataFrame | None = None,
         prefetch_limit: int | None = None,
         epoch_secs: float | None = None,
-        use_bloom: bool | None = None,
         config=None,
         crawl_delays: DataFrame | None = None,
     ):
@@ -91,10 +90,9 @@ class CrawlEngine:
         self.config = cfg
         self.prefetch_limit = prefetch_limit if prefetch_limit is not None else cfg.prefetch_limit
         self.epoch_secs = epoch_secs if epoch_secs is not None else cfg.epoch_secs
-        self.use_bloom = use_bloom if use_bloom is not None else cfg.use_bloom
         self.rules = rules_df(spark)
-        # incremental cuckoo seen-sketch (config seen_sketch="cuckoo"):
-        # lives across epochs, rebuilt lazily after overflow/restart
+        # the incremental cuckoo seen-sketch: lives across epochs, rebuilt
+        # lazily after overflow/restart; None = exact anti-join only
         self._cuckoo = None
 
     # -- state ----------------------------------------------------------------
@@ -137,14 +135,16 @@ class CrawlEngine:
         )
 
     def _build_cuckoo(self, frontier: DataFrame):
-        """Load-or-(re)build the incremental seen sketch (seen_sketch=
-        "cuckoo"). A checkpoint stamped by ``save_sketch`` (with the
-        frontier commit it reflects) is loaded instead of rebuilding when
-        its stamp matches the CURRENT frontier head — at a 10^10-URL
-        frontier the rebuild is a full-table scan, the load is a meta.json
-        read. Any stamp mismatch (epochs committed since) falls back to
-        the build; the sketch sizes at load 0.21 (~4.7× headroom) so
-        per-epoch increments fit for many epochs between rebuilds.
+        """Load-or-(re)build the incremental seen sketch. A checkpoint
+        stamped by ``save_sketch`` (with the frontier commit it reflects)
+        is loaded instead of rebuilding when its stamp matches the CURRENT
+        frontier head — at a 10^10-URL frontier the rebuild is a
+        full-table scan, the load is a meta.json read. Any stamp mismatch
+        (epochs committed since) falls back to the build; the sketch sizes
+        at load 0.21 (~4.7× headroom) so per-epoch increments fit for many
+        epochs between rebuilds. The shard count comes from the
+        frontier's manifest row count (``shard_count_policy``), recomputed
+        on every build, so an overflowing frontier re-shards itself.
 
         The sketch is a :class:`~europarl_crawler_spark.functions.cuckoo.
         CuckooShardStore`: shard tables live as files under the store
@@ -155,11 +155,12 @@ class CrawlEngine:
         loaded = self._load_sketch()
         if loaded is not None:
             return loaded
+        rows = sum(m["rows"] for m in self.store.manifests("frontier"))
         return CuckooShardStore.build(
             frontier,
             self._sketch_dir() / "store",
             "url_id",
-            n_shards=self.config.cuckoo_shards,
+            n_shards=shard_count_policy(rows),
             load=0.21,
         )
 
@@ -250,30 +251,16 @@ class CrawlEngine:
         )
         new_urls = probes.unionByName(combos)
 
-        # 2. URL-seen gate on the hashed key: exact anti-join, bloom
-        #    pre-filtered (north_rule). Seen key = url_id (= rule_id × url,
-        #    the reference's UNIQUE constraint, db/url.py:45).
-        sketch = None
-        mode = self.config.seen_sketch if self.use_bloom else "none"
-        if mode == "cuckoo":
-            if self._cuckoo is None:
-                # restart path: the shutdown checkpoint's stamp can only
-                # match BEFORE this epoch's merge advances the chain head
-                self._cuckoo = self._load_sketch()
-            sketch = self._cuckoo
-        elif mode == "bloom" and self.store.latest("frontier") is not None:
-            expected = sum(m["rows"] for m in self.store.manifests("frontier")) or 1
-            # executor-resident shard store (r5): the per-epoch rebuild is
-            # unchanged, but the bitsets live as files and probes load only
-            # their shard — no whole-filter broadcast (see BloomShardStore)
-            sketch = BloomShardStore.build(
-                frontier,
-                self._sketch_dir() / "bloom",
-                "url_id",
-                expected=expected,
-                n_shards=self.config.cuckoo_shards,
-            )
-        fresh = anti_join_seen(new_urls, frontier, sketch, hash_col="url_id")
+        # 2. URL-seen gate on the hashed key: exact anti-join, pre-filtered
+        #    by the cuckoo shard store (north_rule). Seen key = url_id
+        #    (= rule_id × url, the reference's UNIQUE constraint,
+        #    db/url.py:45). No sketch yet (epoch 1, or an overflow this
+        #    run) means the plain anti-join.
+        if self._cuckoo is None:
+            # restart path: the shutdown checkpoint's stamp can only
+            # match BEFORE this epoch's merge advances the chain head
+            self._cuckoo = self._load_sketch()
+        fresh = anti_join_seen(new_urls, frontier, self._cuckoo, hash_col="url_id")
         if self._cuckoo is not None:
             fresh = fresh.persist()
         # the frontier keeps its OWN commit chain (like documents/url_state):
@@ -284,20 +271,16 @@ class CrawlEngine:
         if self._cuckoo is not None:
             # incremental sketch maintenance: only THIS epoch's genuinely-new
             # url_ids (post exact anti-join) cross to the driver — O(delta),
-            # bounded by the prefetch limits, vs the bloom path's O(frontier)
-            # rebuild per epoch. Overflow (headroom exhausted) drops the
-            # sketch; it is rebuilt below from the merged frontier.
+            # bounded by the prefetch limits, never an O(frontier) rebuild.
+            # Overflow (headroom exhausted) drops the sketch; it is rebuilt
+            # below from the merged frontier.
             try:
                 self._cuckoo.add_many(np.unique(_url_ids(fresh)))
             except RuntimeError:
                 self._cuckoo = None
             fresh.unpersist()
         frontier = self._read("frontier", S.FRONTIER)
-        if (
-            mode == "cuckoo"
-            and self._cuckoo is None
-            and self.store.latest("frontier") is not None
-        ):
+        if self._cuckoo is None and self.store.latest("frontier") is not None:
             # covers first build (epoch 1), rebuild-after-overflow, AND
             # restart into a steady-state epoch that merged zero new urls
             self._cuckoo = self._build_cuckoo(frontier)

@@ -22,6 +22,8 @@ writes, so batch and streaming share one storage format.
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -339,7 +341,6 @@ def drain_windowed_counts(
     spark,
     src_dir: str,
     checkpoint: str,
-    name: str,
     watermark: str = "40 days",
     schema: str = (
         "event_id long, ts timestamp, user_id long, event_type string, "
@@ -359,7 +360,13 @@ def drain_windowed_counts(
     values, matching what an idempotent-upsert sink would hold.) The
     bounded replay passes a wider-than-corpus watermark so eviction timing
     cannot drop a late file; production uses a real allowance and accepts
-    the documented drop-after-watermark contract."""
+    the documented drop-after-watermark contract.
+
+    Emissions accumulate in ``<checkpoint>_emissions``. A checkpoint with
+    no committed batch starts the query from scratch, so any emissions
+    left there by an earlier run (a deleted checkpoint) are cleared first —
+    otherwise they would mix with the fresh ones and, at higher batch ids,
+    win the last-emission merge."""
     cents = F.round(F.col("value") * F.lit(100)).cast("long")
     sdf = (
         spark.readStream.schema(schema)
@@ -372,6 +379,9 @@ def drain_windowed_counts(
         .agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("cents"))
     )
     emissions_dir = checkpoint.rstrip("/") + "_emissions"
+    commits = os.path.join(checkpoint, "commits")
+    if not os.path.isdir(commits) or not any(map(str.isdigit, os.listdir(commits))):
+        shutil.rmtree(emissions_dir, ignore_errors=True)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         (

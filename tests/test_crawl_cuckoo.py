@@ -1,10 +1,11 @@
-"""Crawl equivalence under the cuckoo seen-sketch backend.
+"""Crawl equivalence under the cuckoo seen sketch.
 
 The seen sketch is strictly a pre-filter over the exact anti-join, so the
 crawl — frontier membership, request log, drain order — must be bit-identical
-whichever backend (bloom rebuilt per epoch / cuckoo maintained incrementally /
-none) is configured. This pins that, plus the cuckoo-specific lifecycle:
-incremental adds across epochs and in-place eviction at shutdown_compact (D4).
+to a crawl whose gate is the exact anti-join alone. The exact-only engine is
+a test fake: its sketch loader and builder return None. This pins that, plus
+the sketch's lifecycle: incremental adds across epochs, checkpoint load on
+restart and in-place eviction at shutdown_compact (D4).
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ from pathlib import Path
 import numpy as np
 import pytest
 
-from europarl_crawler_spark.config import EngineConfig
 from europarl_crawler_spark.plans.epoch import CrawlEngine
 from europarl_crawler_spark.sources.epochstore import EpochStore
 from europarl_crawler_spark.sources.synthetic import session_days_df, simulated_web
@@ -23,17 +23,13 @@ from europarl_crawler_spark.sources.synthetic import session_days_df, simulated_
 START = datetime(2021, 1, 1, tzinfo=timezone.utc)
 
 
-def _run(spark, root, mode: str, n_epochs: int = 3):
+def _run(spark, root, name: str, n_epochs: int = 3):
     days = session_days_df(spark, start=date(2019, 7, 2), n_days=12)
     web = simulated_web(spark, days)
     web.write.mode("overwrite").parquet(str(root / "web"))
     web = spark.read.parquet(str(root / "web"))
-    store = EpochStore(root / f"store-{mode}")
-    cfg = EngineConfig(seen_sketch=mode, cuckoo_shards=4)
-    eng = CrawlEngine(
-        spark, store, web, prefetch_limit=50, epoch_secs=600.0,
-        use_bloom=mode != "none", config=cfg,
-    )
+    store = EpochStore(root / f"store-{name}")
+    eng = CrawlEngine(spark, store, web, prefetch_limit=50, epoch_secs=600.0)
     eng.bootstrap(days)
     eng.run(n_epochs, start=START)
     return eng, store
@@ -42,9 +38,16 @@ def _run(spark, root, mode: str, n_epochs: int = 3):
 @pytest.fixture(scope="module")
 def runs(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("crawl-cuckoo")
-    bloom = _run(spark, root, "bloom")
+    with pytest.MonkeyPatch.context() as mp:
+        # the exact-only engine: no sketch is ever loaded or built, so
+        # every epoch's gate is the plain anti-join
+        mp.setattr(CrawlEngine, "_build_cuckoo", lambda self, frontier: None)
+        mp.setattr(CrawlEngine, "_load_sketch", lambda self: None)
+        exact = _run(spark, root, "exact")
+    assert exact[0]._cuckoo is None
+    # last: the later tests reuse this engine's web, which each run rewrites
     cuckoo = _run(spark, root, "cuckoo")
-    return dict(bloom=bloom, cuckoo=cuckoo)
+    return dict(exact=exact, cuckoo=cuckoo)
 
 
 def _snapshot(store, spark, table, cols):
@@ -53,17 +56,17 @@ def _snapshot(store, spark, table, cols):
 
 
 def test_frontier_identical_across_backends(runs):
-    spark = runs["bloom"][0].spark
+    spark = runs["exact"][0].spark
     cols = ["url_id", "url_hash", "rule_id", "url"]
-    assert _snapshot(runs["bloom"][1], spark, "frontier", cols) == _snapshot(
+    assert _snapshot(runs["exact"][1], spark, "frontier", cols) == _snapshot(
         runs["cuckoo"][1], spark, "frontier", cols
     )
 
 
 def test_request_log_identical_across_backends(runs):
-    spark = runs["bloom"][0].spark
+    spark = runs["exact"][0].spark
     cols = ["url_id", "epoch", "status_code"]
-    assert _snapshot(runs["bloom"][1], spark, "requests", cols) == _snapshot(
+    assert _snapshot(runs["exact"][1], spark, "requests", cols) == _snapshot(
         runs["cuckoo"][1], spark, "requests", cols
     )
 
@@ -74,6 +77,10 @@ def test_cuckoo_sketch_tracks_frontier_incrementally(runs):
     correctness independence rests on)."""
     eng, store = runs["cuckoo"]
     assert eng._cuckoo is not None
+    # the cuckoo shard store is the only sketch a default engine keeps:
+    # no per-epoch Bloom rebuild under _seen_sketch/bloom
+    sketches = {p.name for p in (store.root / "_seen_sketch").iterdir()}
+    assert sketches == {"store"}
     ids = np.array(
         [r.url_id for r in store.read("frontier", eng.spark).select("url_id").collect()],
         dtype=np.int64,
@@ -90,10 +97,9 @@ def test_restart_rebuilds_sketch_even_without_new_urls(runs):
     old_eng, store = runs["cuckoo"]
     copy_root = Path(str(store.root) + "-restart")
     shutil.copytree(store.root, copy_root)
-    cfg = EngineConfig(seen_sketch="cuckoo", cuckoo_shards=4)
     eng2 = CrawlEngine(
         old_eng.spark, EpochStore(copy_root), old_eng.web,
-        prefetch_limit=0, epoch_secs=600.0, config=cfg,
+        prefetch_limit=0, epoch_secs=600.0,
     )
     assert eng2._cuckoo is None
     stats = eng2.run(1, start=START)
@@ -139,10 +145,7 @@ def test_shutdown_checkpoint_loads_on_restart(spark, tmp_path, monkeypatch):
 
     assert CuckooShardStore(sdir).stamp == store.latest("frontier")
 
-    cfg = EngineConfig(seen_sketch="cuckoo", cuckoo_shards=4)
-    eng2 = CrawlEngine(
-        spark, store, eng.web, prefetch_limit=50, epoch_secs=600.0, config=cfg
-    )
+    eng2 = CrawlEngine(spark, store, eng.web, prefetch_limit=50, epoch_secs=600.0)
     # any rebuild attempt would call CuckooShardStore.build — make that an error
     import europarl_crawler_spark.plans.epoch as epoch_mod
 
@@ -169,10 +172,9 @@ def _engine_on_copy(runs, name):
     old_eng, store = runs["cuckoo"]
     root = Path(f"{store.root}-{name}")
     shutil.copytree(store.root, root)
-    cfg = EngineConfig(seen_sketch="cuckoo", cuckoo_shards=4)
     eng = CrawlEngine(
         old_eng.spark, EpochStore(root), old_eng.web,
-        prefetch_limit=50, epoch_secs=600.0, config=cfg,
+        prefetch_limit=50, epoch_secs=600.0,
     )
     eng._cuckoo = CuckooShardStore(root / "_seen_sketch" / "store")
     return eng, eng.store

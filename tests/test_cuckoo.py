@@ -1,5 +1,6 @@
-"""Cuckoo filter: no false negatives, bounded FPR, exact delete, sharded
-build parity, and the anti-join pre-filter contract under eviction.
+"""Cuckoo filter: no false negatives, bounded FPR, exact delete, the shard
+store's build/probe/maintenance, the shard-count policy, and the anti-join
+pre-filter contract under eviction.
 
 The deletion property is the reason the module exists: the reference evicts a
 seen URL by deleting its row (reference: europarl/db/url.py:117-129); a Bloom
@@ -14,8 +15,8 @@ import pytest
 from europarl_crawler_spark.functions.cuckoo import (
     BUCKET_SLOTS,
     CuckooFilter,
-    ShardedCuckoo,
-    build_cuckoo,
+    CuckooShardStore,
+    shard_count_policy,
 )
 
 
@@ -95,37 +96,15 @@ def test_overflow_raises_not_corrupts():
         cf.add_many(_keys(200, 16))
 
 
-def test_sharded_routing_matches_flat_semantics():
-    keys = _keys(30000, 17)
-    sc = ShardedCuckoo(16, {})
-    sc.add_many(keys)
-    assert sc.might_contain(keys).all()
-    probe = _keys(100000, 18)
-    assert sc.might_contain(probe).mean() < 1e-3
-    assert sc.delete_many(keys[:500]).all()
-    assert sc.might_contain(keys[500:]).all()
-
-
-def test_build_cuckoo_distributed(spark):
-    keys = _keys(20000, 19)
-    df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
-    sc = build_cuckoo(df, n_shards=8)
-    assert sc.might_contain(keys).all()
-    assert sc.size == len(keys)
-    assert len(sc.shards) == 8
-    fresh = _keys(50000, 20)
-    mask = np.isin(fresh, keys, invert=True)
-    assert sc.might_contain(fresh[mask]).mean() < 1e-3
-
-
-def test_anti_join_seen_accepts_cuckoo_and_respects_eviction(spark):
+def test_anti_join_seen_accepts_cuckoo_and_respects_eviction(spark, tmp_path):
     from europarl_crawler_spark.functions.seen import anti_join_seen
 
     keys = _keys(2000, 21)
     seen_keys, evicted = keys[:1500], keys[1200:1500]
     cand = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
-    sc = build_cuckoo(
+    sc = CuckooShardStore.build(
         spark.createDataFrame([(int(k),) for k in seen_keys], "url_hash long"),
+        tmp_path / "store",
         n_shards=4,
     )
     fresh = {r.url_hash for r in anti_join_seen(
@@ -145,37 +124,15 @@ def test_anti_join_seen_accepts_cuckoo_and_respects_eviction(spark):
     assert fresh2 == set(keys[1200:].tolist())
 
 
-def test_save_load_roundtrip(tmp_path):
-    from europarl_crawler_spark.functions.cuckoo import load_sharded, save_sharded
-
-    keys = _keys(20000, 23)
-    sc = ShardedCuckoo(8, {})
-    sc.add_many(keys)
-    p = tmp_path / "sketch.npz"
-    save_sharded(sc, p)
-    back = load_sharded(p)
-    assert back.n_shards == sc.n_shards
-    assert set(back.shards) == set(sc.shards)
-    for sid in sc.shards:
-        assert (back.shards[sid].table == sc.shards[sid].table).all()
-        assert back.shards[sid].size == sc.shards[sid].size
-    assert back.might_contain(keys).all()
-    # the loaded filter is fully live: delete + insert still work
-    assert back.delete_many(keys[:10]).all()
-    back.add_many(keys[:10])
-    assert back.might_contain(keys).all()
-
-
 # ---------------------------------------------------------------------------
 # Executor-resident shard store (the 10^10-URL residency fix, r4 VERDICT #2)
 # ---------------------------------------------------------------------------
 
 
 def test_shard_store_build_layout_and_parity(spark, tmp_path):
-    """Distributed build writes one npy PER SHARD from executors; probe
-    semantics identical to the in-memory sharded filter."""
-    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
-
+    """Distributed build writes one npy PER SHARD from executors, and the
+    built store answers membership with no false negatives, an exact
+    size and a bounded FPR."""
     keys = _keys(20000, 31)
     df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
     st = CuckooShardStore.build(df, tmp_path / "store", n_shards=8)
@@ -186,10 +143,6 @@ def test_shard_store_build_layout_and_parity(spark, tmp_path):
     fresh = _keys(50000, 32)
     mask = np.isin(fresh, keys, invert=True)
     assert st.might_contain(fresh[mask]).mean() < 1e-3
-    # parity with the in-memory build over the same keys
-    sc = build_cuckoo(df, n_shards=8)
-    probe = _keys(30000, 33)
-    assert (st.might_contain(probe) == sc.might_contain(probe)).all()
 
 
 def test_shard_store_never_concatenates_on_driver(spark, tmp_path):
@@ -197,7 +150,6 @@ def test_shard_store_never_concatenates_on_driver(spark, tmp_path):
     NO table arrays (only root + meta), and the executor probe path
     (tag_maybe) routes by pmod so each task touches only its shards.
     anti_join_seen over the store is bit-identical to the plain anti-join."""
-    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
     from europarl_crawler_spark.functions.seen import anti_join_seen
 
     keys = _keys(4000, 34)
@@ -225,8 +177,6 @@ def test_shard_store_delta_touches_only_routed_shards(tmp_path, spark):
     residency."""
     import os
 
-    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
-
     keys = _keys(8000, 35)
     df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
     st = CuckooShardStore.build(df, tmp_path / "store", n_shards=8)
@@ -251,8 +201,6 @@ def test_shard_store_delta_touches_only_routed_shards(tmp_path, spark):
 def test_shard_store_delete_and_stamp_roundtrip(tmp_path, spark):
     """Deletion evicts in place (the cuckoo payoff) and the stamp persists
     through reopen — the checkpoint surface the crawl engine uses."""
-    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
-
     keys = _keys(5000, 36)
     df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
     st = CuckooShardStore.build(df, tmp_path / "store", n_shards=4)
@@ -274,8 +222,6 @@ def test_shard_store_probe_plan_shape(spark, tmp_path):
     their shard's partition) and exactly one Arrow/Python stage (the
     shard-local probe) — a regression to a broadcast-UDF probe or a
     per-row UDF would change both."""
-    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
-
     keys = _keys(2000, 61)
     df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
     st = CuckooShardStore.build(df, tmp_path / "store", n_shards=8)
@@ -293,8 +239,6 @@ def test_shard_store_fresh_shard_sized_at_build_load(tmp_path, spark):
     the 0.84 default: at the engine's 0.21 a fresh shard must take a second
     delta as large as its first. At 0.84 the pair (2 200 keys) overflows
     the 2 048 slots the first delta sized it at."""
-    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
-
     keys = _keys(4000, 37)
     keys = keys[np.mod(keys, 4) == 0]  # build fills shard 0 only
     df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
@@ -306,3 +250,11 @@ def test_shard_store_fresh_shard_sized_at_build_load(tmp_path, spark):
     st.add_many(first)
     st.add_many(second)
     assert st.might_contain(delta).all()
+
+
+def test_shard_count_policy_from_frontier_rows():
+    """One shard per 2^21 frontier rows, never fewer than one: the engine
+    derives its shard count from the frontier manifest's row count."""
+    assert shard_count_policy(0) == 1
+    assert shard_count_policy(2**21) == 1
+    assert shard_count_policy(2**21 + 1) == 2

@@ -379,3 +379,28 @@ def test_incremental_minhash_matches_full_corpus_banding(spark, tmp_path):
     # history state persisted: bucket and shingle tables carry both epochs
     bk = store.read("mh_buckets", spark)
     assert bk.select("doc_id").distinct().count() == 40
+
+
+def test_incremental_minhash_resent_doc_keeps_jaccard(spark, tmp_path):
+    """A doc_id re-sent in a later increment is that doc's current truth:
+    its shingles come from the increment alone, not history ∪ increment,
+    so its Jaccard with a near-duplicate is the same as when first seen."""
+    from europarl_crawler_spark.operators.dedup import incremental_minhash_dedup
+    from europarl_crawler_spark.sources.epochstore import EpochStore
+
+    text = (
+        "the quick brown fox jumps over the lazy dog and runs far away "
+        "into the deep dark woods tonight"
+    )
+    docs = spark.createDataFrame(
+        [(1, text + " alpha"), (2, text + " omega")], "doc_id long, text string"
+    )
+    store = EpochStore(tmp_path / "store")
+    first = incremental_minhash_dedup(store, spark, docs, 1, threshold=0.4)
+    p1 = {(r.id_a, r.id_b): r.jaccard for r in first.collect()}
+    assert set(p1) == {(1, 2)}
+    resent = incremental_minhash_dedup(
+        store, spark, docs.filter(F.col("doc_id") == 2), 2, threshold=0.4
+    )
+    p2 = {(r.id_a, r.id_b): r.jaccard for r in resent.collect()}
+    assert p2 == p1

@@ -56,7 +56,6 @@ def test_config_from_ini(tmp_path):
     assert cfg.throttling_factor == 4.0
     assert cfg.prefetch_limit == 10
     assert cfg.epoch_secs == 120.0
-    assert cfg.use_bloom is False
     assert cfg.bucket_capacity == 100  # default preserved
 
 

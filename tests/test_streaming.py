@@ -138,13 +138,45 @@ def test_drain_windowed_counts_negative_values(spark, tmp_path):
             n += 1
     assert n == 4
     got = S.drain_windowed_counts(
-        spark,
-        str(flat),
-        checkpoint=str(tmp_path / "ckpt"),
-        name="negwin",
+        spark, str(flat), checkpoint=str(tmp_path / "ckpt")
     ).collect()
     assert len(got) == 1
     row = got[0]
     # batch truth: 4 events, cents = 1000 - 300 - 400 - 250 = 50
     assert row["n"] == 4
     assert row["cents"] == 50
+
+
+def test_drain_windowed_counts_fresh_checkpoint_ignores_stale_emissions(
+    spark, tmp_path
+):
+    """Rerunning with the checkpoint deleted but its emissions directory
+    left behind must return the fresh source's counts: the old run's
+    emissions carry batch ids the fresh run never reaches, and would win
+    the last-emission merge."""
+    import shutil
+
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    )
+
+    def source(name, values):
+        src = tmp_path / name
+        src.mkdir()
+        for i, v in enumerate(values):
+            row = (i, datetime(2024, 1, 1, 0, 5 + i), 1, "view", v, None)
+            spark.createDataFrame([row], schema).coalesce(1).write.parquet(
+                str(tmp_path / f"{name}-{i}")
+            )
+            (part,) = (tmp_path / f"{name}-{i}").glob("*.parquet")
+            shutil.copy(part, src / f"f{i}.parquet")
+        return str(src)
+
+    ckpt = str(tmp_path / "ckpt")
+    old = S.drain_windowed_counts(spark, source("old", [1.0] * 4), checkpoint=ckpt)
+    assert [(r["n"], r["cents"]) for r in old.collect()] == [(4, 400)]
+    shutil.rmtree(ckpt)
+    assert (tmp_path / "ckpt_emissions").exists()
+    fresh = S.drain_windowed_counts(spark, source("new", [2.0]), checkpoint=ckpt)
+    assert [(r["n"], r["cents"]) for r in fresh.collect()] == [(1, 200)]

@@ -12,10 +12,12 @@ plan regression (a lost broadcast hint, a filter that stopped pushing, a
 Python stage sneaking into a JVM lane) shows up as a diff of this table
 rather than a benchmark surprise two rounds later.
 
-``--engine`` audits the crawl engine's extract stage instead: it builds the
-toy simulated web (10 days), plans ``extract_documents`` over one drained
-batch and prints the same feature row. A change that moves the decode back
-onto the content store's scan partitions shows up as a diff of that row.
+``--engine`` audits two crawl-engine stages instead, over the toy simulated
+web (10 days): ``extract_documents`` over one drained batch, and the URL-seen
+gate (``anti_join_seen`` over a toy frontier, pre-filtered by the shard store
+the engine builds for it). A change that moves the decode back onto the
+content store's scan partitions, or a seen probe that regresses to a
+broadcast UDF, shows up as a diff of those rows.
 
 Usage:
     python tools/audit_plans.py [query ...]       # default: all queries
@@ -79,15 +81,13 @@ HEADER = """| query | exchanges | bcast join | smj | py stages | scans (pushed) 
 |---|---|---|---|---|---|---|"""
 
 
-def engine_extract(spark, root: str):
-    """``extract_documents`` over one drained batch of the toy simulated
-    web: every candidate URL of a 10-day calendar, fetched at epoch 2."""
-    from datetime import date, datetime, timezone
+def toy_batch(spark, root: str):
+    """(web, drained): the toy simulated web and every candidate URL of
+    its 10-day calendar, keyed like frontier rows."""
+    from datetime import date
 
     from pyspark.sql import functions as F
 
-    from europarl_crawler_spark.functions.rules import rules_df
-    from europarl_crawler_spark.plans.fetch import extract_documents, simulate_requests
     from europarl_crawler_spark.sources.synthetic import (
         candidate_urls,
         session_days_df,
@@ -95,34 +95,73 @@ def engine_extract(spark, root: str):
     )
 
     days = session_days_df(spark, start=date(2019, 7, 2), n_days=10)
-    simulated_web(spark, days).write.mode("overwrite").parquet(root)
-    web = spark.read.parquet(root)
+    simulated_web(spark, days).write.mode("overwrite").parquet(root + "/web")
+    web = spark.read.parquet(root + "/web")
     drained = candidate_urls(spark, days).select(
         F.xxhash64("rule_id", "url").alias("url_id"),
         "rule_id", "dates", "url", "url_hash", "host_hash",
     )
+    return web, drained
+
+
+def engine_extract(spark, web, drained):
+    """``extract_documents`` over the toy batch, fetched at epoch 2."""
+    from datetime import datetime, timezone
+
+    from europarl_crawler_spark.functions.rules import rules_df
+    from europarl_crawler_spark.plans.fetch import extract_documents, simulate_requests
+
     now = datetime(2021, 1, 1, tzinfo=timezone.utc)
     fetched = simulate_requests(drained, web, 2, now)
     return extract_documents(fetched, web, rules_df(spark))
 
 
+def engine_seen_gate(spark, web, drained, root: str):
+    """The URL-seen gate as ``run_epoch`` plans it: half the toy batch is
+    the committed frontier, the whole batch is the candidate set, and the
+    pre-filter is the shard store the engine builds over that frontier."""
+    from pyspark.sql import functions as F
+
+    from europarl_crawler_spark.functions.seen import anti_join_seen
+    from europarl_crawler_spark.plans.epoch import CrawlEngine
+    from europarl_crawler_spark.sources.epochstore import EpochStore
+
+    eng = CrawlEngine(spark, EpochStore(root + "/store"), web)
+    seen = drained.filter(F.pmod("url_id", F.lit(2)) == 0)
+    eng.store.overwrite("frontier", seen, 1, keys=["url_id"])
+    frontier = eng.store.read("frontier", spark).select("url_id")
+    sketch = eng._build_cuckoo(frontier)
+    return anti_join_seen(drained, frontier, sketch, hash_col="url_id")
+
+
 def engine_main(spark) -> None:
     import tempfile
 
-    print("""# Plan-shape audit: the crawl engine's extract stage (AQE final plan)
+    print("""# Plan-shape audit: crawl engine stages (AQE final plan)
 
 Generated by `python tools/audit_plans.py --engine`. Exchanges include the
-broadcast exchanges of the dimension joins. Two of them move the epoch's
-hit rows: the decode-balance repartition under the py stage
+broadcast exchanges of the dimension joins.
+
+`extract_documents`: two exchanges move the epoch's hit rows: the
+decode-balance repartition under the py stage
 (`hashpartitioning(url_hash, defaultParallelism)`, not coalesced by AQE)
 and the byte-sized `documents` repartition. The store scan feeds the
 left-semi filter with no exchange between them, so the store's payloads
 never shuffle. `tests/test_extract_balance.py` pins both properties.
+
+`seen gate`: the candidates' `pmod(url_id, n_shards)` repartition feeds the
+shard-local cuckoo probe, a py stage that appears once in each branch of
+the fresh ∪ rechecked union (2 py stages); only the maybe-seen slice
+reaches the exact anti-join. `tests/test_cuckoo.py` pins the probe's shape.
 """)
     print(HEADER)
     with tempfile.TemporaryDirectory() as root:
-        plan = executed_plan(engine_extract(spark, root + "/web"))
-    print(row("extract_documents", features(plan)))
+        web, drained = toy_batch(spark, root)
+        for name, df in (
+            ("extract_documents", engine_extract(spark, web, drained)),
+            ("seen gate (anti_join_seen)", engine_seen_gate(spark, web, drained, root)),
+        ):
+            print(row(name, features(executed_plan(df))))
 
 
 def main() -> None:
