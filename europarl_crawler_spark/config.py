@@ -9,9 +9,12 @@ CrawlEngine / bench / jobs.
 The URL-seen sketch has no knobs: the engine always maintains its cuckoo
 shard store once a frontier exists (falling back to the exact anti-join
 until then) and derives the shard count from the frontier's manifest row
-count (``functions.cuckoo.shard_count_policy``). Keys that earlier versions
-read — ``Salts``, ``BloomFpp``, ``UseBloom``, ``SeenSketch``,
-``CuckooShards`` — are ignored, so old settings files still load.
+count (``functions.cuckoo.shard_count_policy``). The token bucket's
+throttling factor and capacity are the reference constants of
+``plans.politeness``. Keys that earlier versions read — ``Salts``,
+``BloomFpp``, ``UseBloom``, ``SeenSketch``, ``CuckooShards``,
+``ThrottlingFactor``, ``BucketCapacity``, ``RequestTimeoutSecs`` — are
+ignored, so old settings files still load.
 """
 
 from __future__ import annotations
@@ -22,14 +25,10 @@ from dataclasses import dataclass
 
 @dataclass(frozen=True)
 class EngineConfig:
-    # politeness (reference settings.ini:30,33; workers/tokenbucket.py)
+    # politeness (reference settings.ini:30; workers/tokenbucket.py)
     min_interval_secs: float = 3.0
-    throttling_factor: float = 10.0
-    bucket_capacity: int = 100
     # scheduling (settings.ini:16; PrefetchLimit)
     prefetch_limit: int = 50
-    # fetch (settings.ini:19,63; RequestTimeoutFactor × StopWaitSecs)
-    request_timeout_secs: float = 7.5
     # epoch cadence — the batch analog of the reference's continuous loop
     epoch_secs: float = 300.0
     # session-day probe lag: only probe days older than today − offset
@@ -60,10 +59,7 @@ class EngineConfig:
 
         return cls(
             min_interval_secs=get("TokenBucketWorker", "MinIntervalSecs", 3.0),
-            throttling_factor=get("TokenBucketWorker", "ThrottlingFactor", 10.0),
-            bucket_capacity=get("TokenBucketWorker", "BucketCapacity", 100),
             prefetch_limit=get("General", "PrefetchLimit", 50),
-            request_timeout_secs=get("DocumentDownloader", "RequestTimeoutSecs", 7.5),
             epoch_secs=get("Engine", "EpochSecs", 300.0),
             probe_offset_days=get("SessionDayChecker", "ProbeOffsetDays", 30),
             recrawl_enabled=get("Engine", "RecrawlEnabled", True),

@@ -5,30 +5,34 @@ budget-bound (0.33 req/s) and cannot show compute scaling. The north_rule's
 10^10-URL frontier is multi-host; this job reproduces that regime
 synthetically: H hosts × U URLs each, every host under the reference's
 politeness budget (bucket cap 100/epoch), then measures URLs
-**fetched + extracted per second** through the full pipeline:
-
-  pending anti-join → two-stage salted priority drain → content-store fetch
-  join → Arrow decode + phash extract → requests/documents merges
+**fetched + extracted per second** through the production crawl loop,
+``CrawlEngine.run_epoch``, over a pre-seeded frontier.
 
 Run via spark-submit at two executor counts (tools/bench_scaling.py: 1 vs 4
 concurrent processes over disjoint host shards, timed windows aligned by a
 file barrier) on the SAME input; efficiency = (thpt_4N / thpt_N) / 4.
 
     spark-submit --master local[1] --py-files pkg.zip scale_bench.py \
-        --hosts 30000 --host-shard 0 --host-shards 4 --warmup-budget 5
+        --hosts 30000 --host-shard 0 --host-shards 4
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import tempfile
 import time
-from datetime import datetime, timezone
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+
+# The crawl clock's epoch length: more than 100 × the slowest token-bucket
+# interval (3 s × 2^16), so every host drains exactly the bucket cap of 100
+# URLs an epoch whatever its throttle state — the per-epoch work is known.
+EPOCH_SECS = 2.0e7
 
 
 def synthetic_multihost_web(spark, n_hosts: int, urls_per_host: int, img_px: int = 8):
@@ -38,7 +42,7 @@ def synthetic_multihost_web(spark, n_hosts: int, urls_per_host: int, img_px: int
     Philox noise keyed by url id (generated once, reused by both runs)."""
     from pyspark.sql import functions as F
 
-    from ..functions.urlkit import host_hash_expr, url_hash_expr
+    from ..functions.urlkit import url_hash_expr
     from ..sources.schema import WEB
 
     n = n_hosts * urls_per_host
@@ -111,22 +115,35 @@ def multihost_frontier(spark, web):
         .withColumn("date_id", F.lit(0).cast("long"))
         .withColumn("dates", F.lit("2020-01-01").cast("date"))
         .withColumn("priority", F.row_number().over(w).cast("long"))
-        .withColumn("created_epoch", F.lit(1))
+        .withColumn("created_epoch", F.lit(0))
     )
+
+
+def politeness_violations(spark, store, last_epoch: int) -> int:
+    """(epoch, host) groups of the store's request log over the politeness
+    budget in force at that epoch: ``plans.politeness.budget_audit`` against
+    the ``politeness`` snapshot each epoch committed."""
+    from pyspark.sql import functions as F
+
+    from ..plans.politeness import budget_audit
+
+    snaps = [
+        store.read("politeness", spark, as_of=e)
+        .select("host_hash", "interval_secs")
+        .withColumn("epoch", F.lit(e).cast("long"))
+        for e in range(1, last_epoch + 1)
+    ]
+    hist = reduce(lambda a, b: a.unionByName(b), snaps)
+    return budget_audit(store.read("requests", spark), hist, EPOCH_SECS).count()
 
 
 def main(argv=None) -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--hosts", type=int, default=2000)
     p.add_argument("--urls-per-host", type=int, default=200)
-    p.add_argument("--budget", type=int, default=100)
+    # timed epochs after the warm-up; 0 only builds the web
     p.add_argument("--epochs", type=int, default=2)
     p.add_argument("--img-px", type=int, default=8)
-    p.add_argument("--no-warmup", action="store_true")
-    # warm-up exists to pay JIT/codegen/Arrow-worker startup, not to move
-    # data: cap its per-host budget so the untimed epoch stays short while
-    # still exercising every stage of the pipeline
-    p.add_argument("--warmup-budget", type=int, default=None)
     p.add_argument("--web", default=None, help="pre-generated web dir (reused across runs)")
     p.add_argument("--store", default=None)
     # executor-style sharding: this process crawls only hosts with
@@ -146,12 +163,9 @@ def main(argv=None) -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from ..functions.rules import rules_df
-    from ..plans.epoch import TERMINAL
-    from ..plans.fetch import extract_documents, requests_log, simulate_requests
-    from ..plans.frontier import priority_drain
+    from ..functions.urlkit import host_hash_expr
+    from ..plans.epoch import CrawlEngine
     from ..sources.epochstore import EpochStore
-    from ..sources import schema as S
 
     spark = (
         SparkSession.builder.appName("scale-bench")
@@ -163,10 +177,6 @@ def main(argv=None) -> None:
     cores = spark.sparkContext.defaultParallelism
 
     web_dir = args.web or tempfile.mkdtemp() + "/web"
-    import os
-
-    from ..functions.urlkit import host_hash_expr
-
     N_WEB_SHARDS = 16  # divisible by any executor count used here
     if not os.path.isdir(web_dir):
         # hive-partition the store by host shard: an executor-process
@@ -178,6 +188,8 @@ def main(argv=None) -> None:
         ).withColumn(
             "_shard", F.pmod(host_hash_expr("url"), F.lit(N_WEB_SHARDS))
         ).write.partitionBy("_shard").parquet(web_dir)
+    if args.epochs == 0:
+        return
     web = spark.read.parquet(web_dir)
     if args.host_shards > 1:
         mine = [
@@ -187,36 +199,12 @@ def main(argv=None) -> None:
     web = web.drop("_shard")
 
     store = EpochStore(args.store or tempfile.mkdtemp() + "/store")
-    frontier = multihost_frontier(spark, web)
-    store.overwrite("frontier", frontier, 1, keys=["url_id"])
-    frontier = store.read("frontier", spark)
-
-    budgets = (
-        frontier.select("host_hash").distinct()
-        .withColumn("budget", F.lit(args.budget))
-    )
-
-    if not args.no_warmup:
-        # untimed warm-up: run the full pipeline once against a throwaway
-        # store so JIT / codegen / Arrow worker startup don't bill the first
-        # timed epoch (the cross-level comparison needs equally-warm JVMs)
-        warm_store = EpochStore(tempfile.mkdtemp() + "/warm")
-        warm_budgets = budgets
-        if args.warmup_budget:
-            warm_budgets = budgets.withColumn(
-                "budget", F.least("budget", F.lit(args.warmup_budget))
-            )
-        warm_pending = frontier
-        warm_drained = priority_drain(warm_pending, warm_budgets)
-        warm_fetched = simulate_requests(
-            warm_drained, web, 1, datetime.now(timezone.utc)
-        ).persist()
-        warm_store.append("requests", requests_log(warm_fetched), 1)
-        warm_store.merge(
-            "documents", extract_documents(warm_fetched, web, rules_df(spark)), 1,
-            keys=["image_id"],
-        )
-        warm_fetched.unpersist()
+    store.overwrite("frontier", multihost_frontier(spark, web), 0, keys=["url_id"])
+    eng = CrawlEngine(spark, store, web, epoch_secs=EPOCH_SECS)
+    # untimed warm-up epoch on the same store: pays JIT / codegen / Arrow
+    # worker startup and the seen-sketch build, so every timed epoch is a
+    # steady-state one (the cross-level comparison needs equally-warm JVMs)
+    eng.run_epoch()
 
     if args.barrier_dir:
         bdir = os.path.abspath(args.barrier_dir)
@@ -228,45 +216,11 @@ def main(argv=None) -> None:
             time.sleep(0.05)
 
     t0 = time.perf_counter()
-    fetched_total = 0
-    stage_secs: dict[str, float] = {}
-
-    def mark(name: str, since: float) -> float:
-        now = time.perf_counter()
-        stage_secs[name] = round(stage_secs.get(name, 0.0) + (now - since), 2)
-        return now
-
-    for e in range(2, 2 + args.epochs):
-        t = time.perf_counter()
-        requests = store.read("requests", spark, schema=S.REQUESTS)
-        terminal = requests.filter(F.col("status_code").isin(*TERMINAL)).select("url_id")
-        pending = frontier.join(terminal, "url_id", "left_anti")
-        drained = priority_drain(pending, budgets)
-        fetched = simulate_requests(
-            drained, web, e, datetime.now(timezone.utc)
-        ).persist()
-        n = fetched.count()  # materialize drain+fetch here to time it apart
-        t = mark("drain_fetch", t)
-        store.append("requests", requests_log(fetched), e)
-        t = mark("requests_append", t)
-        docs = extract_documents(fetched, web, rules_df(spark))
-        store.merge("documents", docs, e, keys=["image_id"])
-        t = mark("extract_merge", t)
-        fetched_total += n
-        fetched.unpersist()
+    fetched_total = sum(eng.run_epoch()["drained"] for _ in range(args.epochs))
     dt = time.perf_counter() - t0
 
-    # UNTIMED politeness audit over the full request log this leg wrote:
-    # no (epoch, host) group may exceed the budget table handed to
-    # priority_drain — the log-side proof of the north_rule's "same
-    # politeness budget" claim at bench scale (plans/politeness.py:
-    # budget_table_audit). Recorded per trial row in BENCH/BASELINE.md.
-    from ..plans.politeness import budget_table_audit
-
-    violations = 0
-    if args.epochs > 0:
-        log = store.read("requests", spark, schema=S.REQUESTS)
-        violations = budget_table_audit(log, budgets).count()
+    # untimed, over every epoch this shard ran — must be 0
+    violations = politeness_violations(spark, store, eng.current_epoch())
 
     print(
         json.dumps(
@@ -279,7 +233,6 @@ def main(argv=None) -> None:
                 "wall_sec": round(dt, 3),
                 "urls_per_sec": round(fetched_total / dt, 2),
                 "politeness_violations": int(violations),
-                "stages": stage_secs,
             }
         ),
         flush=True,

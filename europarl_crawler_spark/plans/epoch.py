@@ -38,7 +38,12 @@ from .frontier import (
     session_day_probes,
     todo_combos,
 )
-from .politeness import host_budgets, politeness_update, status_flags_agg
+from .politeness import (
+    BUCKET_CAPACITY,
+    host_budgets,
+    politeness_update,
+    status_flags_agg,
+)
 from .robots import apply_robots_gate
 
 TERMINAL = (200, 404)
@@ -56,6 +61,17 @@ def _url_state_delta(fetched: DataFrame) -> DataFrame:
         F.max(is_ok).alias("has_ok"),
         F.max(F.when(is_ok, F.col("requested_at"))).alias("last_ok_at"),
         F.max(F.when(is_ok, F.col("epoch"))).cast("int").alias("last_ok_epoch"),
+    )
+
+
+def _fold_url_state(deltas: DataFrame) -> DataFrame:
+    """url_state delta rows folded to one summary row per URL — the same
+    map-side-combinable max aggregation as the deltas themselves."""
+    return deltas.groupBy("url_id").agg(
+        F.max("terminal").alias("terminal"),
+        F.max("has_ok").alias("has_ok"),
+        F.max("last_ok_at").alias("last_ok_at"),
+        F.max("last_ok_epoch").alias("last_ok_epoch"),
     )
 
 
@@ -113,26 +129,9 @@ class CrawlEngine:
 
         Stored as APPEND deltas (one summary row per fetched URL per epoch)
         and folded here with a map-side-combinable max aggregation — no
-        window; ``_compact_url_state`` periodically folds the deltas into a
-        base snapshot so read amplification stays bounded. Stores created by
-        older engine versions bootstrap the table from the log once."""
-        if (
-            self.store.latest("url_state") is None
-            and self.store.latest("requests") is not None
-        ):
-            requests = self._read("requests", S.REQUESTS)
-            self.store.overwrite(
-                "url_state",
-                _url_state_delta(requests),
-                (self.store.latest("requests") or 0),
-            )
-        raw = self._read("url_state", S.URL_STATE)
-        return raw.groupBy("url_id").agg(
-            F.max("terminal").alias("terminal"),
-            F.max("has_ok").alias("has_ok"),
-            F.max("last_ok_at").alias("last_ok_at"),
-            F.max("last_ok_epoch").alias("last_ok_epoch"),
-        )
+        window; every ``URL_STATE_COMPACT_EVERY``-th epoch commits the fold
+        as a base snapshot instead, so read amplification stays bounded."""
+        return _fold_url_state(self._read("url_state", S.URL_STATE))
 
     def _build_cuckoo(self, frontier: DataFrame):
         """Load-or-(re)build the incremental seen sketch. A checkpoint
@@ -263,9 +262,9 @@ class CrawlEngine:
         fresh = anti_join_seen(new_urls, frontier, self._cuckoo, hash_col="url_id")
         if self._cuckoo is not None:
             fresh = fresh.persist()
-        # the frontier keeps its OWN commit chain (like documents/url_state):
-        # shutdown_compact's delete+compact commits advance it past the
-        # crawl clock, and a resumed crawl must commit above BOTH
+        # the frontier keeps its OWN commit chain (like documents):
+        # shutdown_compact's commit advances it past the crawl clock, and a
+        # resumed crawl must commit above BOTH
         f_e = max(e, (self.store.latest("frontier") or 0) + 1)
         m = self.store.merge("frontier", fresh, f_e, keys=["url_id"])
         if self._cuckoo is not None:
@@ -320,17 +319,20 @@ class CrawlEngine:
         # 5. fetch + extract (the epoch's big join + the Arrow decode pass).
         fetched = simulate_requests(drained, self.web, e, now).persist()
         self.store.append("requests", requests_log(fetched), e)
-        # url_state delta: this epoch's outcomes summarized per URL; folded
-        # at read, compacted every K commits so reads stay O(urls)+O(K deltas).
-        # The table keeps its OWN monotonic commit chain (compactions insert
-        # extra commits between crawl epochs).
-        se = (self.store.latest("url_state") or 0) + 1
-        self.store.append("url_state", _url_state_delta(fetched), se)
-        if len(self.store.manifests("url_state")) % URL_STATE_COMPACT_EVERY == 0:
-            self.store.overwrite("url_state", self._url_state(), se + 1)
+        # url_state delta: this epoch's outcomes summarized per URL, folded
+        # at read. Every K-th epoch commits the fold of the stored deltas and
+        # this one as a base instead, so reads stay O(urls)+O(K deltas).
+        delta = _url_state_delta(fetched)
+        if e % URL_STATE_COMPACT_EVERY == 0:
+            stored = self._read("url_state", S.URL_STATE)
+            self.store.overwrite(
+                "url_state", _fold_url_state(stored.unionByName(delta)), e
+            )
+        else:
+            self.store.append("url_state", delta, e)
         docs = extract_documents(
             fetched, self.web, self.rules,
-            hint_broadcast=est_hosts * self.config.bucket_capacity <= thr,
+            hint_broadcast=est_hosts * BUCKET_CAPACITY <= thr,
         )
         # documents has its own commit chain: reset/reextract (D9) may have
         # advanced it past the crawl clock — never commit at-or-below it
@@ -395,8 +397,6 @@ class CrawlEngine:
         for i in range(n_epochs):
             now = None
             if start is not None:
-                from datetime import timedelta
-
                 now = start + timedelta(seconds=self.epoch_secs * (self.current_epoch()))
             out.append(self.run_epoch(now))
         return out
@@ -446,8 +446,8 @@ class CrawlEngine:
 
     def shutdown_compact(self) -> None:
         """D4: drop frontier rows that were never requested (reference
-        drop_uncrawled_urls at crawler shutdown, db/url.py:139-156), then
-        compact the frontier so the next run reads one base snapshot."""
+        drop_uncrawled_urls at crawler shutdown, db/url.py:139-156) in one
+        base snapshot of the crawled rows, so the next run reads no deltas."""
         # commit above both the crawl clock and the frontier's own chain
         # (repeated shutdowns / post-shutdown crawls advance the latter)
         e = max(self.current_epoch(), self.store.latest("frontier") or 0) + 1
@@ -457,8 +457,8 @@ class CrawlEngine:
         if self._cuckoo is not None:
             # the deletable-sketch payoff (reference deletes seen rows,
             # db/url.py:139-156): evict the dropped urls from the cuckoo
-            # in place instead of rebuilding. Collected BEFORE the delete/
-            # compact rewrite the underlying files. A huge drop set would
+            # in place instead of rebuilding. Collected BEFORE the overwrite
+            # replaces the frontier's snapshot. A huge drop set would
             # make rebuild cheaper than delete — past the broadcast
             # threshold just discard the sketch; the next epoch rebuilds.
             # At most threshold + 1 ids cross to the driver either way.
@@ -471,9 +471,11 @@ class CrawlEngine:
                 self._cuckoo.delete_many(np.unique(ids))
             else:
                 self._cuckoo = None
-        self.store.delete("frontier", uncrawled, e, keys=["url_id"])
-        self.store.compact("frontier", self.spark, e + 1)
-        # post-eviction sketch == compacted frontier: checkpoint it stamped
-        # with the compaction commit so the next run loads instead of
-        # rescanning the frontier
+        self.store.overwrite(
+            "frontier", frontier.join(fetched_ids, "url_id", "left_semi"), e,
+            keys=["url_id"],
+        )
+        # post-eviction sketch == resolved frontier: checkpoint it stamped
+        # with that commit so the next run loads instead of rescanning the
+        # frontier
         self.save_sketch()

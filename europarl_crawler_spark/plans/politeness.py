@@ -15,12 +15,12 @@ Reference semantics (europarl/workers/tokenbucket.py):
   next_check = now + INTERVAL_SECS * THROTTLING_FACTOR (tokenbucket.py:102-122;
   tests :56-110).
 
-This is *control-plane* state: one TokenBucket per host, a handful of floats,
-evaluated driver-side per epoch from the epoch's status-code histogram (a
-groupBy("host_hash","status_code").count() — data-plane). The per-epoch fetch
-budget replaces the queue: budget = floor(epoch_secs / INTERVAL_SECS), capped
-at bucket capacity 100 (reference jobs/crawler.py:64 — excess tokens are
-discarded, tokenbucket.py:135-141).
+``TokenBucket`` is the one-host reference form of that state machine; the
+engine runs its data-plane twin below (``host_budgets`` /
+``politeness_update`` over the ``politeness`` table), which the tests hold
+bit-identical to it. The per-epoch fetch budget replaces the queue: budget =
+floor(epoch_secs / INTERVAL_SECS), capped at bucket capacity 100 (reference
+jobs/crawler.py:64 — excess tokens are discarded, tokenbucket.py:135-141).
 """
 
 from __future__ import annotations
@@ -217,48 +217,6 @@ def politeness_update(politeness, flags, now: float,
     )
 
 
-class PolitenessState:
-    """Driver-side map host_hash → TokenBucket with (de)serialization to rows
-    so the state checkpoints into the ``politeness`` epoch table."""
-
-    def __init__(self, min_interval_secs: float = MIN_INTERVAL_SECS):
-        self.min_interval_secs = min_interval_secs
-        self.buckets: dict[int, TokenBucket] = {}
-
-    def bucket(self, host_hash: int) -> TokenBucket:
-        if host_hash not in self.buckets:
-            self.buckets[host_hash] = TokenBucket(self.min_interval_secs)
-        return self.buckets[host_hash]
-
-    def update_from_histogram(self, now: float, codes_by_host: dict[int, list[int]]) -> None:
-        """codes_by_host: host_hash → distinct status codes seen in the window
-        (the reference passes ``Counter(...).keys()`` — membership only)."""
-        for host, codes in codes_by_host.items():
-            self.bucket(host).check_throttling(now, codes)
-
-    def budgets(self, epoch_secs: float, hosts) -> dict[int, int]:
-        return {h: self.bucket(h).epoch_budget(epoch_secs) for h in hosts}
-
-    def to_rows(self, epoch: int) -> list[tuple]:
-        return [
-            (h, b.interval_secs, b.last_check, b.next_check, epoch)
-            for h, b in sorted(self.buckets.items())
-        ]
-
-    @classmethod
-    def from_rows(cls, rows, min_interval_secs: float = MIN_INTERVAL_SECS) -> "PolitenessState":
-        st = cls(min_interval_secs)
-        for h, interval, last_check, next_check, _epoch in rows:
-            st.buckets[int(h)] = TokenBucket(
-                min_interval_secs,
-                THROTTLING_FACTOR,
-                float(interval),
-                last_check,
-                next_check,
-            )
-        return st
-
-
 # ---------------------------------------------------------------------------
 # After-the-fact compliance audit (P12): the verifier dual of the emission-
 # side token bucket. TokenBucket enforces spacing when requests are emitted;
@@ -341,25 +299,6 @@ def budget_audit(requests, politeness, epoch_secs: float,
         ).alias("budget"),
     )
     return j.filter(F.col("n") > F.col("budget"))
-
-
-def budget_table_audit(requests, budgets):
-    """(epoch, host_hash) groups of a request log that exceed an EXPLICIT
-    per-host budget table (host_hash, budget) — the audit for jobs that
-    hand budgets to ``priority_drain`` directly (the scale bench) rather
-    than deriving them from politeness state. Must return zero rows for a
-    healthy run; tools/bench_scaling.py records the count in every
-    BASELINE.md trial row so the north_rule's "same politeness budget"
-    claim is log-verified at 3M-URL scale, not just in the toy e2e
-    (r4 VERDICT next-round #5). One groupBy + one broadcast-class join;
-    hosts missing from the budget table audit as budget 0 (any request is
-    a violation — absent budget means no permission to fetch)."""
-    from pyspark.sql import functions as F
-
-    counts = requests.groupBy("epoch", "host_hash").agg(F.count("*").alias("n"))
-    return counts.join(budgets, "host_hash", "left").filter(
-        F.col("n") > F.coalesce(F.col("budget"), F.lit(0))
-    )
 
 
 def asof_throttle_audit(

@@ -254,6 +254,31 @@ def test_shutdown_drops_uncrawled(world):
     )
 
 
+def test_url_state_commits_on_crawl_clock(spark, tmp_path, monkeypatch):
+    """url_state commits at the crawl epoch: a delta append every epoch,
+    except every URL_STATE_COMPACT_EVERY-th, which commits one base of the
+    fold of the stored deltas and its own — no commit ids off the clock."""
+    from europarl_crawler_spark.plans import epoch as ep
+
+    monkeypatch.setattr(ep, "URL_STATE_COMPACT_EVERY", 2)
+    days = session_days_df(spark, start=date(2019, 7, 2), n_days=8)
+    simulated_web(spark, days).write.parquet(str(tmp_path / "web"))
+    web = spark.read.parquet(str(tmp_path / "web"))
+    store = EpochStore(tmp_path / "store")
+    eng = CrawlEngine(spark, store, web, prefetch_limit=50, epoch_secs=600.0)
+    eng.bootstrap(days)
+    eng.run(4, start=START)
+    assert [(m["epoch"], m["kind"]) for m in store.manifests("url_state")] == [
+        (1, "append"), (2, "base"), (3, "append"), (4, "base"),
+    ]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    want = ep._fold_url_state(ep._url_state_delta(store.read("requests", spark)))
+    assert rows(eng._url_state()) == rows(want)
+
+
 def test_politeness_gap_audit_detects_and_clears(spark):
     """politeness_audit (P12): violations are exactly the same-host gaps
     below the interval; a properly spaced log audits clean."""

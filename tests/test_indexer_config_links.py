@@ -53,10 +53,8 @@ def test_config_from_ini(tmp_path):
     )
     cfg = EngineConfig.from_ini(str(ini))
     assert cfg.min_interval_secs == 5.0
-    assert cfg.throttling_factor == 4.0
     assert cfg.prefetch_limit == 10
     assert cfg.epoch_secs == 120.0
-    assert cfg.bucket_capacity == 100  # default preserved
 
 
 # --- indexing pipeline --------------------------------------------------------

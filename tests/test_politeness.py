@@ -7,7 +7,6 @@ import pytest
 
 from europarl_crawler_spark.plans.politeness import (
     MIN_INTERVAL_SECS,
-    PolitenessState,
     TokenBucket,
 )
 
@@ -95,16 +94,6 @@ def test_epoch_budget_capped_at_bucket_capacity():
     assert tb.epoch_budget(3_000_000.0) == 100  # bucket cap
     tb.throttle()
     assert tb.epoch_budget(30.0) == 5
-
-
-def test_politeness_state_roundtrip():
-    st = PolitenessState()
-    st.bucket(1).throttle()
-    st.bucket(2)
-    rows = st.to_rows(epoch=3)
-    st2 = PolitenessState.from_rows(rows)
-    assert st2.bucket(1).interval_secs == 2 * MIN_INTERVAL_SECS
-    assert st2.bucket(2).interval_secs == MIN_INTERVAL_SECS
 
 
 def test_distributed_update_matches_tokenbucket(spark):
@@ -210,25 +199,3 @@ def test_asof_throttle_audit_time_varying_interval(spark):
         (1, 13): (30_000_000, 600),
         (2, 21): (10_000_000, 30),
     }
-
-
-def test_budget_table_audit_flags_only_over_budget(spark):
-    """budget_table_audit (the scale-bench log audit): groups at or under
-    budget pass, groups over it or with no budget row are violations."""
-    from europarl_crawler_spark.plans.politeness import budget_table_audit
-
-    reqs = spark.createDataFrame(
-        [(1, 10, i) for i in range(3)]        # host 10: 3 reqs, budget 3 OK
-        + [(1, 20, i) for i in range(5)]      # host 20: 5 reqs, budget 4 OVER
-        + [(2, 10, i) for i in range(4)]      # epoch 2 host 10: 4 > 3 OVER
-        + [(1, 30, 0)],                       # host 30: no budget row OVER
-        "epoch long, host_hash long, request_id long",
-    )
-    budgets = spark.createDataFrame(
-        [(10, 3), (20, 4)], "host_hash long, budget int"
-    )
-    bad = {
-        (r.epoch, r.host_hash)
-        for r in budget_table_audit(reqs, budgets).collect()
-    }
-    assert bad == {(1, 20), (2, 10), (1, 30)}
