@@ -134,7 +134,8 @@ def decode(payload: bytes, w: int, h: int, fmt: str) -> np.ndarray:
         if parts[0] != b"P6" or len(parts) < 4:
             raise ValueError("ppm: bad magic / truncated header")
         pw, ph = (int(x) for x in parts[1].split())
-        assert (pw, ph) == (w, h), "PPM header/metadata mismatch"
+        if (pw, ph) != (w, h):
+            raise ValueError("ppm: header/metadata mismatch")
         return np.frombuffer(parts[3], dtype=np.uint8).reshape(h, w, 3)
     if fmt == "qraw":
         q = np.frombuffer(payload, dtype=np.uint8).reshape(h, w, 3)
@@ -143,41 +144,35 @@ def decode(payload: bytes, w: int, h: int, fmt: str) -> np.ndarray:
         return ((q.astype(np.uint32) * 255 + 31) // 63).astype(np.uint8)
     if fmt == "png":
         return _png_decode(payload, w, h)
+    # the self-describing containers: their header sets the shape, which
+    # must agree with the (w, h) metadata
     if fmt == "jpeg":
         from . import jpegkit
 
         px = jpegkit.jpeg_decode(payload)
-        assert px.shape == (h, w, 3), "JPEG header/metadata mismatch"
-        return px
-    if fmt == "gif":
+    elif fmt == "gif":
         from . import gifkit
 
         px = gifkit.gif_decode(payload)
-        assert px.shape == (h, w, 3), "GIF header/metadata mismatch"
-        return px
-    if fmt == "webp":
+    elif fmt == "webp":
         from . import webpkit
 
         px = webpkit.webp_decode(payload)
-        assert px.shape == (h, w, 3), "WEBP header/metadata mismatch"
-        return px
-    if fmt == "bmp":
+    elif fmt == "bmp":
         px = _bmp_decode(payload)
-        assert px.shape == (h, w, 3), "BMP header/metadata mismatch"
-        return px
-    if fmt == "tiff":
+    elif fmt == "tiff":
         from . import tiffkit
 
         px = tiffkit.tiff_decode(payload)
-        assert px.shape == (h, w, 3), "TIFF header/metadata mismatch"
-        return px
-    if fmt == "qoi":
+    elif fmt == "qoi":
         from . import qoikit
 
         px = qoikit.qoi_decode(payload)
-        assert px.shape == (h, w, 3), "QOI header/metadata mismatch"
-        return px
-    raise ValueError(f"unknown fmt {fmt!r}")
+    else:
+        raise ValueError(f"unknown fmt {fmt!r}")
+    if px.shape != (h, w, 3):
+        raise ValueError(f"{fmt}: header/metadata mismatch")
+    return px
 
 
 # ---------------------------------------------------------------------------
@@ -300,7 +295,8 @@ def _png_decode(payload: bytes, w: int, h: int) -> np.ndarray:
     pw, ph, depth, ctype, comp, filt, inter = struct.unpack(">IIBBBBB", ihdr)
     if (depth, ctype, comp, filt) != (8, 2, 0, 0) or inter not in (0, 1):
         raise ValueError("png: only 8-bit RGB (color type 2) supported")
-    assert (pw, ph) == (w, h), "PNG header/metadata mismatch"
+    if (pw, ph) != (w, h):
+        raise ValueError("png: header/metadata mismatch")
     raw = zlib.decompress(bytes(idat))
     if inter == 1:
         # Adam7 (ISO 15948 §8.2): seven independently-filtered sub-images,

@@ -20,6 +20,18 @@ replication upsampling — 4:2:0 and 4:2:2 round-trip-tested against our own
 encoder; other integer-ratio layouts (e.g. 4:4:0) ride the same grid
 logic; sampling factors beyond 2 raise cleanly.
 
+Entropy decoding is table-driven, and one reader serves sequential and
+progressive scans alike. Each restart segment is unstuffed once and turned
+into a list of 24-bit windows, one per byte, so the 16 bits at any bit
+position are one list index, a shift and a mask. Each DHT table becomes a
+512-entry list indexed by the next 9 bits, which resolves every code of up
+to 9 bits in one lookup; longer codes fall back to the canonical
+MAXCODE/VALPTR search (T.81 F.2.2.3). The tables are built per decode (a
+few microseconds). A block that reads past its segment's last bit raises
+``ValueError`` ("entropy data exhausted"). The coefficients, and so the
+pixels, equal those of a bit-at-a-time reader; tests/jpeg_reference.py
+keeps that reader and tests/test_jpeg_reference.py compares the two.
+
 Quality ≥ ~97 keeps PSNR ≥ 40 dB even on noise payloads (quant steps → 1,
 residual error is DCT/color-transform rounding) — the serving quality for
 the crawl's lossy-invariant lane; typical web quality (75-90) is supported
@@ -144,14 +156,6 @@ def _build_huffman(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int
             k += 1
         code <<= 1
     return out
-
-
-def _build_decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(BITS, HUFFVAL) → {(length, code): symbol}."""
-    return {
-        (length, code): sym
-        for sym, (code, length) in _build_huffman(bits, vals).items()
-    }
 
 
 class _BitWriter:
@@ -547,37 +551,80 @@ def jpeg_encode_progressive(
     return b"".join(out)
 
 
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
+# ---------------------------------------------------------------------------
+# table-driven entropy reader (shared by sequential and progressive scans)
+# ---------------------------------------------------------------------------
 
-    def _fill(self) -> None:
-        if self.pos >= len(self.data):
-            raise ValueError("jpeg: entropy data exhausted")
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            if self.pos < len(self.data) and self.data[self.pos] == 0x00:
-                self.pos += 1  # unstuff
-            else:
-                raise ValueError("jpeg: unexpected marker in entropy data")
-        self.acc = (self.acc << 8) | b
-        self.nbits += 8
+# Zero bytes appended to every restart segment. One block reads at most
+# 16 + 16 DC bits and 63 × (16 + 15) AC bits (~250 bytes), so a block that
+# runs past the segment's end stays inside the padding, and the
+# ``pos > nbits`` check after every block in ``_decode_scan`` reports it.
+_PAD = 256
 
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
 
-    def read_bits(self, n: int) -> int:
-        v = 0
+def _huffman_lookup(
+    bits: list[int], vals: list[int]
+) -> tuple[list[int], list[int], list[int], list[int]]:
+    """(BITS, HUFFVAL) → (fast, maxcode, valptr, vals) for one DHT table.
+
+    ``fast`` has one entry per 9-bit lookahead: ``(length << 8) | symbol``
+    when a code of at most 9 bits starts there, else 0. Longer codes take
+    the canonical path of T.81 F.2.2.3: the first length ``l`` whose
+    ``l``-bit prefix is ≤ ``maxcode[l]`` ends the code, and its symbol is
+    ``vals[valptr[l] + prefix]`` (``valptr`` already has MINCODE folded
+    in). A table whose counts overflow the code space, or that has fewer
+    values than codes, raises."""
+    if len(vals) < sum(bits):
+        raise ValueError("jpeg: truncated Huffman table")
+    fast = [0] * 512
+    maxcode = [-1] * 17
+    valptr = [0] * 17
+    code = k = 0
+    for length in range(1, 17):
+        n = bits[length - 1]
+        if code + n > 1 << length:
+            raise ValueError("jpeg: bad Huffman table")
+        valptr[length] = k - code
         for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
+            if length <= 9:
+                span = 1 << (9 - length)
+                lo = code << (9 - length)
+                fast[lo : lo + span] = [(length << 8) | vals[k]] * span
+            code += 1
+            k += 1
+        if n:
+            maxcode[length] = code - 1
+        code <<= 1
+    return fast, maxcode, valptr, vals
+
+
+def _segment_windows(segment: bytes) -> tuple[list[int], int]:
+    """Unstuff one restart segment → (windows, nbits). ``windows[i]`` holds
+    bytes i, i+1 and i+2 as one 24-bit int, so the 16 bits at bit position
+    ``p`` are ``(windows[p >> 3] >> (8 - (p & 7))) & 0xFFFF``; ``nbits``
+    counts the segment's real bits (the rest is zero padding)."""
+    data = segment.replace(b"\xff\x00", b"\xff")
+    b = np.frombuffer(data + bytes(_PAD), dtype=np.uint8).astype(np.int64)
+    return ((b[:-2] << 16) | (b[1:-1] << 8) | b[2:]).tolist(), 8 * len(data)
+
+
+def _symbol(win: list[int], pos: int, table) -> tuple[int, int]:
+    """One Huffman symbol at bit ``pos`` → (symbol, bit position after it)."""
+    peek = (win[pos >> 3] >> (8 - (pos & 7))) & 0xFFFF
+    e = table[0][peek >> 7]
+    if e:
+        return e & 0xFF, pos + (e >> 8)
+    _, maxcode, valptr, vals = table
+    for length in range(10, 17):
+        code = peek >> (16 - length)
+        if code <= maxcode[length]:
+            return vals[valptr[length] + code], pos + length
+    raise ValueError("jpeg: invalid Huffman code")
+
+
+def _receive(win: list[int], pos: int, n: int) -> int:
+    """The ``n`` ≤ 16 raw bits at bit ``pos``, unsigned."""
+    return (win[pos >> 3] >> (24 - (pos & 7) - n)) & ((1 << n) - 1)
 
 
 def _extend(v: int, cat: int) -> int:
@@ -607,39 +654,29 @@ def jpeg_comments(body: bytes) -> list[str]:
     return out
 
 
-def _read_symbol(br: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.read_bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("jpeg: invalid Huffman code")
-
-
 def _entropy_segments(body: bytes, pos: int) -> tuple[list[bytes], int]:
     """Slice one scan's entropy-coded data starting at ``pos`` into
     restart-interval segments (split on RST0-7; 0xFF00 stuffing stays for
-    the bit reader to unstuff). Returns (segments, index of the terminating
-    marker's 0xFF)."""
+    ``_segment_windows`` to unstuff). Returns (segments, index of the
+    terminating marker's 0xFF)."""
     segs: list[bytes] = []
     start = i = pos
-    while i < len(body) - 1:
-        if body[i] != 0xFF:
-            i += 1
-            continue
+    while True:
+        i = body.find(b"\xff", i)
+        if i < 0 or i >= len(body) - 1:
+            raise ValueError(
+                "jpeg: entropy data has no terminating marker (truncated)"
+            )
         nxt = body[i + 1]
         if nxt == 0x00:
             i += 2
             continue
+        segs.append(body[start:i])
         if 0xD0 <= nxt <= 0xD7:  # RSTn
-            segs.append(body[start:i])
             i += 2
             start = i
             continue
-        segs.append(body[start:i])
         return segs, i
-    raise ValueError("jpeg: entropy data has no terminating marker (truncated)")
 
 
 def _decode_scan(
@@ -653,7 +690,7 @@ def _decode_scan(
     coefs: list[np.ndarray],
     real_grids: list[tuple[int, int]],
     mcu_dims: tuple[int, int],
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]],
+    huff: dict[tuple[int, int], tuple],
     restart_interval: int,
     progressive: bool,
 ) -> None:
@@ -663,137 +700,160 @@ def _decode_scan(
     MCUs emitting hi×vi blocks per component (4:2:0's 4×Y+Cb+Cr);
     non-interleaved scans walk the component's OWN block grid. Restart
     markers reset the DC predictors and the EOB run and realign to the
-    next segment."""
+    next segment. Each block is decoded in a Python list and written back
+    to its store once."""
     interleaved = len(scan) > 1
+    if progressive and se and interleaved:
+        raise ValueError("jpeg: interleaved progressive AC scan")
     mcuy, mcux = mcu_dims
     if interleaved:
         n_units = mcuy * mcux
     else:
         rows0, cols0 = real_grids[scan[0][0]]
         n_units = rows0 * cols0
+    dc_tabs = {ci: huff[(0, td)] for ci, td, _ in scan} if ss == 0 and ah == 0 else {}
+    ac_tabs = {ci: huff[(1, ta)] for ci, _, ta in scan} if se else {}
+    geom = [(ci, comps[ci][1], comps[ci][2]) for ci, _, _ in scan]
     seg_i = 0
-    br = _BitReader(segments[0])
+    win, nbits = _segment_windows(segments[0])
+    pos = 0
     prev_dc = [0, 0, 0]
     eobrun = 0
     p1, m1 = 1 << al, -1 << al
-
-    def refine_nonzero(block: np.ndarray, k: int) -> None:
-        if br.read_bit() and (int(block[k]) & p1) == 0:
-            block[k] += p1 if block[k] > 0 else m1
 
     for unit in range(n_units):
         if restart_interval and unit and unit % restart_interval == 0:
             seg_i += 1
             if seg_i >= len(segments):
                 raise ValueError("jpeg: missing restart segment")
-            br = _BitReader(segments[seg_i])
+            win, nbits = _segment_windows(segments[seg_i])
+            pos = 0
             prev_dc = [0, 0, 0]
             eobrun = 0
-        blocks: list[tuple[np.ndarray, int, int, int]] = []
         if interleaved:
             my, mx = divmod(unit, mcux)
-            for ci, td, ta in scan:
-                _, hi, vi, _ = comps[ci]
-                for v in range(vi):
-                    for hh in range(hi):
-                        blocks.append(
-                            (coefs[ci][my * vi + v, mx * hi + hh], ci, td, ta)
-                        )
+            blocks = [
+                (ci, my * vi + v, mx * hi + hh)
+                for ci, hi, vi in geom
+                for v in range(vi)
+                for hh in range(hi)
+            ]
         else:
-            ci, td, ta = scan[0]
-            by, bx = divmod(unit, real_grids[ci][1])
-            blocks.append((coefs[ci][by, bx], ci, td, ta))
-        for block, ci, td, ta in blocks:
+            ci = scan[0][0]
+            blocks = [(ci, *divmod(unit, real_grids[ci][1]))]
+        for ci, by, bx in blocks:
+            blk = coefs[ci][by, bx].tolist()
             if ss == 0 and ah == 0:
                 # DC first (progressive) or the DC half of a sequential scan
-                cat = _read_symbol(br, huff[(0, td)])
-                diff = _extend(br.read_bits(cat), cat) if cat else 0
-                prev_dc[ci] += diff
-                block[0] = prev_dc[ci] << al
+                cat, pos = _symbol(win, pos, dc_tabs[ci])
+                if cat > 16:
+                    raise ValueError("jpeg: bad DC category")
+                if cat:
+                    prev_dc[ci] += _extend(_receive(win, pos, cat), cat)
+                    pos += cat
+                blk[0] = prev_dc[ci] << al
             elif ss == 0:  # DC refinement: one raw bit per block
-                if br.read_bit():
-                    block[0] = int(block[0]) | p1
+                if _receive(win, pos, 1):
+                    blk[0] |= p1
+                pos += 1
             if se == 0:
-                continue
-            if not progressive:
+                pass  # a DC-only scan: the block is done
+            elif not progressive:
                 # sequential AC: full band follows the DC in the same ECS
-                ac = huff[(1, ta)]
+                ac = ac_tabs[ci]
+                fast = ac[0]
                 k = 1
                 while k <= se:
-                    rs = _read_symbol(br, ac)
-                    run, size = rs >> 4, rs & 0xF
-                    if rs == 0x00:
-                        break
-                    if rs == 0xF0:
+                    # _symbol and _receive inlined: this loop decodes nearly
+                    # every coefficient of a baseline stream
+                    e = fast[(win[pos >> 3] >> (15 - (pos & 7))) & 0x1FF]
+                    if e:
+                        rs = e & 0xFF
+                        pos += e >> 8
+                    else:
+                        rs, pos = _symbol(win, pos, ac)
+                    size = rs & 0xF
+                    if size:
+                        k += rs >> 4
+                        if k > se:
+                            raise ValueError("jpeg: AC index overflow")
+                        v = (win[pos >> 3] >> (24 - (pos & 7) - size)) & ((1 << size) - 1)
+                        blk[k] = v if v >> (size - 1) else v - (1 << size) + 1
+                        pos += size
+                        k += 1
+                    elif rs == 0xF0:
                         k += 16
-                        continue
-                    k += run
-                    if k > se:
-                        raise ValueError("jpeg: AC index overflow")
-                    block[k] = _extend(br.read_bits(size), size)
-                    k += 1
-                continue
-            if interleaved:
-                raise ValueError("jpeg: interleaved progressive AC scan")
-            ac = huff[(1, ta)]
-            if ah == 0:  # AC first (§G.2.2): values at bit precision al
-                if eobrun > 0:
+                    elif rs == 0x00:
+                        break
+                    else:
+                        raise ValueError("jpeg: bad AC symbol")
+            elif ah == 0:  # AC first (§G.2.2): values at bit precision al
+                if eobrun > 0:  # the block lies in an EOB run: no bits
                     eobrun -= 1
                     continue
+                ac = ac_tabs[ci]
                 k = ss
                 while k <= se:
-                    rs = _read_symbol(br, ac)
+                    rs, pos = _symbol(win, pos, ac)
                     run, size = rs >> 4, rs & 0xF
                     if size == 0:
                         if run != 15:
-                            eobrun = (1 << run) - 1 + (
-                                br.read_bits(run) if run else 0
-                            )
+                            eobrun = (1 << run) - 1 + _receive(win, pos, run)
+                            pos += run
                             break
                         k += 16  # ZRL
                         continue
                     k += run
                     if k > se:
                         raise ValueError("jpeg: AC index overflow")
-                    block[k] = _extend(br.read_bits(size), size) << al
+                    blk[k] = _extend(_receive(win, pos, size), size) << al
+                    pos += size
                     k += 1
             else:  # AC refinement (§G.2.3): corrections + new ±1<<al coeffs
+                ac = ac_tabs[ci]
                 k = ss
                 if eobrun == 0:
                     while k <= se:
-                        rs = _read_symbol(br, ac)
+                        rs, pos = _symbol(win, pos, ac)
                         run, size = rs >> 4, rs & 0xF
                         val = 0
                         if size == 0:
                             if run != 15:
-                                eobrun = (1 << run) + (
-                                    br.read_bits(run) if run else 0
-                                )
+                                eobrun = (1 << run) + _receive(win, pos, run)
+                                pos += run
                                 break  # this block finishes in the EOB pass
                             # ZRL: run of 16 zero-history positions
+                        elif size != 1:
+                            raise ValueError("jpeg: bad AC-refinement symbol")
                         else:
-                            if size != 1:
-                                raise ValueError(
-                                    "jpeg: bad AC-refinement symbol"
-                                )
-                            val = p1 if br.read_bit() else m1
+                            val = p1 if _receive(win, pos, 1) else m1
+                            pos += 1
                         while k <= se:
-                            if block[k] != 0:
-                                refine_nonzero(block, k)
+                            c = blk[k]
+                            if c:  # history coefficient: one correction bit
+                                if _receive(win, pos, 1) and c & p1 == 0:
+                                    blk[k] = c + (p1 if c > 0 else m1)
+                                pos += 1
+                            elif run == 0:
+                                break
                             else:
-                                if run == 0:
-                                    break
                                 run -= 1
                             k += 1
                         if val and k <= se:
-                            block[k] = val
+                            blk[k] = val
                         k += 1
                 if eobrun > 0:
                     while k <= se:
-                        if block[k] != 0:
-                            refine_nonzero(block, k)
+                        c = blk[k]
+                        if c:
+                            if _receive(win, pos, 1) and c & p1 == 0:
+                                blk[k] = c + (p1 if c > 0 else m1)
+                            pos += 1
                         k += 1
                     eobrun -= 1
+            coefs[ci][by, bx] = blk
+            if pos > nbits:
+                raise ValueError("jpeg: entropy data exhausted")
 
 
 @rejects_malformed("jpeg")
@@ -807,7 +867,7 @@ def jpeg_decode(body: bytes) -> np.ndarray:
         raise ValueError("jpeg: missing SOI")
     pos = 2
     qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    huff: dict[tuple[int, int], tuple] = {}
     h = w = 0
     comps: list[tuple[int, int, int, int]] = []  # (id, hi, vi, tq)
     real_grids: list[tuple[int, int]] = []
@@ -846,7 +906,7 @@ def jpeg_decode(body: bytes) -> np.ndarray:
                 bits = list(payload[o + 1 : o + 17])
                 nv = sum(bits)
                 vals = list(payload[o + 17 : o + 17 + nv])
-                huff[(tc, th)] = _build_decode_table(bits, vals)
+                huff[(tc, th)] = _huffman_lookup(bits, vals)
                 o += 17 + nv
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack(">H", payload[:2])
@@ -860,7 +920,11 @@ def jpeg_decode(body: bytes) -> np.ndarray:
                 comps.append((cid, samp >> 4, samp & 0xF, tq))
             hmax = max(c[1] for c in comps)
             vmax = max(c[2] for c in comps)
-            if any(hmax % c[1] or vmax % c[2] for c in comps) or hmax > 2 or vmax > 2:
+            if (
+                any(not c[1] or not c[2] or hmax % c[1] or vmax % c[2] for c in comps)
+                or hmax > 2
+                or vmax > 2
+            ):
                 raise ValueError("jpeg: unsupported sampling-factor layout")
             mcu_dims = (-(-h // (8 * vmax)), -(-w // (8 * hmax)))
             coefs, real_grids = [], []

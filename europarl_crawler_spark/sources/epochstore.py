@@ -117,8 +117,12 @@ class EpochStore:
         return out
 
     def latest(self, table: str) -> int | None:
-        ms = self.manifests(table)
-        return ms[-1]["epoch"] if ms else None
+        """The newest committed epoch, read from the manifest file names
+        (``{epoch:08d}.json``) without parsing any manifest."""
+        mdir = self._mdir(table)
+        if not mdir.is_dir():
+            return None
+        return max((int(p.stem) for p in mdir.glob("*.json")), default=None)
 
     def rollback(self, table: str, to_epoch: int) -> None:
         """Drop every commit after ``to_epoch`` (manifests first, then data)."""

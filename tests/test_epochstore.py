@@ -65,6 +65,24 @@ def test_rollback(spark, store):
     assert store.read("t", spark).first().v == "a"
 
 
+def test_latest_reads_no_manifest(spark, store, monkeypatch):
+    # the engine asks for a table's head dozens of times an epoch; the answer
+    # is the newest manifest's file name, so parsing the chain is O(epochs)
+    # of wasted work
+    for e in (1, 2, 3):
+        store.append("log", _df(spark, [(e, "x")]), e)
+    from europarl_crawler_spark.sources import epochstore
+
+    loads = []
+    real_load = epochstore.json.load
+    monkeypatch.setattr(
+        epochstore.json, "load", lambda f: loads.append(f) or real_load(f)
+    )
+    assert store.latest("log") == 3
+    assert store.latest("missing") is None
+    assert loads == []
+
+
 def test_empty_read_needs_schema(spark, store):
     import pyspark.sql.types as T
 

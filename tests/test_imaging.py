@@ -124,7 +124,7 @@ def test_png_rejects_corruption_and_unsupported():
     payload[40] ^= 0xFF  # flip a byte inside a chunk → CRC failure
     with pytest.raises(ValueError, match="CRC"):
         imaging.decode(bytes(payload), 8, 8, "png")
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="mismatch"):
         imaging.decode(imaging.encode(px, "png"), 9, 8, "png")  # dim mismatch
     gray = _handcraft_png([(0, bytes(8))], 8, 1)  # claims RGB but we rebuild
     # an IHDR claiming grayscale (color type 0) must be refused
@@ -169,8 +169,20 @@ def test_ppm_header():
     px = _img(2, 8, 4)
     payload = imaging.encode(px, "ppm")
     assert payload.startswith(b"P6\n8 4\n255\n")
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="mismatch"):
         imaging.decode(payload, 9, 4, "ppm")  # metadata mismatch caught
+
+
+@pytest.mark.parametrize("fmt", imaging.FORMATS)
+def test_metadata_mismatch_raises_valueerror(fmt):
+    # a (w, h) that disagrees with the payload is a bad payload: ValueError,
+    # which ``python -O`` keeps (it strips asserts) and the extract
+    # dispatchers classify as malformed
+    px = _img(7, 8, 6)
+    body = imaging.encode(px, fmt)
+    assert imaging.decode(body, 8, 6, fmt).shape == (6, 8, 3)
+    with pytest.raises(ValueError):
+        imaging.decode(body, 9, 6, fmt)
 
 
 def test_phash_properties():

@@ -78,7 +78,7 @@ def test_imaging_dispatch_jpeg():
     assert body[:2] == b"\xff\xd8"
     dec = imaging.decode(body, 16, 16, "jpeg")
     assert imaging.psnr(px, dec) >= 40.0
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="mismatch"):
         imaging.decode(body, 8, 8, "jpeg")  # metadata mismatch is loud
 
 
@@ -95,6 +95,21 @@ def test_rejects_unsupported_sof_kinds():
         jpegkit.jpeg_decode(bytes(body))
     with pytest.raises(ValueError, match="SOI"):
         jpegkit.jpeg_decode(b"notajpeg")
+
+
+def test_rejects_zero_sampling_factor_and_overfull_huffman_table():
+    body = jpegkit.jpeg_encode(_smooth(h=8, w=8), quality=85)
+    sof = body.find(b"\xff\xc0")
+    zero = bytearray(body)
+    zero[sof + 11] = 0x10  # luma sampling 1×0 (the MCU grid divides by it)
+    with pytest.raises(ValueError, match="sampling"):
+        jpegkit.jpeg_decode(bytes(zero))
+    dht = body.find(b"\xff\xc4")
+    over = bytearray(body)
+    # three 1-bit DC codes (two fit), same value count: BITS[1] 0→3, BITS[3] 5→2
+    over[dht + 5], over[dht + 7] = 3, 2
+    with pytest.raises(ValueError, match="bad Huffman table"):
+        jpegkit.jpeg_decode(bytes(over))
 
 
 def test_dc_differential_across_blocks():

@@ -82,5 +82,5 @@ def test_imaging_dispatch_qoi():
     body = imaging.encode(px, "qoi")
     assert np.array_equal(imaging.decode(body, 16, 16, "qoi"), px)
     assert "qoi" in imaging.LOSSLESS
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="mismatch"):
         imaging.decode(body, 8, 8, "qoi")

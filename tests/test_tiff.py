@@ -144,5 +144,5 @@ def test_imaging_dispatch_tiff():
     body = imaging.encode(px, "tiff")
     assert np.array_equal(imaging.decode(body, 16, 16, "tiff"), px)
     assert "tiff" in imaging.LOSSLESS
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="mismatch"):
         imaging.decode(body, 8, 8, "tiff")  # metadata mismatch guard

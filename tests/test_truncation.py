@@ -47,6 +47,17 @@ STRICT = [
     ("raw", imaging.encode(IMG, "raw"), lambda b: imaging.decode(b, 10, 12, "raw")),
     ("qraw", imaging.encode(IMG, "qraw"), lambda b: imaging.decode(b, 10, 12, "qraw")),
     ("jpeg", jpegkit.jpeg_encode(IMG, quality=90), jpegkit.jpeg_decode),
+    (
+        "jpeg_420",
+        jpegkit.jpeg_encode(IMG, quality=90, subsampling="420"),
+        jpegkit.jpeg_decode,
+    ),
+    ("jpeg_prog", jpegkit.jpeg_encode_progressive(IMG, quality=90), jpegkit.jpeg_decode),
+    (
+        "jpeg_prog_rst",
+        jpegkit.jpeg_encode_progressive(IMG, quality=90, restart_interval=2),
+        jpegkit.jpeg_decode,
+    ),
     ("gif", gifkit.gif_encode(IMG), gifkit.gif_decode),
     ("webp", webpkit.webp_encode(IMG), webpkit.webp_decode),
     ("avi", avikit.avi_encode(FRAMES, fps=10), avikit.avi_decode),
@@ -114,11 +125,12 @@ def test_mp3_truncation_valueerror_or_whole_frames():
 def test_flipped_byte_never_escapes_valueerror():
     # single-byte corruption (not just truncation) must also surface as
     # ValueError or a clean decode — never a raw parser error
-    body = imaging.encode(IMG, "png")
-    for pos in range(0, len(body), 7):
-        mutated = bytearray(body)
-        mutated[pos] ^= 0xFF
-        try:
-            imaging.decode(bytes(mutated), 10, 12, "png")
-        except (ValueError, AssertionError):
-            pass
+    for fmt in ("png", "jpeg"):
+        body = imaging.encode(IMG, fmt)
+        for pos in range(0, len(body), 7):
+            mutated = bytearray(body)
+            mutated[pos] ^= 0xFF
+            try:
+                imaging.decode(bytes(mutated), 10, 12, fmt)
+            except ValueError:
+                pass
