@@ -912,7 +912,7 @@ def q_j14_range_ip_asn(spark, sf_dir):
 
 def q_store_zorder_scan(spark, sf_dir):
     """Z-order maintenance + stat-pruned scan (operators/zorder.py,
-    sources/epochstore.py:rewrite_sorted/scan): the Iceberg
+    sources/epochstore.py:rewrite_sorted + predicated read): the Iceberg
     rewrite_data_files(sort_order => 'zorder(x, y)') analog. Orders land
     in an epoch table, get rewritten into 16 files clustered by the
     Morton interleave of two full-range scrambled dims, and a 1/8-space
@@ -943,7 +943,7 @@ def q_store_zorder_scan(spark, sf_dir):
             "1/8-space slice"
         )
     return (
-        store.scan("orders", spark, "x", 0, 8191)
+        store.read("orders", spark, predicates=[("x", 0, 8191)])
         .groupBy(F.shiftright(F.col("y"), 13).alias("y_band"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),

@@ -83,7 +83,7 @@ def main(argv=None) -> dict:
         help="rewrite one table clustered by the Morton interleave of two "
         "columns (Iceberg rewrite_data_files sort strategy zorder(x, y): "
         "makes the manifests' per-file min/max a usable index on BOTH "
-        "columns for EpochStore.scan)",
+        "columns for predicated EpochStore.read calls)",
     )
     zo.add_argument("--table", required=True)
     zo.add_argument("--x-col", required=True)

@@ -9,8 +9,8 @@ other's min-max stats useless — every file spans the full range of the
 second column. Interleaving the bits of both (z = x₀y₀x₁y₁…) gives every
 file a small RECTANGLE of the (x, y) grid, so per-file min/max footer
 stats prune scans filtered on either column (or both). That pruning is
-what `EpochStore.scan` consumes — at 10^10 rows the difference between
-"open 40 of 4,000 footer-pruned files" and "open all".
+what a predicated `EpochStore.read` consumes — at 10^10 rows the
+difference between "open 40 of 4,000 footer-pruned files" and "open all".
 
 Everything here is exact int64 algebra (the classic mask-spread ladder),
 expressed twice — Catalyst Columns and a textual DuckDB mirror — so the

@@ -7,9 +7,11 @@ DB lock bits into snapshot isolation (T7), and graceful-shutdown cleanup into
 ``shutdown_compact`` (D4).
 
 Resumability: every table commit is an EpochStore manifest; `CrawlEngine`
-restarts from the max committed epoch of the ``epochs`` ledger — any epoch is
-re-runnable because merges are keyed (idempotent) and the requests log is
-keyed by (url_id, epoch).
+restarts from the max committed epoch of the ``epochs`` ledger. A restart
+after a fully committed epoch continues cleanly. A restart after a partial
+epoch does not yet: the commits written before the crash sit above the
+ledger, and the re-run epoch's ``requests`` commit conflicts with the one
+already there (ROADMAP item 3).
 
 Determinism: with a fixed ``now`` per epoch, the whole crawl — frontier
 membership, drain order, politeness state — is a pure function of
@@ -141,8 +143,8 @@ class CrawlEngine:
         full-table scan, the load is a meta.json read. Any stamp mismatch
         (epochs committed since) falls back to the build; the sketch sizes
         at load 0.21 (~4.7× headroom) so per-epoch increments fit for many
-        epochs between rebuilds. The shard count comes from the
-        frontier's manifest row count (``shard_count_policy``), recomputed
+        epochs between rebuilds. The shard count comes from the row count
+        of the frontier's live manifests (``shard_count_policy``), recomputed
         on every build, so an overflowing frontier re-shards itself.
 
         The sketch is a :class:`~europarl_crawler_spark.functions.cuckoo.
@@ -154,7 +156,7 @@ class CrawlEngine:
         loaded = self._load_sketch()
         if loaded is not None:
             return loaded
-        rows = sum(m["rows"] for m in self.store.manifests("frontier"))
+        rows = sum(m["rows"] for m in self.store.live_manifests("frontier"))
         return CuckooShardStore.build(
             frontier,
             self._sketch_dir() / "store",
@@ -222,9 +224,12 @@ class CrawlEngine:
         url_state = self._url_state()
 
         # 1. frontier growth: probe URLs for unchecked days (O3/J5/J6/T12) and
-        #    doc URLs for confirmed days (J1/J2/J3/O1) — both already
-        #    anti-joined against the frontier on their natural keys. All
-        #    derivations read the O(urls) url_state summary, never the
+        #    doc URLs for confirmed days (J1/J2/J3/O1). Combos are
+        #    anti-joined against the frontier's (rule_id, date_id); probes
+        #    are not — a probe day still pending in the frontier is
+        #    generated again every epoch. The seen gate (step 2) drops
+        #    those, and it is what makes the frontier commit insert-only.
+        #    All derivations read the O(urls) url_state summary, never the
         #    unbounded request log.
         # fresh-probe calendar read with the publication-lag cutoff pushed
         # to the store: files whose date range is wholly inside the lag
@@ -257,22 +262,24 @@ class CrawlEngine:
         #    run) means the plain anti-join.
         if self._cuckoo is None:
             # restart path: the shutdown checkpoint's stamp can only
-            # match BEFORE this epoch's merge advances the chain head
+            # match BEFORE this epoch's append advances the chain head
             self._cuckoo = self._load_sketch()
         fresh = anti_join_seen(new_urls, frontier, self._cuckoo, hash_col="url_id")
         if self._cuckoo is not None:
             fresh = fresh.persist()
         # the frontier keeps its OWN commit chain (like documents):
         # shutdown_compact's commit advances it past the crawl clock, and a
-        # resumed crawl must commit above BOTH
+        # resumed crawl must commit above BOTH. The gate's exact anti-join
+        # leaves only url_ids the frontier lacks, so growth is a keyed
+        # insert-only append: reads need no latest-wins window for it.
         f_e = max(e, (self.store.latest("frontier") or 0) + 1)
-        m = self.store.merge("frontier", fresh, f_e, keys=["url_id"])
+        m = self.store.append("frontier", fresh, f_e, keys=["url_id"])
         if self._cuckoo is not None:
             # incremental sketch maintenance: only THIS epoch's genuinely-new
             # url_ids (post exact anti-join) cross to the driver — O(delta),
             # bounded by the prefetch limits, never an O(frontier) rebuild.
             # Overflow (headroom exhausted) drops the sketch; it is rebuilt
-            # below from the merged frontier.
+            # below from the grown frontier.
             try:
                 self._cuckoo.add_many(np.unique(_url_ids(fresh)))
             except RuntimeError:
@@ -281,7 +288,7 @@ class CrawlEngine:
         frontier = self._read("frontier", S.FRONTIER)
         if self._cuckoo is None and self.store.latest("frontier") is not None:
             # covers first build (epoch 1), rebuild-after-overflow, AND
-            # restart into a steady-state epoch that merged zero new urls
+            # restart into a steady-state epoch that appended zero new urls
             self._cuckoo = self._build_cuckoo(frontier)
 
         # 3. pending = frontier rows without a terminal outcome — covers both
@@ -335,7 +342,8 @@ class CrawlEngine:
             hint_broadcast=est_hosts * BUCKET_CAPACITY <= thr,
         )
         # documents has its own commit chain: reset/reextract (D9) may have
-        # advanced it past the crawl clock — never commit at-or-below it
+        # advanced it past the crawl clock — never commit at-or-below it.
+        # A merge, not an append: a recrawl re-extracts the same image_id.
         doc_e = max(e, (self.store.latest("documents") or 0) + 1)
         self.store.merge("documents", docs, doc_e, keys=["image_id"])
 
@@ -433,8 +441,8 @@ class CrawlEngine:
             "status_code", F.lit(200)
         )
         # reextract touches every URL ever fetched OK — gate the metadata/key
-        # broadcasts on the frontier's manifest row-count upper bound
-        est_urls = sum(m["rows"] for m in self.store.manifests("frontier"))
+        # broadcasts on the live frontier's manifest row count
+        est_urls = sum(m["rows"] for m in self.store.live_manifests("frontier"))
         docs = extract_documents(
             fetched_like, self.web, self.rules,
             hint_broadcast=est_urls <= self.config.broadcast_threshold_rows,

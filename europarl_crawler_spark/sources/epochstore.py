@@ -11,11 +11,14 @@ about 10^10-row scale:
     {root}/{table}/_manifests/{N:08d}.json     ← commit record (written LAST —
                                                   the atomic commit point)
 
-- ``merge(table, df, epoch, keys)`` appends a delta; readers resolve
-  latest-wins per key with ``row_number() over (partition by keys order by
-  _epoch desc)`` — the same merge-on-read strategy Iceberg v2 position/equality
-  deletes use. A full-table rewrite per epoch (the naive emulation) would be
-  O(table) per epoch and is exactly what we avoid.
+- ``merge(table, df, epoch, keys)`` appends an upsert delta — the same
+  merge-on-read strategy Iceberg v2 equality deletes use; a full-table
+  rewrite per epoch would be O(table) per epoch and is what we avoid.
+- one resolve rule: a ``base`` commit is key-unique and an ``append``
+  commit never repeats a live key, so only ``delta`` commits (``merge``,
+  ``delete``) can. ``read`` runs the latest-wins ``row_number() over
+  (partition by keys order by _epoch desc)`` only when the live chain
+  holds a delta; a base plus keyed appends reads as a plain scan.
 - deletes are tombstone rows (``_deleted = true``) folded out at read time —
   used for the reference's shutdown ``drop_uncrawled_urls`` (reference:
   europarl/db/url.py:139-156, SURVEY D4).
@@ -30,12 +33,11 @@ about 10^10-row scale:
   epoch. Equivalent to the reference's "only fully-processed work commits"
   shutdown protocol (SURVEY T7).
 
-On a real cluster this module is swapped for ``MERGE INTO`` on Iceberg; the
-call sites (plans/epoch.py) only use merge/append/read/latest, which map 1:1.
-The exact production statements — DDL, MERGE, maintenance CALLs, time travel,
-changelog — live in ``icebridge.py`` (emit_* pure functions + an executing
-drop-in class), pinned by tests/test_icebridge.py including a Spark-parser
-parse check, so the migration is a config change, not a rewrite.
+On a real cluster this module is swapped for Iceberg tables: the call sites
+(plans/epoch.py) use only merge/append/overwrite/read/latest, which map to
+``MERGE INTO``, ``INSERT INTO``, ``INSERT OVERWRITE`` and snapshot reads.
+The crawl loop's writes keep the contracts above, so an Iceberg port needs
+no change to the engine.
 """
 
 from __future__ import annotations
@@ -160,7 +162,7 @@ class EpochStore:
         # row count + per-file column min/max from parquet FOOTERS —
         # metadata-only, no Spark job. The stats ride in the manifest the
         # way Iceberg manifests carry per-data-file bounds, and are what
-        # ``scan`` prunes with.
+        # predicated reads prune with.
         import pyarrow.parquet as pq
 
         rows = 0
@@ -232,12 +234,21 @@ class EpochStore:
             table, keys_df.select(*keys).withColumn("_deleted", F.lit(True)), epoch, "delta", keys
         )
 
-    def append(self, table: str, df: DataFrame, epoch: int) -> dict:
-        """Append-only table (the requests crawl log, SURVEY D11)."""
-        return self._commit(table, df, epoch, "append", None)
+    def append(
+        self, table: str, df: DataFrame, epoch: int, keys: list[str] | None = None
+    ) -> dict:
+        """Insert rows (the requests crawl log, SURVEY D11). Without
+        ``keys`` the table is a log and duplicates are kept. With ``keys``
+        this is an insert-only commit to a keyed table: the caller
+        guarantees that ``df`` is key-unique and repeats no live key, so
+        ``read`` needs no latest-wins window for it. A repeated key is
+        not hidden — both rows read back."""
+        return self._commit(table, df, epoch, "append", keys)
 
     def overwrite(self, table: str, df: DataFrame, epoch: int, keys: list[str] | None = None) -> dict:
-        """Full base snapshot (initial load / compaction output)."""
+        """Full base snapshot (initial load / compaction output). With
+        ``keys`` the caller guarantees that ``df`` is key-unique: ``read``
+        runs no latest-wins window over a base."""
         return self._commit(table, df, epoch, "base", keys)
 
     def compact(
@@ -258,8 +269,9 @@ class EpochStore:
         out = resolved.drop("_epoch", "_deleted")
         if target_partitions:
             if keys:
-                # repartition(n, keys) alone can be ELIDED: the resolve's
-                # row_number window already hash-partitions by the same keys,
+                # repartition(n, keys) alone can be ELIDED: when a delta is
+                # live, the resolve's row_number window already
+                # hash-partitions by the same keys, so
                 # EnsureRequirements drops the "redundant" user exchange, and
                 # AQE is then free to coalesce the window's internal exchange
                 # below n (observed: 1 file at shuffle.partitions=2). The
@@ -288,8 +300,8 @@ class EpochStore:
         'zorder(x, y)')`` analog: compact the table into ``n_files`` files
         clustered by the Morton interleave of (x, y), so the per-file
         min/max bounds the commit records become a usable index on BOTH
-        columns (consumed by ``scan``). Bounds are the layout's fixed grid
-        spec, not data-sniffed — see operators/zorder.py."""
+        columns (consumed by predicated reads). Bounds are the layout's
+        fixed grid spec, not data-sniffed — see operators/zorder.py."""
         from ..operators import zorder
 
         resolved = self.read(table, spark).drop("_epoch", "_deleted")
@@ -303,38 +315,19 @@ class EpochStore:
         )
         return self.overwrite(table, out, epoch, self._keys(table))
 
-    # -- stat-pruned scans ---------------------------------------------------
+    # -- stat-pruned reads ---------------------------------------------------
 
-    def prune_files(
-        self,
-        table: str,
-        col: str,
-        lo=None,
-        hi=None,
-        as_of: int | None = None,
-        extra: list[tuple] | None = None,
-    ) -> tuple[list[str], int]:
-        """(surviving data-file paths, total live files) for the predicate
-        ``lo <= col <= hi`` — conjoined with any ``extra`` (col, lo, hi)
-        predicates — against the manifests' per-file bounds: the Iceberg
-        manifest-pruning step as a visible number. A file is dropped if
-        ANY conjunct's range misses its bounds (conjunction prunes the
-        intersection — with a Z-ordered layout, an (x AND y) probe keeps
-        only the files whose RECTANGLE overlaps both ranges, strictly
-        fewer than either dimension alone). Files without a recorded
-        bound for a column survive that conjunct (pruning must never be
-        the component that drops a row)."""
-        preds = [(col, lo, hi)] + [tuple(e) for e in (extra or [])]
+    def live_manifests(self, table: str, as_of: int | None = None) -> list[dict]:
+        """The live chain at snapshot ``as_of`` (default: latest): the newest
+        base and every commit after it, or every commit when there is no
+        base. One manifest parse; its summed ``rows`` is the table's row
+        count whenever the chain holds no delta."""
+        ms = [m for m in self.manifests(table) if as_of is None or m["epoch"] <= as_of]
+        base = max((i for i, m in enumerate(ms) if m["kind"] == "base"), default=0)
+        return ms[base:]
+
+    def _prune(self, table: str, live: list[dict], preds: list[tuple]) -> tuple[list[str], int]:
         preds = [(c, _stat_value(l), _stat_value(h)) for c, l, h in preds]
-        ms = [
-            m
-            for m in self.manifests(table)
-            if as_of is None or m["epoch"] <= as_of
-        ]
-        base_idx = max(
-            (i for i, m in enumerate(ms) if m["kind"] == "base"), default=None
-        )
-        live = ms if base_idx is None else ms[base_idx:]
         kept, total = [], 0
         for m in live:
             ddir = self.root / table / f"epoch={m['epoch']}"
@@ -357,27 +350,27 @@ class EpochStore:
                     kept.append(str(p))
         return kept, total
 
-    def scan(
+    def prune_files(
         self,
         table: str,
-        spark: SparkSession,
         col: str,
         lo=None,
         hi=None,
         as_of: int | None = None,
         extra: list[tuple] | None = None,
-    ) -> DataFrame:
-        """``read`` + filter ``lo <= col <= hi`` (AND any ``extra``
-        (col, lo, hi) conjuncts), but files whose footer bounds exclude
-        the range are never opened. Since r5 this is a thin alias for
-        ``read(..., predicates=...)`` — pruning is part of the ordinary
-        read path, not an opt-in API."""
-        return self.read(
-            table,
-            spark,
-            as_of=as_of,
-            predicates=[(col, lo, hi)] + [tuple(e) for e in (extra or [])],
-        )
+    ) -> tuple[list[str], int]:
+        """(surviving data-file paths, total live files) for the predicate
+        ``lo <= col <= hi`` — conjoined with any ``extra`` (col, lo, hi)
+        predicates — against the manifests' per-file bounds: the Iceberg
+        manifest-pruning step as a visible number. A file is dropped if
+        ANY conjunct's range misses its bounds (conjunction prunes the
+        intersection — with a Z-ordered layout, an (x AND y) probe keeps
+        only the files whose RECTANGLE overlaps both ranges, strictly
+        fewer than either dimension alone). Files without a recorded
+        bound for a column survive that conjunct (pruning must never be
+        the component that drops a row)."""
+        preds = [(col, lo, hi)] + [tuple(e) for e in (extra or [])]
+        return self._prune(table, self.live_manifests(table, as_of), preds)
 
     def expire(self, table: str) -> dict:
         """Iceberg ``expire_snapshots`` analog: physically drop every epoch
@@ -440,72 +433,57 @@ class EpochStore:
         ``predicates`` — optional conjuncts ``[(col, lo, hi), ...]``
         (either bound may be None) pushed into the read: the residual
         filter ALWAYS applies (exactness never depends on stats), and when
-        pruning is sound — append tables, or keyed tables with no live
-        deltas past the newest base — files whose footer bounds exclude
+        the live chain holds no delta, files whose footer bounds exclude
         the range are never opened (the Iceberg manifest-pruning step in
-        the ordinary read path, r4 VERDICT next-round #8). With live keyed
-        deltas the prune is skipped: dropping a file before latest-wins
-        could resurrect a superseded row. Every predicated read records
-        ``self.last_prune = {table, kept, total}`` so callers/tests can
-        see the file skipping actually happen."""
+        the ordinary read path). With a live delta the prune is skipped:
+        dropping a file before latest-wins could resurrect a superseded
+        row. Every predicated read records ``self.last_prune = {table,
+        kept, total}`` so callers/tests can see the file skipping happen.
+
+        One path: choose the files (the pruned files, or every live epoch
+        directory), read them once, run the latest-wins window only if a
+        keyed delta is live, drop tombstones, apply the residual filter."""
         wm = self._expiry_watermark(table)
         if as_of is not None and wm is not None and as_of < wm:
             raise ValueError(
                 f"snapshot {as_of} of {table} was expired (watermark {wm})"
             )
-        ms = [m for m in self.manifests(table) if as_of is None or m["epoch"] <= as_of]
-        if not ms:
+        live = self.live_manifests(table, as_of)
+        if not live:
             if schema is None:
                 raise ValueError(f"table {table} is empty and no schema given")
             return spark.createDataFrame([], schema)
-        # start from the newest base (full snapshot); apply later deltas only
-        base_idx = max(
-            (i for i, m in enumerate(ms) if m["kind"] == "base"), default=None
-        )
-        live = ms if base_idx is None else ms[base_idx:]
-        keys = self._keys(table)
-        need_resolve = keys and any(m["kind"] in ("delta", "base") for m in live)
-        pred = None
+        keys = next((m["keys"] for m in reversed(live) if m["keys"]), None)
+        resolve = keys is not None and any(m["kind"] == "delta" for m in live)
+        paths = [str(self.root / table / f"epoch={m['epoch']}") for m in live]
+        kept = total = None
         if predicates:
-            pred = F.lit(True)
-            for c, l, h in predicates:
-                if l is not None:
-                    pred = pred & (F.col(c) >= F.lit(l))
-                if h is not None:
-                    pred = pred & (F.col(c) <= F.lit(h))
-        keyed_deltas = keys and any(m["kind"] == "delta" for m in live)
-        if pred is not None and not keyed_deltas:
-            first, *extra = list(predicates)
-            kept, total = self.prune_files(
-                table, first[0], first[1], first[2], as_of=as_of, extra=extra
-            )
-            self.last_prune = {"table": table, "kept": len(kept), "total": total}
-            if not kept:
-                empty = self.read(table, spark, schema=schema, as_of=as_of)
-                return empty.filter(pred).limit(0)
-            # no latest-wins window here: no live deltas ⇒ at most one
-            # version per key already (live is a single base, or an
-            # append-only chain) — the same reasoning the pre-r5 scan used
-            df = spark.read.option("mergeSchema", "true").parquet(*kept)
-            return df.filter(~F.col("_deleted")).filter(pred)
-        if pred is not None:
+            if not resolve:
+                kept, total = self._prune(table, live, predicates)
+                paths = kept or paths  # nothing kept: the dirs give the schema
             self.last_prune = {
                 "table": table,
-                "kept": None,  # prune skipped: live keyed deltas
-                "total": None,
+                "kept": None if kept is None else len(kept),
+                "total": total,
             }
-        parts = [str(self.root / table / f"epoch={m['epoch']}") for m in live]
         # tombstone deltas carry only key columns → schemas differ per epoch
-        df = spark.read.option("mergeSchema", "true").parquet(*parts)
-        if need_resolve:
+        df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        if kept == []:
+            df = df.limit(0)
+        if resolve:
             w = Window.partitionBy(*keys).orderBy(F.desc("_epoch"))
             df = (
                 df.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-        out = df.filter(~F.col("_deleted"))
-        return out.filter(pred) if pred is not None else out
+        df = df.filter(~F.col("_deleted"))
+        for c, l, h in predicates or ():
+            if l is not None:
+                df = df.filter(F.col(c) >= F.lit(l))
+            if h is not None:
+                df = df.filter(F.col(c) <= F.lit(h))
+        return df
 
     def snapshot_diff(
         self,

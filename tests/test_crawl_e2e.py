@@ -58,6 +58,20 @@ def test_frontier_unique_and_seen(world):
     assert n >= frontier.select("url_hash").distinct().count()
 
 
+def test_frontier_grows_by_keyed_appends(world):
+    """Frontier growth is insert-only: every commit of the toy crawl is a
+    keyed append, and the rows they wrote equal the distinct url_ids the
+    read holds — the benchmark's ``frontier_unique`` check. ``read`` runs
+    no latest-wins window over appends, so a url_id the seen gate let
+    through twice would show here."""
+    spark = world["eng"].spark
+    store = world["store"]
+    ms = [m for m in store.manifests("frontier") if m["epoch"] <= 4]
+    assert [(m["kind"], m["keys"]) for m in ms] == [("append", ["url_id"])] * 4
+    distinct = store.read("frontier", spark, as_of=4).select("url_id").distinct().count()
+    assert sum(m["rows"] for m in ms) == distinct
+
+
 def test_politeness_budget_enforced(world):
     spark = world["eng"].spark
     requests = world["store"].read("requests", spark)

@@ -3,6 +3,8 @@ UPDATE, SURVEY D1–D4), tombstones, compaction, time travel, resume."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from europarl_crawler_spark.sources.epochstore import EpochStore
@@ -295,3 +297,112 @@ def test_snapshot_diff_requires_keys(spark, store):
     store.append("log", _df(spark, [(1, "a")]), 1)
     with pytest.raises(ValueError):
         store.snapshot_diff("log", spark, 1, 1)
+
+
+# -- the resolve rule: only a live delta can repeat a key ----------------------
+
+# (epoch, kind, rows) commits of a keyed table; a delete commit's rows are the
+# tombstoned keys' (k, v) pairs, v ignored
+CHAINS = {
+    "base": [(1, "base", [(1, "a"), (2, "b"), (3, "c")])],
+    "base+appends": [
+        (1, "base", [(1, "a"), (2, "b")]),
+        (2, "append", [(3, "c"), (4, "d")]),
+        (3, "append", [(5, "e")]),
+    ],
+    "base+appends+merge": [
+        (1, "base", [(1, "a"), (2, "b")]),
+        (2, "append", [(3, "c"), (4, "d")]),
+        (3, "merge", [(2, "B"), (4, "D"), (6, "f")]),
+    ],
+    "deltas+tombstone": [
+        (1, "merge", [(1, "a"), (2, "b"), (3, "c")]),
+        (2, "merge", [(2, "B"), (4, "d")]),
+        (3, "delete", [(3, None), (4, None)]),
+    ],
+}
+
+
+def _commit_chain(spark, store, chain):
+    for e, kind, rows in chain:
+        df = _df(spark, rows)
+        if kind == "base":
+            store.overwrite("t", df, e, keys=["k"])
+        elif kind == "append":
+            store.append("t", df, e, keys=["k"])
+        elif kind == "merge":
+            store.merge("t", df, e, keys=["k"])
+        else:
+            store.delete("t", df, e, keys=["k"])
+
+
+def _latest_wins(chain):
+    state = {}
+    for _, kind, rows in chain:
+        if kind == "base":
+            state = {}
+        for k, v in rows:
+            if kind == "delete":
+                state.pop(k, None)
+            else:
+                state[k] = v
+    return set(state.items())
+
+
+def _has_window(df) -> bool:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.search(r"\bWindow\b", plan) is not None
+
+
+@pytest.mark.parametrize("shape", sorted(CHAINS))
+def test_read_resolves_latest_wins_only_over_live_deltas(spark, store, shape):
+    chain = CHAINS[shape]
+    _commit_chain(spark, store, chain)
+    want = _latest_wins(chain)
+    has_delta = any(kind in ("merge", "delete") for _, kind, _ in chain)
+
+    full = store.read("t", spark)
+    assert {(r.k, r.v) for r in full.collect()} == want
+    assert _has_window(full) == has_delta
+
+    part = store.read("t", spark, predicates=[("k", 2, 4)])
+    assert {(r.k, r.v) for r in part.collect()} == {
+        (k, v) for k, v in want if 2 <= k <= 4
+    }
+    assert _has_window(part) == has_delta
+    # the prune runs exactly when no window does
+    assert (store.last_prune["kept"] is None) == has_delta
+
+
+def test_keyed_append_repeating_a_live_key_is_not_hidden(spark, store):
+    # an insert-only commit that breaks its promise reads back both rows:
+    # the store does not paper over a writer's duplicate key
+    store.overwrite("t", _df(spark, [(1, "a"), (2, "b")]), 1, keys=["k"])
+    store.append("t", _df(spark, [(2, "B")]), 2, keys=["k"])
+    got = sorted((r.k, r.v) for r in store.read("t", spark).collect())
+    assert got == [(1, "a"), (2, "B"), (2, "b")]
+    assert store.manifests("t")[-1]["keys"] == ["k"]
+
+
+def test_live_manifests_start_at_newest_base(spark, store):
+    store.overwrite("t", _df(spark, [(1, "a"), (2, "b"), (3, "c")]), 1, keys=["k"])
+    store.append("t", _df(spark, [(4, "d"), (5, "e")]), 2, keys=["k"])
+    assert sum(m["rows"] for m in store.live_manifests("t")) == 5
+    store.overwrite("t", _df(spark, [(i, "x") for i in range(4)]), 3, keys=["k"])
+    live = store.live_manifests("t")
+    assert [m["epoch"] for m in live] == [3]
+    assert sum(m["rows"] for m in live) == 4 == store.read("t", spark).count()
+    assert sum(m["rows"] for m in store.live_manifests("t", as_of=2)) == 5
+
+
+def test_read_parses_the_manifest_chain_once(spark, store, monkeypatch):
+    _commit_chain(spark, store, CHAINS["base+appends"])
+    calls = []
+    real = EpochStore.manifests
+    monkeypatch.setattr(
+        EpochStore, "manifests", lambda self, t: calls.append(t) or real(self, t)
+    )
+    store.read("t", spark)
+    store.read("t", spark, predicates=[("k", 2, 4)])
+    assert calls == ["t", "t"]

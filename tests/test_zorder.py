@@ -1,5 +1,6 @@
-"""operators/zorder.py + EpochStore.rewrite_sorted/scan/prune_files —
-Z-order layout, footer-stat recording, and manifest-pruned scans."""
+"""operators/zorder.py + EpochStore.rewrite_sorted/prune_files and
+predicated reads — Z-order layout, footer-stat recording, and
+manifest-pruned reads."""
 
 from __future__ import annotations
 
@@ -92,7 +93,7 @@ def test_rewrite_sorted_clusters_and_prunes(spark):
     # a narrow x slice must prune files AND agree with the unpruned read
     kept, total = store.prune_files("pts", "x", 0, 99)
     assert 0 < len(kept) < total
-    got = sorted(r.id for r in store.scan("pts", spark, "x", 0, 99).collect())
+    got = sorted(r.id for r in store.read("pts", spark, predicates=[("x", 0, 99)]).collect())
     want = sorted(
         r.id
         for r in store.read("pts", spark).filter(F.col("x").between(0, 99)).collect()
@@ -110,7 +111,7 @@ def test_scan_keyed_deltas_fall_back_without_resurrection(spark):
         "t", spark.createDataFrame([(1, 999)], "k long, v long"), 2, keys=["k"]
     )
     got = sorted(
-        (r.k, r.v) for r in store.scan("t", spark, "v", 0, 100).collect()
+        (r.k, r.v) for r in store.read("t", spark, predicates=[("v", 0, 100)]).collect()
     )
     assert got == [(2, 20)]
 
@@ -121,7 +122,7 @@ def test_scan_append_table_prunes_across_epochs(spark):
     store.append("log", spark.createDataFrame([(i,) for i in range(1000, 1100)], "v long").coalesce(1), 2)
     kept, total = store.prune_files("log", "v", 1000, 2000)
     assert total == 2 and len(kept) == 1
-    assert store.scan("log", spark, "v", 1000, 2000).count() == 100
+    assert store.read("log", spark, predicates=[("v", 1000, 2000)]).count() == 100
 
 
 def test_conjunction_prunes_strictly_more(spark):
@@ -139,8 +140,8 @@ def test_conjunction_prunes_strictly_more(spark):
     assert len(kept_xy) < len(kept_x) < total
     got = sorted(
         r.id
-        for r in store.scan(
-            "pts", spark, "x", 0, 249, extra=[("y", 0, 249)]
+        for r in store.read(
+            "pts", spark, predicates=[("x", 0, 249), ("y", 0, 249)]
         ).collect()
     )
     want = sorted(
@@ -179,7 +180,7 @@ def test_timestamp_prune_boundary_tz_normalized(spark):
     the aware string sorts greater and _cmp_gt would wrongly prune the
     file. _stat_value now normalizes both sides to naive UTC: a predicate
     whose hi equals the file's max (and whose lo equals the min) must keep
-    the file, and scan() must return the boundary rows."""
+    the file, and the predicated read must return the boundary rows."""
     import datetime as dt
 
     store = EpochStore(tempfile.mkdtemp(prefix="tsprune-"))
@@ -196,7 +197,7 @@ def test_timestamp_prune_boundary_tz_normalized(spark):
     # exact-boundary predicate: naive bounds equal to the file's min/max
     kept, total = store.prune_files("t", "ts", lo, hi)
     assert total == 1 and len(kept) == 1
-    assert store.scan("t", spark, "ts", lo, hi).count() == 2
+    assert store.read("t", spark, predicates=[("ts", lo, hi)]).count() == 2
     # and a genuinely disjoint window still prunes
     kept2, _ = store.prune_files(
         "t", "ts", dt.datetime(2025, 1, 1), dt.datetime(2025, 1, 2)

@@ -12,12 +12,14 @@ plan regression (a lost broadcast hint, a filter that stopped pushing, a
 Python stage sneaking into a JVM lane) shows up as a diff of this table
 rather than a benchmark surprise two rounds later.
 
-``--engine`` audits two crawl-engine stages instead, over the toy simulated
-web (10 days): ``extract_documents`` over one drained batch, and the URL-seen
-gate (``anti_join_seen`` over a toy frontier, pre-filtered by the shard store
-the engine builds for it). A change that moves the decode back onto the
-content store's scan partitions, or a seen probe that regresses to a
-broadcast UDF, shows up as a diff of those rows.
+``--engine`` audits three crawl-engine stages instead, over the toy
+simulated web (10 days): ``extract_documents`` over one drained batch, the
+URL-seen gate (``anti_join_seen`` over a toy frontier, pre-filtered by the
+shard store the engine builds for it), and ``EpochStore.read`` of a toy
+frontier grown by one keyed append. A change that moves the decode back
+onto the content store's scan partitions, a seen probe that regresses to a
+broadcast UDF, or a frontier read that runs the latest-wins window again
+shows up as a diff of those rows.
 
 Usage:
     python tools/audit_plans.py [query ...]       # default: all queries
@@ -47,6 +49,7 @@ def features(plan: str) -> dict:
     ]
     return {
         "exchange": len(re.findall(r"Exchange ", plan)),
+        "window": len(re.findall(r"\bWindow ", plan)),
         "bhj": plan.count("BroadcastHashJoin"),
         "smj": plan.count("SortMergeJoin"),
         "py": (
@@ -72,13 +75,13 @@ def executed_plan(df) -> str:
 
 def row(name: str, f: dict) -> str:
     return (
-        f"| {name} | {f['exchange']} | {f['bhj']} | {f['smj']} | {f['py']} "
-        f"| {f['scans']} ({f['pushed']}) | {f['wscg']} |"
+        f"| {name} | {f['exchange']} | {f['window']} | {f['bhj']} | {f['smj']} "
+        f"| {f['py']} | {f['scans']} ({f['pushed']}) | {f['wscg']} |"
     )
 
 
-HEADER = """| query | exchanges | bcast join | smj | py stages | scans (pushed) | wscg |
-|---|---|---|---|---|---|---|"""
+HEADER = """| query | exchanges | windows | bcast join | smj | py stages | scans (pushed) | wscg |
+|---|---|---|---|---|---|---|---|"""
 
 
 def toy_batch(spark, root: str):
@@ -134,6 +137,21 @@ def engine_seen_gate(spark, web, drained, root: str):
     return anti_join_seen(drained, frontier, sketch, hash_col="url_id")
 
 
+def engine_frontier_read(spark, drained, root: str):
+    """``store.read("frontier")`` as ``run_epoch`` sees it after one epoch
+    of growth: a keyed base of half the toy batch plus a keyed append of
+    the other half."""
+    from pyspark.sql import functions as F
+
+    from europarl_crawler_spark.sources.epochstore import EpochStore
+
+    store = EpochStore(root + "/frontier-store")
+    even = F.pmod("url_id", F.lit(2)) == 0
+    store.overwrite("frontier", drained.filter(even), 1, keys=["url_id"])
+    store.append("frontier", drained.filter(~even), 2, keys=["url_id"])
+    return store.read("frontier", spark)
+
+
 def engine_main(spark) -> None:
     import tempfile
 
@@ -153,6 +171,10 @@ never shuffle. `tests/test_extract_balance.py` pins both properties.
 shard-local cuckoo probe, a py stage that appears once in each branch of
 the fresh ∪ rechecked union (2 py stages); only the maybe-seen slice
 reaches the exact anti-join. `tests/test_cuckoo.py` pins the probe's shape.
+
+`store.read("frontier")`: a keyed base plus a keyed append is a plain scan
+with no latest-wins window; only a live `merge`/`delete` delta brings the
+window back. `tests/test_epochstore.py` pins the rule.
 """)
     print(HEADER)
     with tempfile.TemporaryDirectory() as root:
@@ -160,6 +182,7 @@ reaches the exact anti-join. `tests/test_cuckoo.py` pins the probe's shape.
         for name, df in (
             ("extract_documents", engine_extract(spark, web, drained)),
             ("seen gate (anti_join_seen)", engine_seen_gate(spark, web, drained, root)),
+            ('store.read("frontier")', engine_frontier_read(spark, drained, root)),
         ):
             print(row(name, features(executed_plan(df))))
 
@@ -186,6 +209,8 @@ Generated by `python tools/audit_plans.py`. How to read it:
   counted as extra). Queries composing several lanes (e.g. the precision
   invariants, which run an LSH pass AND an exact pass) legitimately carry
   many.
+- **windows** — `Window` operators. A store read carries the latest-wins
+  window only while its table has a live `merge`/`delete` delta.
 - **bcast join / smj** — runtime join strategies. smj > 0 means a join's
   build side outgrew broadcast; on these dimension-sized sides that is a
   regression signal. Exceptions: `dedup_lsh_precision`'s single smj is the
