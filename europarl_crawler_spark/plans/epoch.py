@@ -35,6 +35,8 @@ from ..sources import schema as S
 from ..sources.epochstore import EpochStore
 from .fetch import extract_documents, requests_log, simulate_requests
 from .frontier import (
+    TERMINAL,
+    crawl_state,
     priority_drain,
     recrawl_candidates,
     session_day_probes,
@@ -47,8 +49,6 @@ from .politeness import (
     status_flags_agg,
 )
 from .robots import apply_robots_gate
-
-TERMINAL = (200, 404)
 
 # fold url_state deltas into a base snapshot when this many commits stack up
 URL_STATE_COMPACT_EVERY = 32
@@ -124,8 +124,8 @@ class CrawlEngine:
 
     def _url_state(self) -> DataFrame:
         """Per-URL crawl-state summary: (terminal = ever 200/404, has_ok =
-        ever 200, last_ok_at/epoch). The frontier's terminal anti-join,
-        probe/confirm derivations, and the recrawl lane read THIS instead of
+        ever 200, last_ok_at/epoch). Joined to the frontier (``crawl_state``),
+        it answers every per-URL question of the epoch instead of
         re-aggregating the append-only requests log — per-epoch cost is
         O(urls fetched), bounded, instead of O(requests ever), unbounded.
 
@@ -201,13 +201,12 @@ class CrawlEngine:
         return self.store.latest("epochs") or 0
 
     def _estimated_hosts(self) -> int:
-        """Host-count estimate from the politeness table's latest manifest
-        (one row per seen host) — metadata only, no Spark job."""
-        ms = self.store.manifests("politeness")
-        return ms[-1]["rows"] if ms else 0
+        """Host-count estimate from the politeness table's live chain — one
+        base, one row per seen host: a single manifest parse, no Spark job."""
+        return sum(m["rows"] for m in self.store.live_manifests("politeness"))
 
-    def _read(self, table: str, schema) -> DataFrame:
-        return self.store.read(table, self.spark, schema=schema).drop(
+    def _read(self, table: str, schema, **kw) -> DataFrame:
+        return self.store.read(table, self.spark, schema=schema, **kw).drop(
             "_epoch", "_deleted"
         )
 
@@ -222,15 +221,14 @@ class CrawlEngine:
         days = self._read("session_days", S.SESSION_DAYS)
         frontier = self._read("frontier", S.FRONTIER)
         url_state = self._url_state()
+        state = crawl_state(frontier, url_state)
 
         # 1. frontier growth: probe URLs for unchecked days (O3/J5/J6/T12) and
-        #    doc URLs for confirmed days (J1/J2/J3/O1). Combos are
-        #    anti-joined against the frontier's (rule_id, date_id); probes
-        #    are not — a probe day still pending in the frontier is
-        #    generated again every epoch. The seen gate (step 2) drops
-        #    those, and it is what makes the frontier commit insert-only.
-        #    All derivations read the O(urls) url_state summary, never the
-        #    unbounded request log.
+        #    doc URLs for confirmed days (J1/J2/J3/O1), read off the crawl
+        #    state. Combos are anti-joined against the frontier's (rule_id,
+        #    date_id); probes are not — a probe day still pending in the
+        #    frontier is generated again every epoch. The seen gate (step 2)
+        #    drops those, and it is what makes the frontier commit insert-only.
         # fresh-probe calendar read with the publication-lag cutoff pushed
         # to the store: files whose date range is wholly inside the lag
         # window are pruned at the manifest level (EpochStore.read
@@ -238,21 +236,15 @@ class CrawlEngine:
         # this epoch's stats). Retry keeps the full calendar (see
         # session_day_probes docstring).
         cutoff = now.date() - timedelta(days=self.config.probe_offset_days)
-        days_fresh = self.store.read(
-            "session_days",
-            spark,
-            schema=S.SESSION_DAYS,
-            predicates=[("dates", None, cutoff)],
-        ).drop("_epoch", "_deleted")
+        days_fresh = self._read(
+            "session_days", S.SESSION_DAYS, predicates=[("dates", None, cutoff)]
+        )
         days_prune = dict(getattr(self.store, "last_prune", {}) or {})
         probes = session_day_probes(
-            spark, days, url_state, frontier, self.prefetch_limit, e,
-            now_date=now.date(), offset_days=self.config.probe_offset_days,
-            fresh_source=days_fresh,
+            spark, days, days_fresh, state, self.prefetch_limit, e,
+            now.date(), offset_days=self.config.probe_offset_days,
         )
-        combos = todo_combos(
-            spark, days, url_state, frontier, self.prefetch_limit, e
-        )
+        combos = todo_combos(spark, days, state, self.prefetch_limit, e)
         new_urls = probes.unionByName(combos)
 
         # 2. URL-seen gate on the hashed key: exact anti-join, pre-filtered
@@ -264,7 +256,7 @@ class CrawlEngine:
             # restart path: the shutdown checkpoint's stamp can only
             # match BEFORE this epoch's append advances the chain head
             self._cuckoo = self._load_sketch()
-        fresh = anti_join_seen(new_urls, frontier, self._cuckoo, hash_col="url_id")
+        fresh = anti_join_seen(new_urls, state, self._cuckoo, hash_col="url_id")
         if self._cuckoo is not None:
             fresh = fresh.persist()
         # the frontier keeps its OWN commit chain (like documents):
@@ -285,23 +277,23 @@ class CrawlEngine:
             except RuntimeError:
                 self._cuckoo = None
             fresh.unpersist()
+        # the grown frontier: with a pinned schema the re-read runs no job
         frontier = self._read("frontier", S.FRONTIER)
+        state = crawl_state(frontier, url_state)
         if self._cuckoo is None and self.store.latest("frontier") is not None:
             # covers first build (epoch 1), rebuild-after-overflow, AND
             # restart into a steady-state epoch that appended zero new urls
             self._cuckoo = self._build_cuckoo(frontier)
 
-        # 3. pending = frontier rows without a terminal outcome — covers both
-        #    never-fetched and dead-letter retries (T6: 408/460/429/5xx stay
-        #    eligible) — plus the O8 recrawl lane: terminal-200 docs whose age
-        #    hits the spaced-refresh schedule re-enter at recrawl priority
-        #    (after all fresh work; reference downloader.py:39-68).
-        terminal = url_state.filter(F.col("terminal")).select("url_id")
-        pending = frontier.join(terminal, "url_id", "left_anti")
+        # 3. pending = state rows without a terminal outcome — never fetched
+        #    (null) or dead-letter retries (T6: 408/460/429/5xx stay eligible)
+        #    — plus the O8 recrawl lane: terminal-200 docs whose age hits the
+        #    spaced-refresh schedule re-enter at recrawl priority (after all
+        #    fresh work; reference downloader.py:39-68).
+        pending = state.filter(~F.col("terminal").eqNullSafe(True))
+        pending = pending.select(*S.FRONTIER.fieldNames())
         if self.config.recrawl_enabled:
-            pending = pending.unionByName(
-                recrawl_candidates(frontier, url_state, now.date())
-            )
+            pending = pending.unionByName(recrawl_candidates(state, now.date()))
         if self.robots is not None:
             pending = apply_robots_gate(pending, self.robots)
 
@@ -327,13 +319,13 @@ class CrawlEngine:
         fetched = simulate_requests(drained, self.web, e, now).persist()
         self.store.append("requests", requests_log(fetched), e)
         # url_state delta: this epoch's outcomes summarized per URL, folded
-        # at read. Every K-th epoch commits the fold of the stored deltas and
-        # this one as a base instead, so reads stay O(urls)+O(K deltas).
+        # at read. Every K-th epoch commits the fold of the epoch's url_state
+        # frame and this delta as a base instead (refolding a max fold is
+        # exact), so reads stay O(urls)+O(K deltas).
         delta = _url_state_delta(fetched)
         if e % URL_STATE_COMPACT_EVERY == 0:
-            stored = self._read("url_state", S.URL_STATE)
             self.store.overwrite(
-                "url_state", _fold_url_state(stored.unionByName(delta)), e
+                "url_state", _fold_url_state(url_state.unionByName(delta)), e
             )
         else:
             self.store.append("url_state", delta, e)
@@ -459,9 +451,9 @@ class CrawlEngine:
         # commit above both the crawl clock and the frontier's own chain
         # (repeated shutdowns / post-shutdown crawls advance the latter)
         e = max(self.current_epoch(), self.store.latest("frontier") or 0) + 1
-        frontier = self._read("frontier", S.FRONTIER)
-        fetched_ids = self._url_state().select("url_id")
-        uncrawled = frontier.join(fetched_ids, "url_id", "left_anti")
+        state = crawl_state(self._read("frontier", S.FRONTIER), self._url_state())
+        # a null terminal ⇔ no url_state row ⇔ never requested
+        uncrawled = state.filter(F.col("terminal").isNull())
         if self._cuckoo is not None:
             # the deletable-sketch payoff (reference deletes seen rows,
             # db/url.py:139-156): evict the dropped urls from the cuckoo
@@ -479,9 +471,9 @@ class CrawlEngine:
                 self._cuckoo.delete_many(np.unique(ids))
             else:
                 self._cuckoo = None
+        crawled = state.filter(F.col("terminal").isNotNull())
         self.store.overwrite(
-            "frontier", frontier.join(fetched_ids, "url_id", "left_semi"), e,
-            keys=["url_id"],
+            "frontier", crawled.select(*S.FRONTIER.fieldNames()), e, keys=["url_id"]
         )
         # post-eviction sketch == resolved frontier: checkpoint it stamped
         # with that commit so the next run loads instead of rescanning the

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rules import rules_df, url_expr
 from ..functions.urlkit import host_hash_expr, salt_expr, url_hash_expr
+from ..sources import schema as S
 
 SESSION_DAY_RULE_ID = 1  # rules_df position of "session_day"
 TERMINAL = (200, 404)  # terminal probe statuses (reference db/sessionDay.py:95)
@@ -131,7 +132,14 @@ def adaptive_refresh(
     return out.withColumn("due", F.col("next_due") <= F.lit(ref_date))
 
 
-def recrawl_candidates(frontier: DataFrame, url_state: DataFrame, now_date) -> DataFrame:
+def crawl_state(frontier: DataFrame, url_state: DataFrame) -> DataFrame:
+    """Every frontier row with its URL's ``url_state`` summary — the one
+    frame the epoch's per-URL questions read. A null ``terminal`` means
+    never fetched: a summary row's ``terminal`` is never null."""
+    return frontier.join(url_state, "url_id", "left")
+
+
+def recrawl_candidates(state: DataFrame, now_date) -> DataFrame:
     """O8 wiring: terminal-200 doc URLs re-enter pending when their
     session-date age matches the spaced-refresh schedule (reference
     downloader.py:39-68 — the standalone downloader's daily recrawl pass).
@@ -139,13 +147,8 @@ def recrawl_candidates(frontier: DataFrame, url_state: DataFrame, now_date) -> D
     Guards: doc lanes only (the checker never re-probes terminal days),
     at most one recrawl per calendar day (``last 200 fetch < today`` — the
     reference runs the downloader daily), and the recrawl band orders after
-    all fresh work. Scale shape: the schedule predicate prunes the frontier
-    BEFORE the state join; ``url_state`` is the O(urls) crawl-state summary
-    (plans/epoch.py), not the unbounded request log — no window, no collect."""
-    eligible = frontier.filter(F.col("rule_id") != SESSION_DAY_RULE_ID).filter(
-        spaced_refresh_keep_expr(F.datediff(F.lit(now_date), F.col("dates")))
-    )
-    last_ok = url_state.filter(F.col("has_ok")).select("url_id", "last_ok_at")
+    all fresh work. Scale shape: filters over the crawl state
+    (``crawl_state``) — no join of its own, no window, no collect."""
     # "last 200 fetch was before today" compared as INSTANTS against today's
     # UTC midnight — to_date(last_ok_at) would evaluate in the session
     # timezone and shift the guard by a day on a non-UTC cluster (ADVICE r2);
@@ -154,12 +157,13 @@ def recrawl_candidates(frontier: DataFrame, url_state: DataFrame, now_date) -> D
         now_date.year, now_date.month, now_date.day, tzinfo=timezone.utc
     )
     return (
-        eligible.join(last_ok, "url_id")
-        .filter(F.col("last_ok_at") < F.lit(midnight_utc))
+        state.filter(F.col("rule_id") != SESSION_DAY_RULE_ID)
+        .filter(spaced_refresh_keep_expr(F.datediff(F.lit(now_date), F.col("dates"))))
+        .filter(F.col("has_ok") & (F.col("last_ok_at") < F.lit(midnight_utc)))
         .withColumn(
             "priority", recrawl_priority_expr("dates", "rule_id").cast("long")
         )
-        .drop("last_ok_at")
+        .select(*S.FRONTIER.fieldNames())
     )
 
 
@@ -186,24 +190,22 @@ def frontier_columns(cand: DataFrame, epoch: int, priority: F.Column) -> DataFra
 def session_day_probes(
     spark: SparkSession,
     days: DataFrame,
-    url_state: DataFrame,
-    frontier: DataFrame,
+    fresh_source: DataFrame,
+    state: DataFrame,
     limit: int,
     epoch: int,
-    now_date=None,
+    now_date,
     offset_days: int = 30,
-    fresh_source: DataFrame | None = None,
 ) -> DataFrame:
     """The unchecked-days batch (O3): fresh ∪ retry, probed newest-first.
 
-    ``fresh_source`` — optional pre-pruned view of ``days`` for the FRESH
-    lane only (the engine passes a store read with the ``dates <= cutoff``
-    predicate pushed to the manifest level, so calendar files wholly
-    inside the publication-lag window are never opened). The cutoff filter
-    below still applies — pruning is file skipping, never the exactness
-    mechanism. The retry lane keeps the FULL calendar: a probed day
-    predates some past cutoff but a widened ``offset_days`` could move
-    today's cutoff behind it, and retries must never silently vanish.
+    ``fresh_source`` — the FRESH lane's view of ``days``: the engine's
+    store read with ``dates <= cutoff`` pushed to the manifests, so files
+    wholly inside the publication-lag window are never opened. The cutoff
+    filter below still applies — pruning is file skipping, never the
+    exactness mechanism. The retry lane keeps the FULL calendar: a widened
+    ``offset_days`` could move today's cutoff behind a probed day, and
+    retries must never silently vanish.
 
     fresh  = days never probed (J5 anti join) AND older than
              ``now − offset_days`` (the reference's publication-lag guard:
@@ -218,24 +220,23 @@ def session_day_probes(
     Final order = dates DESC (the reference pops the ASC-sorted batch from the
     tail, O4) with url_hash tie-break.
 
-    ``url_state`` is the per-URL crawl-state summary (a row exists iff the
-    URL was ever fetched; ``terminal`` ⇔ ever 200/404) — O(urls), not the
-    request log.
+    ``state`` is the crawl state (``crawl_state``): a probe was fetched iff
+    its ``terminal`` is not null, and ``terminal`` ⇔ ever 200/404.
     """
-    probe_state = frontier.filter(
-        F.col("rule_id") == SESSION_DAY_RULE_ID
-    ).select("url_id", "dates").join(url_state, "url_id")
+    probe_state = state.filter(
+        (F.col("rule_id") == SESSION_DAY_RULE_ID) & F.col("terminal").isNotNull()
+    )
     probed_days = probe_state.select("dates").distinct()
     terminal_days = (
         probe_state.filter(F.col("terminal")).select("dates").distinct()
     )
-    fresh_days = (fresh_source if fresh_source is not None else days).join(
-        probed_days, "dates", "left_anti"
+    cutoff = now_date - timedelta(days=offset_days)
+    fresh = (
+        fresh_source.join(probed_days, "dates", "left_anti")
+        .filter(F.col("dates") <= F.lit(cutoff))
+        .orderBy(F.desc("dates"))
+        .limit(max(limit - 1, 0))
     )
-    if now_date is not None:
-        cutoff = now_date - timedelta(days=offset_days)
-        fresh_days = fresh_days.filter(F.col("dates") <= F.lit(cutoff))
-    fresh = fresh_days.orderBy(F.desc("dates")).limit(max(limit - 1, 0))
     retry = (
         days.join(probed_days, "dates", "left_semi")
         .join(terminal_days, "dates", "left_anti")
@@ -249,13 +250,11 @@ def session_day_probes(
     return frontier_columns(cand, epoch, probe_priority_expr("dates"))
 
 
-def confirmed_days(url_state: DataFrame, frontier: DataFrame) -> DataFrame:
-    """Days whose session-day probe returned 200 (J4 join chain) — derived
-    from the O(urls) crawl-state summary (``has_ok`` ⇔ ever 200)."""
+def confirmed_days(state: DataFrame) -> DataFrame:
+    """Days whose session-day probe returned 200 (J4 join chain) — read
+    off the crawl state (``has_ok`` ⇔ ever 200, null if never fetched)."""
     return (
-        frontier.filter(F.col("rule_id") == SESSION_DAY_RULE_ID)
-        .select("url_id", "dates")
-        .join(url_state.filter(F.col("has_ok")).select("url_id"), "url_id")
+        state.filter((F.col("rule_id") == SESSION_DAY_RULE_ID) & F.col("has_ok"))
         .select("dates")
         .distinct()
     )
@@ -264,8 +263,7 @@ def confirmed_days(url_state: DataFrame, frontier: DataFrame) -> DataFrame:
 def todo_combos(
     spark: SparkSession,
     days: DataFrame,
-    url_state: DataFrame,
-    frontier: DataFrame,
+    state: DataFrame,
     limit: int,
     epoch: int,
 ) -> DataFrame:
@@ -275,11 +273,9 @@ def todo_combos(
     rules = rules_df(spark, active_only=True).filter(
         F.col("rule_id") != SESSION_DAY_RULE_ID
     )
-    conf = confirmed_days(url_state, frontier).join(
-        days.select("date_id", "dates"), "dates"
-    )
+    conf = confirmed_days(state).join(days.select("date_id", "dates"), "dates")
     cand = conf.crossJoin(F.broadcast(rules)).join(
-        frontier.select("rule_id", "date_id"), ["rule_id", "date_id"], "left_anti"
+        state.select("rule_id", "date_id"), ["rule_id", "date_id"], "left_anti"
     )
     batch = cand.orderBy(
         F.desc("dates"), F.asc("rule_id")

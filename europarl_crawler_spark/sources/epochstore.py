@@ -90,6 +90,16 @@ def _cmp_gt(a, b) -> bool:
         return False
 
 
+def _latest_wins(df: DataFrame, chain: list[dict]) -> DataFrame:
+    """The newest row per key of ``chain``'s rows, windowed only when the
+    chain holds a ``delta`` (merge/delete): no other commit repeats a key."""
+    if not any(m["kind"] == "delta" for m in chain):
+        return df
+    keys = next(m["keys"] for m in reversed(chain) if m["keys"])
+    w = Window.partitionBy(*keys).orderBy(F.desc("_epoch"))
+    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+
 class CommitConflictError(RuntimeError):
     """Optimistic-concurrency failure: another writer advanced the table's
     manifest chain (or committed this exact epoch) between this commit's
@@ -320,11 +330,20 @@ class EpochStore:
     def live_manifests(self, table: str, as_of: int | None = None) -> list[dict]:
         """The live chain at snapshot ``as_of`` (default: latest): the newest
         base and every commit after it, or every commit when there is no
-        base. One manifest parse; its summed ``rows`` is the table's row
-        count whenever the chain holds no delta."""
-        ms = [m for m in self.manifests(table) if as_of is None or m["epoch"] <= as_of]
-        base = max((i for i, m in enumerate(ms) if m["kind"] == "base"), default=0)
-        return ms[base:]
+        base. Its summed ``rows`` is the table's row count whenever the
+        chain holds no delta. Parses only the live chain, newest first.
+        Superseded commits stay on disk for time travel (``budget_audit``
+        reads each epoch's ``politeness`` snapshot) until ``maintenance_job
+        expire`` drops them."""
+        live = []
+        for p in sorted(self._mdir(table).glob("*.json"), reverse=True):
+            if as_of is not None and int(p.stem) > as_of:
+                continue
+            with open(p) as f:
+                live.append(json.load(f))
+            if live[-1]["kind"] == "base":
+                break
+        return live[::-1]
 
     def _prune(self, table: str, live: list[dict], preds: list[tuple]) -> tuple[list[str], int]:
         preds = [(c, _stat_value(l), _stat_value(h)) for c, l, h in preds]
@@ -412,16 +431,14 @@ class EpochStore:
     # -- read path ------------------------------------------------------------
 
     def _keys(self, table: str) -> list[str] | None:
-        for m in reversed(self.manifests(table)):
-            if m["keys"]:
-                return m["keys"]
-        return None
+        live = self.live_manifests(table)
+        return next((m["keys"] for m in reversed(live) if m["keys"]), None)
 
     def read(
         self,
         table: str,
         spark: SparkSession,
-        schema: T.StructType | None = None,
+        schema: T.StructType | str | None = None,
         as_of: int | None = None,
         predicates: list[tuple] | None = None,
     ) -> DataFrame:
@@ -442,7 +459,8 @@ class EpochStore:
 
         One path: choose the files (the pruned files, or every live epoch
         directory), read them once, run the latest-wins window only if a
-        keyed delta is live, drop tombstones, apply the residual filter."""
+        keyed delta is live, drop tombstones, apply the residual filter.
+        A given ``schema`` is pinned on the reader: no inference job."""
         wm = self._expiry_watermark(table)
         if as_of is not None and wm is not None and as_of < wm:
             raise ValueError(
@@ -453,12 +471,10 @@ class EpochStore:
             if schema is None:
                 raise ValueError(f"table {table} is empty and no schema given")
             return spark.createDataFrame([], schema)
-        keys = next((m["keys"] for m in reversed(live) if m["keys"]), None)
-        resolve = keys is not None and any(m["kind"] == "delta" for m in live)
         paths = [str(self.root / table / f"epoch={m['epoch']}") for m in live]
         kept = total = None
         if predicates:
-            if not resolve:
+            if not any(m["kind"] == "delta" for m in live):
                 kept, total = self._prune(table, live, predicates)
                 paths = kept or paths  # nothing kept: the dirs give the schema
             self.last_prune = {
@@ -466,18 +482,19 @@ class EpochStore:
                 "kept": None if kept is None else len(kept),
                 "total": total,
             }
-        # tombstone deltas carry only key columns → schemas differ per epoch
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        # tombstone deltas carry only key columns: a pinned schema reads the
+        # rest as null, inference merges the per-epoch file schemas
+        if schema is not None:
+            if isinstance(schema, str):
+                schema = T.StructType.fromDDL(schema)
+            pinned = T.StructType([*schema.fields]).add("_epoch", T.IntegerType())
+            reader = spark.read.schema(pinned.add("_deleted", T.BooleanType()))
+        else:
+            reader = spark.read.option("mergeSchema", "true")
+        df = reader.parquet(*paths)
         if kept == []:
             df = df.limit(0)
-        if resolve:
-            w = Window.partitionBy(*keys).orderBy(F.desc("_epoch"))
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        df = df.filter(~F.col("_deleted"))
+        df = _latest_wins(df, live).filter(~F.col("_deleted"))
         for c, l, h in predicates or ():
             if l is not None:
                 df = df.filter(F.col(c) >= F.lit(l))
@@ -542,11 +559,11 @@ class EpochStore:
         epochs wrote.
 
         Scale shape: reads ONLY the delta directories in the window
-        (manifest-pruned — no scan of the base), one window per key within
-        the window for latest-wins. Raises if the window crosses a ``base``
-        snapshot (compaction rewrites every row, so 'what changed' is no
-        longer answerable from data files — the same rule Iceberg's
-        incremental read enforces for overwrite snapshots).
+        (manifest-pruned — no scan of the base), latest-wins by the same
+        rule as ``read``. Raises if the window crosses a ``base`` snapshot
+        (compaction rewrites every row, so 'what changed' is no longer
+        answerable from data files — the same rule Iceberg's incremental
+        read enforces for overwrite snapshots).
         """
         wm = self._expiry_watermark(table)
         if wm is not None and since < wm:
@@ -570,15 +587,7 @@ class EpochStore:
                 "not change-preserving; read from the compacted epoch instead"
             )
         parts = [str(self.root / table / f"epoch={m['epoch']}") for m in ms]
-        df = spark.read.option("mergeSchema", "true").parquet(*parts)
-        keys = self._keys(table)
-        if keys:
-            w = Window.partitionBy(*keys).orderBy(F.desc("_epoch"))
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+        df = _latest_wins(spark.read.option("mergeSchema", "true").parquet(*parts), ms)
         return df.withColumn(
             "_change",
             F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")),

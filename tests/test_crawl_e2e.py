@@ -8,7 +8,7 @@ caption equality — input_hint), and checkpoint resume.
 
 from __future__ import annotations
 
-from datetime import date, datetime, timezone
+from datetime import date, datetime, timedelta, timezone
 
 import numpy as np
 import pytest
@@ -291,6 +291,79 @@ def test_url_state_commits_on_crawl_clock(spark, tmp_path, monkeypatch):
 
     want = ep._fold_url_state(ep._url_state_delta(store.read("requests", spark)))
     assert rows(eng._url_state()) == rows(want)
+
+
+@pytest.fixture(scope="module")
+def traced_reads(spark, tmp_path_factory):
+    """A 3-epoch toy crawl whose url_state compacts every 2nd epoch, with
+    every ``EpochStore.read`` recorded per epoch as (table, jobs it ran)."""
+    from europarl_crawler_spark.plans import epoch as ep
+
+    root = tmp_path_factory.mktemp("reads")
+    days = session_days_df(spark, start=date(2019, 7, 2), n_days=8)
+    simulated_web(spark, days).write.parquet(str(root / "web"))
+    web = spark.read.parquet(str(root / "web"))
+    store = EpochStore(root / "store")
+    eng = CrawlEngine(spark, store, web, prefetch_limit=50, epoch_secs=600.0)
+    eng.bootstrap(days)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    reads: list[tuple[str, int]] = []
+    real_read = EpochStore.read
+
+    def counted(self, table, *a, **kw):
+        j0 = int(dag.nextJobId())
+        out = real_read(self, table, *a, **kw)
+        reads.append((table, int(dag.nextJobId()) - j0))
+        return out
+
+    per_epoch = []
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ep, "URL_STATE_COMPACT_EVERY", 2)
+        mp.setattr(EpochStore, "read", counted)
+        for i in range(3):
+            reads.clear()
+            eng.run_epoch(START + timedelta(seconds=600.0 * i))
+            per_epoch.append(list(reads))
+    return dict(store=store, eng=eng, reads=per_epoch)
+
+
+def test_run_epoch_reads_each_table_once_without_jobs(traced_reads):
+    """One crawl-state frame and schema-pinned reads: an epoch reads
+    url_state once, the frontier before and after growth, the calendar
+    whole and cutoff-pruned, and politeness once — and no read starts a
+    Spark job, on a compaction epoch (2) as on an append epoch."""
+    from collections import Counter
+
+    store = traced_reads["store"]
+    assert [m["kind"] for m in store.manifests("url_state")] == [
+        "append", "base", "append",
+    ]
+    for reads in traced_reads["reads"]:
+        assert Counter(t for t, _ in reads) == {
+            "session_days": 2, "frontier": 2, "url_state": 1, "politeness": 1,
+        }
+        assert [j for _, j in reads] == [0] * len(reads)
+
+
+def test_politeness_reads_parse_only_the_live_manifest(traced_reads, monkeypatch):
+    """run_epoch overwrites politeness every epoch; the superseded
+    snapshots stay on disk for time travel, but reading the table and the
+    host estimate parse only the newest one."""
+    from europarl_crawler_spark.sources import epochstore
+
+    store, eng = traced_reads["store"], traced_reads["eng"]
+    snapshots = store.manifests("politeness")
+    assert len(snapshots) == 3
+    loads = []
+    real_load = epochstore.json.load
+    monkeypatch.setattr(
+        epochstore.json, "load", lambda f: loads.append(f) or real_load(f)
+    )
+    store.read("politeness", eng.spark)
+    assert len(loads) == 1
+    loads.clear()
+    assert eng._estimated_hosts() == snapshots[-1]["rows"] > 0
+    assert len(loads) == 1
 
 
 def test_politeness_gap_audit_detects_and_clears(spark):

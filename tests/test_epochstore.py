@@ -396,13 +396,82 @@ def test_live_manifests_start_at_newest_base(spark, store):
     assert sum(m["rows"] for m in store.live_manifests("t", as_of=2)) == 5
 
 
+def _count_json_loads(monkeypatch) -> list:
+    from europarl_crawler_spark.sources import epochstore
+
+    loads = []
+    real_load = epochstore.json.load
+    monkeypatch.setattr(
+        epochstore.json, "load", lambda f: loads.append(f) or real_load(f)
+    )
+    return loads
+
+
 def test_read_parses_the_manifest_chain_once(spark, store, monkeypatch):
     _commit_chain(spark, store, CHAINS["base+appends"])
-    calls = []
-    real = EpochStore.manifests
-    monkeypatch.setattr(
-        EpochStore, "manifests", lambda self, t: calls.append(t) or real(self, t)
-    )
+    n_live = len(store.live_manifests("t"))
+    loads = _count_json_loads(monkeypatch)
     store.read("t", spark)
+    assert len(loads) == n_live
+    loads.clear()
     store.read("t", spark, predicates=[("k", 2, 4)])
-    assert calls == ["t", "t"]
+    assert len(loads) == n_live
+
+
+def test_live_manifests_parse_only_the_live_chain(spark, store, monkeypatch):
+    # three superseded commits below the newest base are never opened
+    store.append("t", _df(spark, [(1, "a")]), 1, keys=["k"])
+    store.overwrite("t", _df(spark, [(1, "a")]), 2, keys=["k"])
+    store.merge("t", _df(spark, [(1, "b")]), 3, keys=["k"])
+    store.overwrite("t", _df(spark, [(2, "c")]), 4, keys=["k"])
+    store.append("t", _df(spark, [(3, "d")]), 5, keys=["k"])
+    loads = _count_json_loads(monkeypatch)
+    assert [m["epoch"] for m in store.live_manifests("t")] == [4, 5]
+    assert len(loads) == 2
+    loads.clear()
+    # time travel skips the newer files unparsed and stops at its own base
+    assert [m["epoch"] for m in store.live_manifests("t", as_of=3)] == [2, 3]
+    assert len(loads) == 2
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+@pytest.mark.parametrize("shape", sorted(CHAINS))
+def test_schema_pinned_read_equals_inferred_and_starts_no_job(spark, store, shape):
+    import pyspark.sql.types as T
+
+    chain = CHAINS[shape] + [(len(CHAINS[shape]) + 1, "delete", [(1, None)])]
+    _commit_chain(spark, store, chain)
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
+    )
+    # a schema may be given as a StructType or as a DDL string
+    for sch, preds in ((schema, None), ("k long, v string", [("k", 2, 4)])):
+        j0 = _next_job_id(spark)
+        pinned = store.read("t", spark, schema=sch, predicates=preds)
+        assert _next_job_id(spark) == j0
+        inferred = store.read("t", spark, predicates=preds)
+
+        def rows(df):
+            return sorted(tuple(r) for r in df.select("k", "v", "_epoch").collect())
+
+        assert rows(pinned) == rows(inferred)
+        assert {(k, v) for k, v, _ in rows(pinned)} == {
+            (k, v) for k, v in _latest_wins(chain)
+            if preds is None or 2 <= k <= 4
+        }
+
+
+def test_read_changes_over_keyed_appends_runs_no_window(spark, store):
+    _commit_chain(spark, store, CHAINS["base+appends"])
+    changes = store.read_changes("t", spark, since=1)
+    got = {(r.k, r.v, r._change) for r in changes.collect()}
+    assert got == {(3, "c", "upsert"), (4, "d", "upsert"), (5, "e", "upsert")}
+    assert not _has_window(changes)
+    # a keyed delta in the window still resolves latest-wins
+    store.merge("t", _df(spark, [(4, "D")]), 4, keys=["k"])
+    changes = store.read_changes("t", spark, since=1)
+    assert {(r.k, r.v) for r in changes.collect()} == {(3, "c"), (4, "D"), (5, "e")}
+    assert _has_window(changes)
