@@ -13,8 +13,9 @@ count (``functions.cuckoo.shard_count_policy``). The token bucket's
 throttling factor and capacity are the reference constants of
 ``plans.politeness``. Keys that earlier versions read — ``Salts``,
 ``BloomFpp``, ``UseBloom``, ``SeenSketch``, ``CuckooShards``,
-``ThrottlingFactor``, ``BucketCapacity``, ``RequestTimeoutSecs`` — are
-ignored, so old settings files still load.
+``ThrottlingFactor``, ``BucketCapacity``, ``RequestTimeoutSecs``,
+``RecrawlEnabled`` — are ignored, so old settings files still load. The O8
+recrawl lane always runs.
 """
 
 from __future__ import annotations
@@ -34,8 +35,6 @@ class EngineConfig:
     # session-day probe lag: only probe days older than today − offset
     # (reference get_unchecked_dates offset, db/sessionDay.py:36,104)
     probe_offset_days: int = 30
-    # O8 spaced-refresh recrawl lane (reference downloader.py:39-68)
-    recrawl_enabled: bool = True
     # drop the F.broadcast hints on the hot-path dimension joins (budgets,
     # ok-url keys, crawl metadata) when their estimated row count exceeds
     # this — AQE then picks the join strategy, so a 10^8-host deployment
@@ -62,7 +61,6 @@ class EngineConfig:
             prefetch_limit=get("General", "PrefetchLimit", 50),
             epoch_secs=get("Engine", "EpochSecs", 300.0),
             probe_offset_days=get("SessionDayChecker", "ProbeOffsetDays", 30),
-            recrawl_enabled=get("Engine", "RecrawlEnabled", True),
             broadcast_threshold_rows=get(
                 "Engine", "BroadcastThresholdRows", 4_000_000
             ),

@@ -8,8 +8,9 @@ left_anti join against the frontier table on ``url_hash`` — the sketch
 strictly a *pre-filter* that lets most provably-new candidates skip the
 anti-join shuffle. False positives only cost a recheck; false negatives are
 impossible, so correctness never depends on the sketch (SURVEY §4.2).
-Without a sketch (the crawl engine's first epoch, or after an overflow until
-the rebuild) the gate is the plain anti-join.
+Without a sketch (the crawl engine's first epoch, an overflow, or a sketch
+checkpoint not stamped with the frontier head) the gate is the plain
+anti-join.
 """
 
 from __future__ import annotations

@@ -13,6 +13,17 @@ epoch does not yet: the commits written before the crash sit above the
 ledger, and the re-run epoch's ``requests`` commit conflicts with the one
 already there (ROADMAP item 3).
 
+Between epochs only the store holds crawl state; the engine keeps none.
+The seen sketch is a checkpoint under ``_seen_sketch/store``, stamped with
+the frontier commit whose url_ids it holds: ``run_epoch`` stamps it after
+every frontier commit and opens it only while the stamp equals the frontier
+head, so a first epoch, a steady-state epoch and a restart run one path, and
+a crash between a commit and its stamp costs a rebuild, never a false
+negative. A growing table (``frontier``, ``url_state``) whose live chain
+holds ``MAX_LIVE_COMMITS`` commits takes the epoch's growth as one folded
+base instead of another append, so reads never list more than that many
+directories however long the crawl.
+
 Determinism: with a fixed ``now`` per epoch, the whole crawl — frontier
 membership, drain order, politeness state — is a pure function of
 (seed days, web, budgets), which is what the ordering-equivalence tests
@@ -50,8 +61,12 @@ from .politeness import (
 )
 from .robots import apply_robots_gate
 
-# fold url_state deltas into a base snapshot when this many commits stack up
-URL_STATE_COMPACT_EVERY = 32
+SKETCH = "_seen_sketch/store"  # the seen-sketch checkpoint, under the store root
+# the longest live chain (newest base + the commits after it) a growing
+# table keeps: a read lists every live epoch directory, and Spark lists more
+# than spark.sql.sources.parallelPartitionDiscovery.threshold (32) paths
+# with a Spark job, so a longer chain would make each read start one
+MAX_LIVE_COMMITS = 32
 
 
 def _url_state_delta(fetched: DataFrame) -> DataFrame:
@@ -109,9 +124,6 @@ class CrawlEngine:
         self.prefetch_limit = prefetch_limit if prefetch_limit is not None else cfg.prefetch_limit
         self.epoch_secs = epoch_secs if epoch_secs is not None else cfg.epoch_secs
         self.rules = rules_df(spark)
-        # the incremental cuckoo seen-sketch: lives across epochs, rebuilt
-        # lazily after overflow/restart; None = exact anti-join only
-        self._cuckoo = None
 
     # -- state ----------------------------------------------------------------
 
@@ -131,21 +143,32 @@ class CrawlEngine:
 
         Stored as APPEND deltas (one summary row per fetched URL per epoch)
         and folded here with a map-side-combinable max aggregation — no
-        window; every ``URL_STATE_COMPACT_EVERY``-th epoch commits the fold
-        as a base snapshot instead, so read amplification stays bounded."""
+        window; once the live chain holds ``MAX_LIVE_COMMITS`` commits the
+        epoch commits the fold as a base snapshot instead, so read
+        amplification stays bounded."""
         return _fold_url_state(self._read("url_state", S.URL_STATE))
 
-    def _build_cuckoo(self, frontier: DataFrame):
-        """Load-or-(re)build the incremental seen sketch. A checkpoint
-        stamped by ``save_sketch`` (with the frontier commit it reflects)
-        is loaded instead of rebuilding when its stamp matches the CURRENT
-        frontier head — at a 10^10-URL frontier the rebuild is a
-        full-table scan, the load is a meta.json read. Any stamp mismatch
-        (epochs committed since) falls back to the build; the sketch sizes
-        at load 0.21 (~4.7× headroom) so per-epoch increments fit for many
+    def _open_sketch(self) -> CuckooShardStore | None:
+        """The seen-sketch checkpoint, opened only when its stamp is the
+        frontier head. ``run_epoch`` stamps it with every frontier commit
+        it makes, after the commit's url_ids are in the shard files, so a
+        matching stamp means every frontier ``url_id`` is in the sketch;
+        any other stamp (a crash between the commit and the stamp, or a
+        frontier commit made outside the loop) means a rebuild."""
+        root = self.store.root / SKETCH
+        head = self.store.latest("frontier")
+        if head is None or not (root / "meta.json").exists():
+            return None
+        sketch = CuckooShardStore(root)
+        return sketch if sketch.stamp == head else None
+
+    def _build_sketch(self, frontier: DataFrame) -> CuckooShardStore:
+        """(Re)build the seen sketch from the frontier, unstamped. It sizes
+        at load 0.21 (~4.7× headroom), so per-epoch increments fit for many
         epochs between rebuilds. The shard count comes from the row count
-        of the frontier's live manifests (``shard_count_policy``), recomputed
-        on every build, so an overflowing frontier re-shards itself.
+        of the frontier's live manifests (``shard_count_policy``),
+        recomputed on every build, so an overflowing frontier re-shards
+        itself.
 
         The sketch is a :class:`~europarl_crawler_spark.functions.cuckoo.
         CuckooShardStore`: shard tables live as files under the store
@@ -153,37 +176,14 @@ class CrawlEngine:
         O(frontier/n_shards) per task, never the whole filter in any
         process; the r4 design broadcast the concatenated filter, ~25 GB
         at 10^10 URLs)."""
-        loaded = self._load_sketch()
-        if loaded is not None:
-            return loaded
         rows = sum(m["rows"] for m in self.store.live_manifests("frontier"))
         return CuckooShardStore.build(
             frontier,
-            self._sketch_dir() / "store",
+            self.store.root / SKETCH,
             "url_id",
             n_shards=shard_count_policy(rows),
             load=0.21,
         )
-
-    def _sketch_dir(self):
-        return self.store.root / "_seen_sketch"
-
-    def _load_sketch(self):
-        e = self.store.latest("frontier")
-        d = self._sketch_dir() / "store"
-        if e is None or not (d / "meta.json").exists():
-            return None
-        st = CuckooShardStore(d)
-        return st if st.stamp == e else None
-
-    def save_sketch(self) -> None:
-        """Stamp the shard store with the frontier commit it reflects —
-        the shard files ARE the checkpoint (maintenance rewrites them
-        atomically per shard); only a matching stamp is ever loadable."""
-        e = self.store.latest("frontier")
-        if self._cuckoo is None or e is None:
-            return
-        self._cuckoo.set_stamp(e)
 
     def bootstrap(self, days: DataFrame) -> None:
         """Initial load: seed-day domain (reference table bootstrap +
@@ -250,40 +250,47 @@ class CrawlEngine:
         # 2. URL-seen gate on the hashed key: exact anti-join, pre-filtered
         #    by the cuckoo shard store (north_rule). Seen key = url_id
         #    (= rule_id × url, the reference's UNIQUE constraint,
-        #    db/url.py:45). No sketch yet (epoch 1, or an overflow this
-        #    run) means the plain anti-join.
-        if self._cuckoo is None:
-            # restart path: the shutdown checkpoint's stamp can only
-            # match BEFORE this epoch's append advances the chain head
-            self._cuckoo = self._load_sketch()
-        fresh = anti_join_seen(new_urls, state, self._cuckoo, hash_col="url_id")
-        if self._cuckoo is not None:
+        #    db/url.py:45). No checkpoint stamped with the frontier head
+        #    (epoch 1, or a crash before the last stamp) means the plain
+        #    anti-join.
+        sketch = self._open_sketch()
+        fresh = anti_join_seen(new_urls, state, sketch, hash_col="url_id")
+        if sketch is not None:
             fresh = fresh.persist()
         # the frontier keeps its OWN commit chain (like documents):
         # shutdown_compact's commit advances it past the crawl clock, and a
         # resumed crawl must commit above BOTH. The gate's exact anti-join
         # leaves only url_ids the frontier lacks, so growth is a keyed
-        # insert-only append: reads need no latest-wins window for it.
+        # insert-only append: reads need no latest-wins window for it. A
+        # full live chain folds into one key-unique base of frontier ∪ fresh.
         f_e = max(e, (self.store.latest("frontier") or 0) + 1)
-        m = self.store.append("frontier", fresh, f_e, keys=["url_id"])
-        if self._cuckoo is not None:
+        chain = self.store.live_manifests("frontier")
+        if len(chain) < MAX_LIVE_COMMITS:
+            m = self.store.append("frontier", fresh, f_e, keys=["url_id"])
+            new_rows = m["rows"]
+        else:
+            base = frontier.unionByName(fresh)
+            m = self.store.overwrite("frontier", base, f_e, keys=["url_id"])
+            # the chain is delta-free: its rows sum to the frontier's
+            new_rows = m["rows"] - sum(c["rows"] for c in chain)
+        if sketch is not None:
             # incremental sketch maintenance: only THIS epoch's genuinely-new
             # url_ids (post exact anti-join) cross to the driver — O(delta),
             # bounded by the prefetch limits, never an O(frontier) rebuild.
             # Overflow (headroom exhausted) drops the sketch; it is rebuilt
             # below from the grown frontier.
             try:
-                self._cuckoo.add_many(np.unique(_url_ids(fresh)))
+                sketch.add_many(np.unique(_url_ids(fresh)))
             except RuntimeError:
-                self._cuckoo = None
+                sketch = None
             fresh.unpersist()
         # the grown frontier: with a pinned schema the re-read runs no job
         frontier = self._read("frontier", S.FRONTIER)
         state = crawl_state(frontier, url_state)
-        if self._cuckoo is None and self.store.latest("frontier") is not None:
-            # covers first build (epoch 1), rebuild-after-overflow, AND
-            # restart into a steady-state epoch that appended zero new urls
-            self._cuckoo = self._build_cuckoo(frontier)
+        if sketch is None:
+            sketch = self._build_sketch(frontier)
+        # only now does the checkpoint hold every url_id of commit f_e
+        sketch.set_stamp(f_e)
 
         # 3. pending = state rows without a terminal outcome — never fetched
         #    (null) or dead-letter retries (T6: 408/460/429/5xx stay eligible)
@@ -292,8 +299,7 @@ class CrawlEngine:
         #    fresh work; reference downloader.py:39-68).
         pending = state.filter(~F.col("terminal").eqNullSafe(True))
         pending = pending.select(*S.FRONTIER.fieldNames())
-        if self.config.recrawl_enabled:
-            pending = pending.unionByName(recrawl_candidates(state, now.date()))
+        pending = pending.unionByName(recrawl_candidates(state, now.date()))
         if self.robots is not None:
             pending = apply_robots_gate(pending, self.robots)
 
@@ -319,16 +325,15 @@ class CrawlEngine:
         fetched = simulate_requests(drained, self.web, e, now).persist()
         self.store.append("requests", requests_log(fetched), e)
         # url_state delta: this epoch's outcomes summarized per URL, folded
-        # at read. Every K-th epoch commits the fold of the epoch's url_state
-        # frame and this delta as a base instead (refolding a max fold is
-        # exact), so reads stay O(urls)+O(K deltas).
+        # at read. A full live chain commits the fold of the epoch's
+        # url_state frame and this delta as a base instead (refolding a max
+        # fold is exact), so reads stay O(urls)+O(MAX_LIVE_COMMITS deltas).
         delta = _url_state_delta(fetched)
-        if e % URL_STATE_COMPACT_EVERY == 0:
-            self.store.overwrite(
-                "url_state", _fold_url_state(url_state.unionByName(delta)), e
-            )
-        else:
+        if len(self.store.live_manifests("url_state")) < MAX_LIVE_COMMITS:
             self.store.append("url_state", delta, e)
+        else:
+            fold = _fold_url_state(url_state.unionByName(delta))
+            self.store.overwrite("url_state", fold, e)
         docs = extract_documents(
             fetched, self.web, self.rules,
             hint_broadcast=est_hosts * BUCKET_CAPACITY <= thr,
@@ -365,7 +370,7 @@ class CrawlEngine:
         ).first()
         stats = {
             "epoch": e,
-            "new_urls": m["rows"],
+            "new_urls": new_rows,
             "drained": agg["drained"] or 0,
             "fetched_ok": agg["ok"] or 0,
             "dead_letter": agg["dead"] or 0,
@@ -454,7 +459,8 @@ class CrawlEngine:
         state = crawl_state(self._read("frontier", S.FRONTIER), self._url_state())
         # a null terminal ⇔ no url_state row ⇔ never requested
         uncrawled = state.filter(F.col("terminal").isNull())
-        if self._cuckoo is not None:
+        sketch = self._open_sketch()
+        if sketch is not None:
             # the deletable-sketch payoff (reference deletes seen rows,
             # db/url.py:139-156): evict the dropped urls from the cuckoo
             # in place instead of rebuilding. Collected BEFORE the overwrite
@@ -465,17 +471,17 @@ class CrawlEngine:
             thr = self.config.broadcast_threshold_rows
             ids = _url_ids(uncrawled.limit(thr + 1))
             # unstamp first: a crash mid-eviction must leave no checkpoint
-            # that matches the frontier head (save_sketch re-stamps below)
-            self._cuckoo.set_stamp(None)
+            # that matches the frontier head (re-stamped below)
+            sketch.set_stamp(None)
             if len(ids) <= thr:
-                self._cuckoo.delete_many(np.unique(ids))
+                sketch.delete_many(np.unique(ids))
             else:
-                self._cuckoo = None
+                sketch = None
         crawled = state.filter(F.col("terminal").isNotNull())
         self.store.overwrite(
             "frontier", crawled.select(*S.FRONTIER.fieldNames()), e, keys=["url_id"]
         )
-        # post-eviction sketch == resolved frontier: checkpoint it stamped
-        # with that commit so the next run loads instead of rescanning the
-        # frontier
-        self.save_sketch()
+        # post-eviction sketch == resolved frontier: stamp it with that
+        # commit so the next epoch opens it instead of rescanning the frontier
+        if sketch is not None:
+            sketch.set_stamp(e)

@@ -187,6 +187,21 @@ def frontier_columns(cand: DataFrame, epoch: int, priority: F.Column) -> DataFra
     )
 
 
+def probed_days(state: DataFrame) -> DataFrame:
+    """One row per probed session day: ``(dates, terminal, has_ok)``, each
+    flag true if any fetch of the day's probe had it. Read off the crawl
+    state (``crawl_state``): a probe was fetched iff its ``terminal`` is not
+    null. The one per-day frame behind the fresh, retry and confirmed-day
+    lanes."""
+    return (
+        state.filter(
+            (F.col("rule_id") == SESSION_DAY_RULE_ID) & F.col("terminal").isNotNull()
+        )
+        .groupBy("dates")
+        .agg(F.max("terminal").alias("terminal"), F.max("has_ok").alias("has_ok"))
+    )
+
+
 def session_day_probes(
     spark: SparkSession,
     days: DataFrame,
@@ -220,26 +235,20 @@ def session_day_probes(
     Final order = dates DESC (the reference pops the ASC-sorted batch from the
     tail, O4) with url_hash tie-break.
 
-    ``state`` is the crawl state (``crawl_state``): a probe was fetched iff
-    its ``terminal`` is not null, and ``terminal`` ⇔ ever 200/404.
+    ``state`` is the crawl state (``crawl_state``), read through
+    ``probed_days``; ``terminal`` ⇔ ever 200/404.
     """
-    probe_state = state.filter(
-        (F.col("rule_id") == SESSION_DAY_RULE_ID) & F.col("terminal").isNotNull()
-    )
-    probed_days = probe_state.select("dates").distinct()
-    terminal_days = (
-        probe_state.filter(F.col("terminal")).select("dates").distinct()
-    )
+    probed = probed_days(state)
     cutoff = now_date - timedelta(days=offset_days)
     fresh = (
-        fresh_source.join(probed_days, "dates", "left_anti")
+        fresh_source.join(probed, "dates", "left_anti")
         .filter(F.col("dates") <= F.lit(cutoff))
         .orderBy(F.desc("dates"))
         .limit(max(limit - 1, 0))
     )
+    unfinished = probed.filter(~F.col("terminal")).select("dates")
     retry = (
-        days.join(probed_days, "dates", "left_semi")
-        .join(terminal_days, "dates", "left_anti")
+        days.join(unfinished, "dates", "left_semi")
         .orderBy(F.asc("dates"))
         .limit(limit)
     )
@@ -252,12 +261,8 @@ def session_day_probes(
 
 def confirmed_days(state: DataFrame) -> DataFrame:
     """Days whose session-day probe returned 200 (J4 join chain) — read
-    off the crawl state (``has_ok`` ⇔ ever 200, null if never fetched)."""
-    return (
-        state.filter((F.col("rule_id") == SESSION_DAY_RULE_ID) & F.col("has_ok"))
-        .select("dates")
-        .distinct()
-    )
+    off the crawl state through ``probed_days`` (``has_ok`` ⇔ ever 200)."""
+    return probed_days(state).filter(F.col("has_ok")).select("dates")
 
 
 def todo_combos(

@@ -3,9 +3,10 @@
 The seen sketch is strictly a pre-filter over the exact anti-join, so the
 crawl — frontier membership, request log, drain order — must be bit-identical
 to a crawl whose gate is the exact anti-join alone. The exact-only engine is
-a test fake: its sketch loader and builder return None. This pins that, plus
-the sketch's lifecycle: incremental adds across epochs, checkpoint load on
-restart and in-place eviction at shutdown_compact (D4).
+a test fake: it never opens the sketch checkpoint. This pins that, plus the
+checkpoint's lifecycle: stamped with every frontier commit, opened on
+restart without a rescan, rebuilt after a crash between commit and stamp,
+and evicted in place at shutdown_compact (D4).
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ from pathlib import Path
 import numpy as np
 import pytest
 
+from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
 from europarl_crawler_spark.plans.epoch import CrawlEngine
 from europarl_crawler_spark.sources.epochstore import EpochStore
 from europarl_crawler_spark.sources.synthetic import session_days_df, simulated_web
@@ -23,13 +25,15 @@ from europarl_crawler_spark.sources.synthetic import session_days_df, simulated_
 START = datetime(2021, 1, 1, tzinfo=timezone.utc)
 
 
-def _run(spark, root, name: str, n_epochs: int = 3):
+def _run(spark, root, name: str, n_epochs: int = 3, prefetch_limit: int = 50):
     days = session_days_df(spark, start=date(2019, 7, 2), n_days=12)
     web = simulated_web(spark, days)
     web.write.mode("overwrite").parquet(str(root / "web"))
     web = spark.read.parquet(str(root / "web"))
     store = EpochStore(root / f"store-{name}")
-    eng = CrawlEngine(spark, store, web, prefetch_limit=50, epoch_secs=600.0)
+    eng = CrawlEngine(
+        spark, store, web, prefetch_limit=prefetch_limit, epoch_secs=600.0
+    )
     eng.bootstrap(days)
     eng.run(n_epochs, start=START)
     return eng, store
@@ -38,13 +42,13 @@ def _run(spark, root, name: str, n_epochs: int = 3):
 @pytest.fixture(scope="module")
 def runs(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("crawl-cuckoo")
+    asked = []
     with pytest.MonkeyPatch.context() as mp:
-        # the exact-only engine: no sketch is ever loaded or built, so
-        # every epoch's gate is the plain anti-join
-        mp.setattr(CrawlEngine, "_build_cuckoo", lambda self, frontier: None)
-        mp.setattr(CrawlEngine, "_load_sketch", lambda self: None)
+        # the exact-only engine: the checkpoint is never opened, so every
+        # epoch's gate is the plain anti-join
+        mp.setattr(CrawlEngine, "_open_sketch", lambda self: asked.append(1))
         exact = _run(spark, root, "exact")
-    assert exact[0]._cuckoo is None
+    assert len(asked) == 3  # one gate an epoch, each without a sketch
     # last: the later tests reuse this engine's web, which each run rewrites
     cuckoo = _run(spark, root, "cuckoo")
     return dict(exact=exact, cuckoo=cuckoo)
@@ -71,45 +75,169 @@ def test_request_log_identical_across_backends(runs):
     )
 
 
+def _checkpoint(store) -> CuckooShardStore:
+    """The seen-sketch checkpoint as the shard files hold it."""
+    return CuckooShardStore(store.root / "_seen_sketch" / "store")
+
+
+def _frontier_ids(store, spark) -> np.ndarray:
+    df = store.read("frontier", spark).select("url_id")
+    return np.array([r.url_id for r in df.collect()], dtype=np.int64)
+
+
+def _count_builds(monkeypatch) -> list:
+    calls = []
+    real_build = CuckooShardStore.build
+    monkeypatch.setattr(
+        CuckooShardStore, "build",
+        lambda *a, **k: calls.append(1) or real_build(*a, **k),
+    )
+    return calls
+
+
+def _copy(runs, name):
+    """A copy of the cuckoo crawl's store and a fresh engine over it."""
+    import shutil
+
+    old_eng, store = runs["cuckoo"]
+    root = Path(f"{store.root}-{name}")
+    shutil.copytree(store.root, root)
+    eng = CrawlEngine(
+        old_eng.spark, EpochStore(root), old_eng.web,
+        prefetch_limit=50, epoch_secs=600.0,
+    )
+    return eng, eng.store
+
+
+def _grow_unrequested(eng, n: int) -> np.ndarray:
+    """Commit ``n`` never-requested frontier rows the way run_epoch grows
+    the frontier: a keyed append, its url_ids added to the checkpoint, then
+    the stamp moved to the new head. Returns the added url_ids."""
+    from pyspark.sql import functions as F
+
+    store = eng.store
+    frontier = store.read("frontier", eng.spark).drop("_epoch", "_deleted")
+    extra = frontier.limit(n).withColumn(
+        "url_id", F.xxhash64("url_id", F.lit("never-requested"))
+    )
+    head = store.latest("frontier") + 1
+    store.append("frontier", extra, head, keys=["url_id"])
+    ids = np.array([r.url_id for r in extra.select("url_id").collect()], dtype=np.int64)
+    sketch = _checkpoint(store)
+    sketch.add_many(ids)
+    sketch.set_stamp(head)
+    return ids
+
+
 def test_cuckoo_sketch_tracks_frontier_incrementally(runs):
-    """After N epochs of incremental adds the sketch still covers every
-    frontier url_id (no false negatives — the property the pre-filter's
-    correctness independence rests on)."""
+    """After N epochs of incremental adds the checkpoint is stamped with the
+    frontier head and still covers every frontier url_id (no false
+    negatives — the property the pre-filter's correctness independence
+    rests on)."""
     eng, store = runs["cuckoo"]
-    assert eng._cuckoo is not None
     # the cuckoo shard store is the only sketch a default engine keeps:
     # no per-epoch Bloom rebuild under _seen_sketch/bloom
     sketches = {p.name for p in (store.root / "_seen_sketch").iterdir()}
     assert sketches == {"store"}
-    ids = np.array(
-        [r.url_id for r in store.read("frontier", eng.spark).select("url_id").collect()],
-        dtype=np.int64,
-    )
-    assert eng._cuckoo.might_contain(ids).all()
+    sketch = _checkpoint(store)
+    assert sketch.stamp == store.latest("frontier")
+    assert sketch.might_contain(_frontier_ids(store, eng.spark)).all()
 
 
-def test_restart_rebuilds_sketch_even_without_new_urls(runs):
-    """A restarted engine (fresh _cuckoo=None) must rebuild the sketch from
-    the frontier even if its first epoch merges zero new urls — otherwise a
-    steady-state crawl restarts with the pre-filter silently off."""
-    import shutil
+def test_restart_without_shutdown_opens_the_checkpoint(runs, monkeypatch):
+    """A new engine on a store whose last epoch ended without
+    shutdown_compact opens the checkpoint its predecessor stamped: its
+    next epoch builds no sketch, and leaves the checkpoint stamped with
+    the new head and covering the frontier."""
+    eng, store = _copy(runs, "reopen")
+    builds = _count_builds(monkeypatch)
+    eng.run(1, start=START)
+    assert builds == []
+    sketch = _checkpoint(store)
+    assert sketch.stamp == store.latest("frontier")
+    assert sketch.might_contain(_frontier_ids(store, eng.spark)).all()
 
-    old_eng, store = runs["cuckoo"]
-    copy_root = Path(str(store.root) + "-restart")
-    shutil.copytree(store.root, copy_root)
+
+def test_restart_rebuilds_sketch_even_without_new_urls(runs, monkeypatch):
+    """A restart onto a checkpoint that does not match the frontier head
+    must rebuild the sketch from the frontier even if its first epoch
+    appends zero new urls — otherwise a steady-state crawl restarts with
+    the pre-filter silently off."""
+    old_eng = runs["cuckoo"][0]
+    _, copy = _copy(runs, "restart")
+    _checkpoint(copy).set_stamp(None)
     eng2 = CrawlEngine(
-        old_eng.spark, EpochStore(copy_root), old_eng.web,
-        prefetch_limit=0, epoch_secs=600.0,
+        old_eng.spark, copy, old_eng.web, prefetch_limit=0, epoch_secs=600.0,
     )
-    assert eng2._cuckoo is None
+    builds = _count_builds(monkeypatch)
     stats = eng2.run(1, start=START)
     assert stats[0]["new_urls"] == 0  # the steady-state restart case
-    assert eng2._cuckoo is not None
-    ids = np.array(
-        [r.url_id for r in store.read("frontier", eng2.spark).select("url_id").collect()],
-        dtype=np.int64,
-    )
-    assert eng2._cuckoo.might_contain(ids).all()
+    assert len(builds) == 1
+    sketch = _checkpoint(copy)
+    assert sketch.stamp == copy.latest("frontier")
+    assert sketch.might_contain(_frontier_ids(copy, eng2.spark)).all()
+
+
+def test_crash_after_frontier_append_rebuilds(spark, tmp_path, monkeypatch):
+    """A crash in the sketch maintenance after the frontier append leaves
+    the checkpoint stamped with the previous head, so it is never opened
+    as a sketch that misses the appended url_ids. A small prefetch limit
+    leaves calendar days unprobed for the crashed epoch, so the re-run
+    epoch regenerates that append's pending probes, which a sketch without
+    them would pass as new. The next engine rebuilds, and reaches the
+    frontier of an exact-only engine restarted on the same crashed store."""
+    import shutil
+
+    eng, store = _run(spark, tmp_path, "crash", n_epochs=2, prefetch_limit=4)
+    assert _checkpoint(store).stamp == store.latest("frontier")
+
+    class Crash(Exception):
+        pass
+
+    def crash(self, hashes):
+        raise Crash("simulated crash after the frontier append")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(CuckooShardStore, "add_many", crash)
+        head = store.latest("frontier")
+        with pytest.raises(Crash):
+            eng.run(1, start=START)
+    assert store.latest("frontier") == head + 1  # the append committed
+    assert _checkpoint(store).stamp == head
+    exact = EpochStore(shutil.copytree(store.root, tmp_path / "store-crash-exact"))
+
+    def restart(st):
+        CrawlEngine(
+            spark, st, eng.web, prefetch_limit=4, epoch_secs=600.0
+        ).run(1, start=START)
+
+    builds = _count_builds(monkeypatch)
+    restart(store)
+    assert len(builds) == 1
+    assert _checkpoint(store).stamp == store.latest("frontier")
+    with monkeypatch.context() as mp:
+        mp.setattr(CrawlEngine, "_open_sketch", lambda self: None)
+        restart(exact)
+    cols = ["url_id", "url_hash", "rule_id", "url"]
+    got = _snapshot(store, spark, "frontier", cols)
+    assert got == _snapshot(exact, spark, "frontier", cols)
+    assert len(got) == len({r[0] for r in got})
+
+
+def test_shutdown_on_a_fresh_engine_evicts_in_place(runs, monkeypatch):
+    """shutdown_compact on an engine that ran no epoch (maintenance_job
+    shutdown-compact) opens the checkpoint, evicts the dropped url_ids in
+    place and re-stamps it with the compaction commit — no rebuild."""
+    eng, store = _copy(runs, "fresh-shutdown")
+    dropped = _grow_unrequested(eng, 5)
+    size_before = _checkpoint(store).size
+    builds = _count_builds(monkeypatch)
+    eng.shutdown_compact()
+    assert builds == []
+    sketch = _checkpoint(store)
+    assert sketch.stamp == store.latest("frontier")
+    assert sketch.size == size_before - len(np.unique(dropped))
+    assert sketch.might_contain(_frontier_ids(store, eng.spark)).all()
 
 
 def test_shutdown_evicts_from_cuckoo_in_place(runs):
@@ -119,17 +247,15 @@ def test_shutdown_evicts_from_cuckoo_in_place(runs):
     requests = store.read("requests", spark)
     uncrawled = frontier.join(requests.select("url_id"), "url_id", "left_anti")
     dropped = np.array([r.url_id for r in uncrawled.select("url_id").collect()], dtype=np.int64)
-    size_before = eng._cuckoo.size
+    size_before = _checkpoint(store).size
     eng.shutdown_compact()
-    # same sketch object (no rebuild), shrunk by exactly the dropped ids
-    assert eng._cuckoo is not None
-    assert eng._cuckoo.size == size_before - len(np.unique(dropped))
+    # the same shard files (no rebuild), shrunk by exactly the dropped ids
+    # and stamped with the compaction commit
+    sketch = _checkpoint(store)
+    assert sketch.stamp == store.latest("frontier")
+    assert sketch.size == size_before - len(np.unique(dropped))
     # kept ids still covered
-    kept = np.array(
-        [r.url_id for r in store.read("frontier", spark).select("url_id").collect()],
-        dtype=np.int64,
-    )
-    assert eng._cuckoo.might_contain(kept).all()
+    assert sketch.might_contain(_frontier_ids(store, spark)).all()
 
 
 def test_shutdown_checkpoint_loads_on_restart(spark, tmp_path, monkeypatch):
@@ -141,43 +267,19 @@ def test_shutdown_checkpoint_loads_on_restart(spark, tmp_path, monkeypatch):
     # the shard files ARE the checkpoint; the stamp marks them loadable
     sdir = store.root / "_seen_sketch" / "store"
     assert list(sdir.glob("shard_*.npy"))
-    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
-
-    assert CuckooShardStore(sdir).stamp == store.latest("frontier")
+    assert _checkpoint(store).stamp == store.latest("frontier")
 
     eng2 = CrawlEngine(spark, store, eng.web, prefetch_limit=50, epoch_secs=600.0)
-    # any rebuild attempt would call CuckooShardStore.build — make that an error
-    import europarl_crawler_spark.plans.epoch as epoch_mod
 
+    # any rebuild attempt would call CuckooShardStore.build — make that an error
     def boom(*a, **k):
         raise AssertionError("sketch was rebuilt despite a matching checkpoint")
 
-    monkeypatch.setattr(epoch_mod.CuckooShardStore, "build", boom)
+    monkeypatch.setattr(CuckooShardStore, "build", boom)
     eng2.run(1, start=START)
-    assert eng2._cuckoo is not None
-    ids = np.array(
-        [r.url_id for r in store.read("frontier", spark).select("url_id").collect()],
-        dtype=np.int64,
-    )
-    assert eng2._cuckoo.might_contain(ids).all()
-
-
-def _engine_on_copy(runs, name):
-    """A fresh engine over a copy of the cuckoo crawl's store, holding the
-    sketch from the copied shard files."""
-    import shutil
-
-    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
-
-    old_eng, store = runs["cuckoo"]
-    root = Path(f"{store.root}-{name}")
-    shutil.copytree(store.root, root)
-    eng = CrawlEngine(
-        old_eng.spark, EpochStore(root), old_eng.web,
-        prefetch_limit=50, epoch_secs=600.0,
-    )
-    eng._cuckoo = CuckooShardStore(root / "_seen_sketch" / "store")
-    return eng, eng.store
+    sketch = _checkpoint(store)
+    assert sketch.stamp == store.latest("frontier")
+    assert sketch.might_contain(_frontier_ids(store, spark)).all()
 
 
 def test_shutdown_size_guard_collects_at_most_threshold_plus_one(
@@ -188,21 +290,14 @@ def test_shutdown_size_guard_collects_at_most_threshold_plus_one(
     collecting the whole uncrawled set first."""
     import dataclasses
 
-    from pyspark.sql import functions as F
-
-    eng, store = _engine_on_copy(runs, "guard")
-    spark = eng.spark
+    eng, store = _copy(runs, "guard")
     thr = 3
     # the toy crawl drains its whole frontier: add never-requested rows
-    frontier = store.read("frontier", spark).drop("_epoch", "_deleted")
-    extra = frontier.limit(3 * thr).withColumn(
-        "url_id", F.xxhash64("url_id", F.lit("never-requested"))
-    )
-    store.merge("frontier", extra, store.latest("frontier") + 1, keys=["url_id"])
+    _grow_unrequested(eng, 3 * thr)
     eng.config = dataclasses.replace(eng.config, broadcast_threshold_rows=thr)
 
     seen = []
-    cls = type(frontier)  # the concrete DataFrame class (classic vs connect)
+    cls = type(store.read("frontier", eng.spark))  # classic vs connect DataFrame
     for name in ("collect", "toArrow", "toPandas"):
         orig = getattr(cls, name)
 
@@ -215,22 +310,23 @@ def test_shutdown_size_guard_collects_at_most_threshold_plus_one(
         monkeypatch.setattr(cls, name, spy)
     eng.shutdown_compact()
     assert seen and max(seen) <= thr + 1, seen
-    assert eng._cuckoo is None  # dropped; the next epoch rebuilds
+    # dropped: the checkpoint is left unstamped, so the next epoch rebuilds
+    assert _checkpoint(store).stamp is None
 
 
-def test_crash_mid_eviction_leaves_no_loadable_checkpoint(runs):
+def test_crash_mid_eviction_leaves_no_loadable_checkpoint(runs, monkeypatch):
     """A crash inside the in-place eviction leaves some shards evicted while
     the frontier still holds those ids. A checkpoint stamped with the
     current frontier head would then load as a sketch with false
     negatives — so the stamp must be cleared before any shard changes."""
-    eng, store = _engine_on_copy(runs, "crash")
-    eng.save_sketch()  # a checkpoint that matches the frontier head
-    assert eng._load_sketch() is not None
+    eng, store = _copy(runs, "crash-evict")
+    # a checkpoint that matches the frontier head
+    assert _checkpoint(store).stamp == store.latest("frontier")
 
-    def crash(hashes):
+    def crash(self, hashes):
         raise RuntimeError("simulated crash during eviction")
 
-    eng._cuckoo.delete_many = crash
+    monkeypatch.setattr(CuckooShardStore, "delete_many", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         eng.shutdown_compact()
-    assert eng._load_sketch() is None
+    assert _checkpoint(store).stamp != store.latest("frontier")

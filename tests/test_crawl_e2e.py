@@ -268,35 +268,12 @@ def test_shutdown_drops_uncrawled(world):
     )
 
 
-def test_url_state_commits_on_crawl_clock(spark, tmp_path, monkeypatch):
-    """url_state commits at the crawl epoch: a delta append every epoch,
-    except every URL_STATE_COMPACT_EVERY-th, which commits one base of the
-    fold of the stored deltas and its own — no commit ids off the clock."""
-    from europarl_crawler_spark.plans import epoch as ep
-
-    monkeypatch.setattr(ep, "URL_STATE_COMPACT_EVERY", 2)
-    days = session_days_df(spark, start=date(2019, 7, 2), n_days=8)
-    simulated_web(spark, days).write.parquet(str(tmp_path / "web"))
-    web = spark.read.parquet(str(tmp_path / "web"))
-    store = EpochStore(tmp_path / "store")
-    eng = CrawlEngine(spark, store, web, prefetch_limit=50, epoch_secs=600.0)
-    eng.bootstrap(days)
-    eng.run(4, start=START)
-    assert [(m["epoch"], m["kind"]) for m in store.manifests("url_state")] == [
-        (1, "append"), (2, "base"), (3, "append"), (4, "base"),
-    ]
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    want = ep._fold_url_state(ep._url_state_delta(store.read("requests", spark)))
-    assert rows(eng._url_state()) == rows(want)
-
-
 @pytest.fixture(scope="module")
-def traced_reads(spark, tmp_path_factory):
-    """A 3-epoch toy crawl whose url_state compacts every 2nd epoch, with
-    every ``EpochStore.read`` recorded per epoch as (table, jobs it ran)."""
+def folded(spark, tmp_path_factory):
+    """A 4-epoch toy crawl at a live-chain bound of 2, with every
+    ``EpochStore.read`` recorded per epoch as (table, jobs it ran), and
+    after each epoch the live chain lengths of frontier and url_state and
+    the frontier's committed rows and distinct url_ids."""
     from europarl_crawler_spark.plans import epoch as ep
 
     root = tmp_path_factory.mktemp("reads")
@@ -316,44 +293,84 @@ def traced_reads(spark, tmp_path_factory):
         reads.append((table, int(dag.nextJobId()) - j0))
         return out
 
-    per_epoch = []
+    per_epoch, chains = [], []
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(ep, "URL_STATE_COMPACT_EVERY", 2)
+        mp.setattr(ep, "MAX_LIVE_COMMITS", 2)
         mp.setattr(EpochStore, "read", counted)
-        for i in range(3):
+        for i in range(4):
             reads.clear()
             eng.run_epoch(START + timedelta(seconds=600.0 * i))
             per_epoch.append(list(reads))
-    return dict(store=store, eng=eng, reads=per_epoch)
+            ids = real_read(store, "frontier", spark).select("url_id")
+            chains.append(dict(
+                frontier=len(store.live_manifests("frontier")),
+                url_state=len(store.live_manifests("url_state")),
+                rows=sum(m["rows"] for m in store.live_manifests("frontier")),
+                distinct=ids.distinct().count(),
+            ))
+    return dict(store=store, eng=eng, reads=per_epoch, chains=chains)
 
 
-def test_run_epoch_reads_each_table_once_without_jobs(traced_reads):
+def test_url_state_commits_on_crawl_clock(folded, spark):
+    """url_state commits at the crawl epoch: a delta append every epoch,
+    except when its live chain already holds MAX_LIVE_COMMITS commits,
+    which commits one base of the fold of the stored deltas and its own —
+    no commit ids off the clock."""
+    from europarl_crawler_spark.plans import epoch as ep
+
+    store, eng = folded["store"], folded["eng"]
+    assert [(m["epoch"], m["kind"]) for m in store.manifests("url_state")] == [
+        (1, "append"), (2, "append"), (3, "base"), (4, "append"),
+    ]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    want = ep._fold_url_state(ep._url_state_delta(store.read("requests", spark)))
+    assert rows(eng._url_state()) == rows(want)
+
+
+def test_frontier_and_url_state_fold_on_the_live_chain_bound(folded):
+    """One fold rule: at a bound of 2 the frontier, like url_state, takes
+    append, append, base, append — no table's live chain ever exceeds the
+    bound, and the folded frontier is key-unique: its committed rows are
+    its distinct url_ids."""
+    store = folded["store"]
+    assert [(m["epoch"], m["kind"]) for m in store.manifests("frontier")] == [
+        (1, "append"), (2, "append"), (3, "base"), (4, "append"),
+    ]
+    for c in folded["chains"]:
+        assert c["frontier"] <= 2 and c["url_state"] <= 2, folded["chains"]
+        assert c["rows"] == c["distinct"] > 0, folded["chains"]
+
+
+def test_run_epoch_reads_each_table_once_without_jobs(folded):
     """One crawl-state frame and schema-pinned reads: an epoch reads
     url_state once, the frontier before and after growth, the calendar
     whole and cutoff-pruned, and politeness once — and no read starts a
-    Spark job, on a compaction epoch (2) as on an append epoch."""
+    Spark job, on a fold epoch (3) as on an append epoch."""
     from collections import Counter
 
-    store = traced_reads["store"]
+    store = folded["store"]
     assert [m["kind"] for m in store.manifests("url_state")] == [
-        "append", "base", "append",
+        "append", "append", "base", "append",
     ]
-    for reads in traced_reads["reads"]:
+    for reads in folded["reads"]:
         assert Counter(t for t, _ in reads) == {
             "session_days": 2, "frontier": 2, "url_state": 1, "politeness": 1,
         }
         assert [j for _, j in reads] == [0] * len(reads)
 
 
-def test_politeness_reads_parse_only_the_live_manifest(traced_reads, monkeypatch):
+def test_politeness_reads_parse_only_the_live_manifest(folded, monkeypatch):
     """run_epoch overwrites politeness every epoch; the superseded
     snapshots stay on disk for time travel, but reading the table and the
     host estimate parse only the newest one."""
     from europarl_crawler_spark.sources import epochstore
 
-    store, eng = traced_reads["store"], traced_reads["eng"]
+    store, eng = folded["store"], folded["eng"]
     snapshots = store.manifests("politeness")
-    assert len(snapshots) == 3
+    assert len(snapshots) == 4
     loads = []
     real_load = epochstore.json.load
     monkeypatch.setattr(

@@ -146,24 +146,6 @@ def test_recrawl_never_reprobes_terminal_days(world):
     assert per_url.filter(F.col("count") > 1).count() == 0
 
 
-def test_recrawl_disabled_never_refetches(spark, tmp_path):
-    cfg = EngineConfig(probe_offset_days=0, epoch_secs=DAY_SECS, recrawl_enabled=False)
-    days_df = session_days_df(spark, start=SEED_START, n_days=N_DAYS)
-    web = simulated_web(spark, days_df)
-    store = EpochStore(tmp_path / "store")
-    eng = CrawlEngine(spark, store, web, prefetch_limit=50, config=cfg)
-    eng.bootstrap(days_df)
-    eng.run(N_EPOCHS, start=START)
-    req = store.read("requests", spark)
-    repeats = (
-        req.filter(F.col("status_code") == 200)
-        .groupBy("url_id")
-        .agg(F.countDistinct("epoch").alias("n"))
-        .filter(F.col("n") >= 2)
-    )
-    assert repeats.count() == 0
-
-
 def test_recrawl_plan_has_no_global_window(spark):
     """Scale shape: recrawl candidate generation is filters over the
     crawl-state join — no window, no cartesian product anywhere in the

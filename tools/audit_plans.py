@@ -133,7 +133,7 @@ def engine_seen_gate(spark, web, drained, root: str):
     seen = drained.filter(F.pmod("url_id", F.lit(2)) == 0)
     eng.store.overwrite("frontier", seen, 1, keys=["url_id"])
     frontier = eng.store.read("frontier", spark).select("url_id")
-    sketch = eng._build_cuckoo(frontier)
+    sketch = eng._build_sketch(frontier)
     return anti_join_seen(drained, frontier, sketch, hash_col="url_id")
 
 
