@@ -377,6 +377,9 @@ class CuckooShardStore:
 
         rootp = Path(root)
         rootp.mkdir(parents=True, exist_ok=True)
+        # no checkpoint until the new meta: a crash mid-build must not leave
+        # an old stamp over missing shards (a missing shard reads all-new)
+        (rootp / "meta.json").unlink(missing_ok=True)
         for old in rootp.glob("shard_*.npy"):
             old.unlink()
         root_s = str(rootp)

@@ -4,8 +4,11 @@
         -m europarl_crawler_spark.jobs.crawl_job -- \
         --store /data/crawlstore --web /data/web --epochs 10
 
-Resumable: re-running against the same --store continues from the last
-committed epoch (EpochStore manifest chain). Prints one JSON line per epoch.
+Resumable: re-running against the same --store continues after the last
+epoch of the store's ``epochs`` ledger, whose row is each epoch's commit
+point; whatever a crashed run committed above it is rolled back first
+(plans/epoch.py ``open_epoch``), so the re-run epoch reaches the tables an
+uninterrupted run would. Prints one JSON line per epoch.
 """
 
 from __future__ import annotations

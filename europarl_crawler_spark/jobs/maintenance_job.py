@@ -22,6 +22,13 @@ Usage:
     ... reextract --web /data/web
     ... index --limit 500
 
+Every command first rolls the crawl tables back to the ``epochs`` ledger
+(``plans/epoch.py::open_epoch``), so ``expire`` never drops epochs below a
+base that a later rollback would remove and ``index`` never serves a crashed
+epoch's documents. A command that writes a crawl table (reset-postprocessing,
+reextract, shutdown-compact, compact-table and rewrite-zorder of a crawl
+table) commits at the ledger's next epoch and ends with its ledger row.
+
 Each command prints one JSON line with the action's row counts; all actions
 are idempotent (keyed merges/tombstones over EpochStore snapshots), so a
 failed run is safely re-runnable — the reference gets the same property from
@@ -105,16 +112,17 @@ def main(argv=None) -> dict:
     from pyspark.sql import SparkSession
 
     from ..plans import indexer
+    from ..plans.epoch import CRAWL_TABLES, CrawlEngine, commit_epoch, open_epoch
+    from ..sources import schema as S
     from ..sources.epochstore import EpochStore
 
     spark = SparkSession.builder.appName("europarl-maintenance").getOrCreate()
     store = EpochStore(args.store)
+    e = open_epoch(store)
 
     def engine():
         if not args.web:
             p.error(f"{args.cmd} requires --web (the content-store parquet dir)")
-        from ..plans.epoch import CrawlEngine
-
         web = spark.read.parquet(args.web)
         return CrawlEngine(spark, store, web)
 
@@ -133,33 +141,33 @@ def main(argv=None) -> dict:
     elif args.cmd == "text-features":
         out = indexer.text_features_epoch(store, spark)
     elif args.cmd == "shutdown-compact":
-        from ..plans.epoch import CrawlEngine
-
         # shutdown-compact touches only frontier/url_state; a content store
         # is unnecessary — build the engine with an empty web frame
-        from ..sources import schema as S
-
         eng = CrawlEngine(spark, store, spark.createDataFrame([], S.WEB))
         eng.shutdown_compact()
         out = {"compacted": True}
-    elif args.cmd == "compact-table":
-        nxt = (store.latest(args.table) or 0) + 1
-        out = store.compact(
-            args.table, spark, nxt, target_partitions=args.target_partitions
-        )
-    elif args.cmd == "rewrite-zorder":
-        nxt = (store.latest(args.table) or 0) + 1
-        out = store.rewrite_sorted(
-            args.table,
-            spark,
-            nxt,
-            args.x_col,
-            (args.x_lo, args.x_hi),
-            args.y_col,
-            (args.y_lo, args.y_hi),
-            n_files=args.n_files,
-        )
-        out = {k: v for k, v in out.items() if k != "file_stats"}
+    elif args.cmd in ("compact-table", "rewrite-zorder"):
+        # a crawl table commits on the crawl clock, any other on its own chain
+        crawl = args.table in CRAWL_TABLES
+        nxt = e if crawl else (store.latest(args.table) or 0) + 1
+        if args.cmd == "compact-table":
+            out = store.compact(
+                args.table, spark, nxt, target_partitions=args.target_partitions
+            )
+        else:
+            out = store.rewrite_sorted(
+                args.table,
+                spark,
+                nxt,
+                args.x_col,
+                (args.x_lo, args.x_hi),
+                args.y_col,
+                (args.y_lo, args.y_hi),
+                n_files=args.n_files,
+            )
+            out = {k: v for k, v in out.items() if k != "file_stats"}
+        if crawl:
+            commit_epoch(store, spark, e)
     elif args.cmd == "expire":
         out = store.expire(args.table)
     out = {"cmd": args.cmd, **out}

@@ -6,12 +6,15 @@ dataflow, the bounded queues into per-host politeness budgets (T1), the
 DB lock bits into snapshot isolation (T7), and graceful-shutdown cleanup into
 ``shutdown_compact`` (D4).
 
-Resumability: every table commit is an EpochStore manifest; `CrawlEngine`
-restarts from the max committed epoch of the ``epochs`` ledger. A restart
-after a fully committed epoch continues cleanly. A restart after a partial
-epoch does not yet: the commits written before the crash sit above the
-ledger, and the re-run epoch's ``requests`` commit conflicts with the one
-already there (ROADMAP item 3).
+Resumability: one crawl clock. The head L of the ``epochs`` ledger (0 when
+it is empty; epoch 0 is the seed epoch) is the last committed epoch, and a
+ledger row is an epoch's commit point: its last commit. Every writer of a
+crawl table (``CRAWL_TABLES``) takes its epoch from ``open_epoch``, which
+first rolls back every crawl-table commit above L (a crash's leftovers) and
+returns L + 1, commits every table write at that one epoch, and ends with
+``commit_epoch``'s ledger row. So a restart after a crash at any point of
+an epoch re-runs that epoch from the same snapshot and reaches the same
+tables as a run without the crash.
 
 Between epochs only the store holds crawl state; the engine keeps none.
 The seen sketch is a checkpoint under ``_seen_sketch/store``, stamped with
@@ -19,7 +22,9 @@ the frontier commit whose url_ids it holds: ``run_epoch`` stamps it after
 every frontier commit and opens it only while the stamp equals the frontier
 head, so a first epoch, a steady-state epoch and a restart run one path, and
 a crash between a commit and its stamp costs a rebuild, never a false
-negative. A growing table (``frontier``, ``url_state``) whose live chain
+negative. ``open_epoch`` unstamps a checkpoint stamped above L: after the
+rollback, a re-run epoch can commit a different frontier under the same
+number. A growing table (``frontier``, ``url_state``) whose live chain
 holds ``MAX_LIVE_COMMITS`` commits takes the epoch's growth as one folded
 base instead of another append, so reads never list more than that many
 directories however long the crawl.
@@ -34,7 +39,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 import numpy as np
@@ -67,6 +72,39 @@ SKETCH = "_seen_sketch/store"  # the seen-sketch checkpoint, under the store roo
 # than spark.sql.sources.parallelPartitionDiscovery.threshold (32) paths
 # with a Spark job, so a longer chain would make each read start one
 MAX_LIVE_COMMITS = 32
+# the tables open_epoch rolls back: every commit to one of them above the
+# ledger head belongs to an epoch that has no ledger row
+CRAWL_TABLES = ("frontier", "url_state", "requests", "documents", "politeness", "metrics")
+LEDGER = "epoch int, started timestamp, new_urls long, drained long, fetched_ok long, dead_letter long"
+
+
+def _checkpoint(store: EpochStore) -> CuckooShardStore | None:
+    """The seen-sketch checkpoint under the store root, whatever its stamp."""
+    root = store.root / SKETCH
+    return CuckooShardStore(root) if (root / "meta.json").exists() else None
+
+
+def open_epoch(store: EpochStore) -> int:
+    """Open the next epoch on the crawl clock: roll every crawl table back
+    to the ``epochs`` ledger's head L (0 when empty), unstamp a seen-sketch
+    checkpoint stamped above L, and return L + 1. Without a crash this
+    lists each table's manifest names once: no manifest parse, no Spark
+    job."""
+    head = store.latest("epochs") or 0
+    for table in CRAWL_TABLES:
+        store.rollback(table, head)
+    sketch = _checkpoint(store)
+    if sketch is not None and (sketch.stamp or 0) > head:
+        sketch.set_stamp(None)
+    return head + 1
+
+
+def commit_epoch(store: EpochStore, spark: SparkSession, e: int, now=None, stats=None) -> None:
+    """Commit epoch ``e`` by appending its ledger row, the epoch's last
+    commit: its start and the counts of a crawl epoch's ``stats``. A
+    maintenance epoch (no stats) records no start and zero counts."""
+    counts = [(stats or {}).get(c, 0) for c in ("new_urls", "drained", "fetched_ok", "dead_letter")]
+    store.append("epochs", spark.createDataFrame([(e, now, *counts)], LEDGER), e)
 
 
 def _url_state_delta(fetched: DataFrame) -> DataFrame:
@@ -127,13 +165,6 @@ class CrawlEngine:
 
     # -- state ----------------------------------------------------------------
 
-    def _politeness_df(self) -> DataFrame:
-        """Per-host politeness state as a DataFrame — the data-plane form.
-        No driver-side host dict: budgets and throttling transitions are
-        joins/expressions (plans/politeness.py), so 10^7-10^8 hosts never
-        round-trip through the driver."""
-        return self._read("politeness", S.POLITENESS).drop("epoch")
-
     def _url_state(self) -> DataFrame:
         """Per-URL crawl-state summary: (terminal = ever 200/404, has_ok =
         ever 200, last_ok_at/epoch). Joined to the frontier (``crawl_state``),
@@ -155,12 +186,11 @@ class CrawlEngine:
         matching stamp means every frontier ``url_id`` is in the sketch;
         any other stamp (a crash between the commit and the stamp, or a
         frontier commit made outside the loop) means a rebuild."""
-        root = self.store.root / SKETCH
+        sketch = _checkpoint(self.store)
         head = self.store.latest("frontier")
-        if head is None or not (root / "meta.json").exists():
+        if sketch is None or head is None or sketch.stamp != head:
             return None
-        sketch = CuckooShardStore(root)
-        return sketch if sketch.stamp == head else None
+        return sketch
 
     def _build_sketch(self, frontier: DataFrame) -> CuckooShardStore:
         """(Re)build the seen sketch from the frontier, unstamped. It sizes
@@ -213,7 +243,7 @@ class CrawlEngine:
     # -- one epoch -------------------------------------------------------------
 
     def run_epoch(self, now: datetime | None = None) -> dict:
-        e = self.current_epoch() + 1
+        e = open_epoch(self.store)
         now = now or datetime.now(timezone.utc)
         now_secs = now.timestamp()
         spark = self.spark
@@ -257,20 +287,17 @@ class CrawlEngine:
         fresh = anti_join_seen(new_urls, state, sketch, hash_col="url_id")
         if sketch is not None:
             fresh = fresh.persist()
-        # the frontier keeps its OWN commit chain (like documents):
-        # shutdown_compact's commit advances it past the crawl clock, and a
-        # resumed crawl must commit above BOTH. The gate's exact anti-join
-        # leaves only url_ids the frontier lacks, so growth is a keyed
-        # insert-only append: reads need no latest-wins window for it. A
-        # full live chain folds into one key-unique base of frontier ∪ fresh.
-        f_e = max(e, (self.store.latest("frontier") or 0) + 1)
+        # the gate's exact anti-join leaves only url_ids the frontier lacks,
+        # so growth is a keyed insert-only append: reads need no latest-wins
+        # window for it. A full live chain folds into one key-unique base of
+        # frontier ∪ fresh.
         chain = self.store.live_manifests("frontier")
         if len(chain) < MAX_LIVE_COMMITS:
-            m = self.store.append("frontier", fresh, f_e, keys=["url_id"])
+            m = self.store.append("frontier", fresh, e, keys=["url_id"])
             new_rows = m["rows"]
         else:
             base = frontier.unionByName(fresh)
-            m = self.store.overwrite("frontier", base, f_e, keys=["url_id"])
+            m = self.store.overwrite("frontier", base, e, keys=["url_id"])
             # the chain is delta-free: its rows sum to the frontier's
             new_rows = m["rows"] - sum(c["rows"] for c in chain)
         if sketch is not None:
@@ -289,8 +316,8 @@ class CrawlEngine:
         state = crawl_state(frontier, url_state)
         if sketch is None:
             sketch = self._build_sketch(frontier)
-        # only now does the checkpoint hold every url_id of commit f_e
-        sketch.set_stamp(f_e)
+        # only now does the checkpoint hold every url_id of commit e
+        sketch.set_stamp(e)
 
         # 3. pending = state rows without a terminal outcome — never fetched
         #    (null) or dead-letter retries (T6: 408/460/429/5xx stay eligible)
@@ -304,8 +331,9 @@ class CrawlEngine:
             pending = apply_robots_gate(pending, self.robots)
 
         # 4. politeness budgets per host — a join against the state table
-        #    (data-plane; no host collect, see plans/politeness.py).
-        politeness = self._politeness_df()
+        #    (data-plane; no host collect, see plans/politeness.py), so
+        #    10^7-10^8 hosts never round-trip through the driver.
+        politeness = self._read("politeness", S.POLITENESS).drop("epoch")
         budgets = host_budgets(
             pending.select("host_hash").distinct(),
             politeness,
@@ -323,7 +351,14 @@ class CrawlEngine:
 
         # 5. fetch + extract (the epoch's big join + the Arrow decode pass).
         fetched = simulate_requests(drained, self.web, e, now).persist()
-        self.store.append("requests", requests_log(fetched), e)
+        # the epoch's counts ride the requests write: no job of their own
+        observed = Observation()
+        self.store.append("requests", requests_log(fetched).observe(
+            observed,
+            F.count(F.lit(1)).alias("drained"),
+            F.sum((F.col("status_code") == 200).cast("long")).alias("fetched_ok"),
+            F.sum((~F.col("status_code").isin(200, 404)).cast("long")).alias("dead_letter"),
+        ), e)
         # url_state delta: this epoch's outcomes summarized per URL, folded
         # at read. A full live chain commits the fold of the epoch's
         # url_state frame and this delta as a base instead (refolding a max
@@ -338,11 +373,8 @@ class CrawlEngine:
             fetched, self.web, self.rules,
             hint_broadcast=est_hosts * BUCKET_CAPACITY <= thr,
         )
-        # documents has its own commit chain: reset/reextract (D9) may have
-        # advanced it past the crawl clock — never commit at-or-below it.
-        # A merge, not an append: a recrawl re-extracts the same image_id.
-        doc_e = max(e, (self.store.latest("documents") or 0) + 1)
-        self.store.merge("documents", docs, doc_e, keys=["image_id"])
+        # a merge, not an append: a recrawl re-extracts the same image_id
+        self.store.merge("documents", docs, e, keys=["image_id"])
 
         # 6. politeness update from the epoch status flags (A1) — one
         #    full-outer join + expressions, state never leaves the executors.
@@ -363,41 +395,26 @@ class CrawlEngine:
         )
         self.store.append("metrics", metrics, e)
 
-        agg = fetched.agg(
-            F.count("*").alias("drained"),
-            F.sum((F.col("status_code") == 200).cast("long")).alias("ok"),
-            F.sum((~F.col("status_code").isin(200, 404)).cast("long")).alias("dead"),
-        ).first()
+        # a null sum is an empty epoch's 0
+        counts = {k: v or 0 for k, v in observed.get.items()}
         stats = {
             "epoch": e,
             "new_urls": new_rows,
-            "drained": agg["drained"] or 0,
-            "fetched_ok": agg["ok"] or 0,
-            "dead_letter": agg["dead"] or 0,
+            "drained": counts["drained"],
+            "fetched_ok": counts["fetched_ok"],
+            "dead_letter": counts["dead_letter"],
             # manifest-pruning counter of the cutoff calendar read
             "days_files_kept": days_prune.get("kept"),
             "days_files_total": days_prune.get("total"),
         }
-        ledger = spark.createDataFrame(
-            [
-                (
-                    e,
-                    now,
-                    stats["new_urls"],
-                    stats["drained"],
-                    stats["fetched_ok"],
-                    stats["dead_letter"],
-                )
-            ],
-            "epoch int, started timestamp, new_urls long, drained long, fetched_ok long, dead_letter long",
-        )
-        self.store.append("epochs", ledger, e)
+        commit_epoch(self.store, spark, e, now, stats)
         fetched.unpersist()
         return stats
 
     def run(self, n_epochs: int, start: datetime | None = None) -> list[dict]:
         """Run n epochs with a deterministic simulated clock when ``start`` is
-        given (each epoch advances by epoch_secs)."""
+        given (each ledger epoch, maintenance ones too, advances it by
+        epoch_secs)."""
         out = []
         for i in range(n_epochs):
             now = None
@@ -414,28 +431,18 @@ class CrawlEngine:
 
         Reference: the postprocessing worker re-enqueues every document whose
         ``data IS NULL`` (workers/postprocessingworker.py:37-65 over
-        db/documents.py get_unprocessed); here the request log + content
+        db/documents.py get_unprocessed); here the crawl state + content
         store are sufficient to rebuild the documents table, and the
-        image_id merge key makes the rebuild idempotent. The latest-success
-        pick is a map-side-combinable max(struct) — no window."""
-        # commit above BOTH the crawl clock and the documents table's own
-        # chain (a reset writes tombstones at documents-latest + 1, which may
-        # already exceed the crawl epoch — colliding would clobber them)
-        e = max(self.current_epoch(), self.store.latest("documents") or 0) + 1
-        frontier = self._read("frontier", S.FRONTIER)
-        requests = self._read("requests", S.REQUESTS)
-        latest = (
-            requests.filter(F.col("status_code") == 200)
-            .groupBy("url_id")
-            .agg(F.max(F.struct("requested_at", "epoch")).alias("_s"))
-            .select(
-                "url_id",
-                F.col("_s.requested_at").alias("requested_at"),
-                F.col("_s.epoch").alias("epoch"),
-            )
-        )
-        fetched_like = frontier.join(latest, "url_id").withColumn(
-            "status_code", F.lit(200)
+        image_id merge key makes the rebuild idempotent. Each URL's latest
+        success is its ``url_state`` summary (``last_ok_at``, ``last_ok_epoch``):
+        no scan of the request log."""
+        e = open_epoch(self.store)
+        state = crawl_state(self._read("frontier", S.FRONTIER), self._url_state())
+        fetched_like = state.filter("has_ok").select(
+            *S.FRONTIER.fieldNames(),
+            F.col("last_ok_at").alias("requested_at"),
+            F.col("last_ok_epoch").alias("epoch"),
+            F.lit(200).alias("status_code"),
         )
         # reextract touches every URL ever fetched OK — gate the metadata/key
         # broadcasts on the live frontier's manifest row count
@@ -445,6 +452,7 @@ class CrawlEngine:
             hint_broadcast=est_urls <= self.config.broadcast_threshold_rows,
         )
         m = self.store.merge("documents", docs, e, keys=["image_id"])
+        commit_epoch(self.store, self.spark, e)
         return {"epoch": e, "reextracted": m["rows"]}
 
     # -- shutdown --------------------------------------------------------------
@@ -452,10 +460,9 @@ class CrawlEngine:
     def shutdown_compact(self) -> None:
         """D4: drop frontier rows that were never requested (reference
         drop_uncrawled_urls at crawler shutdown, db/url.py:139-156) in one
-        base snapshot of the crawled rows, so the next run reads no deltas."""
-        # commit above both the crawl clock and the frontier's own chain
-        # (repeated shutdowns / post-shutdown crawls advance the latter)
-        e = max(self.current_epoch(), self.store.latest("frontier") or 0) + 1
+        base snapshot of the crawled rows, so the next run reads no deltas.
+        A maintenance epoch on the crawl clock: it ends with a ledger row."""
+        e = open_epoch(self.store)
         state = crawl_state(self._read("frontier", S.FRONTIER), self._url_state())
         # a null terminal ⇔ no url_state row ⇔ never requested
         uncrawled = state.filter(F.col("terminal").isNull())
@@ -485,3 +492,4 @@ class CrawlEngine:
         # commit so the next epoch opens it instead of rescanning the frontier
         if sketch is not None:
             sketch.set_stamp(e)
+        commit_epoch(self.store, self.spark, e)

@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 from ..functions.rules import rules_df
 from ..sources import schema as S
 from ..sources.epochstore import EpochStore
+from .epoch import commit_epoch, open_epoch
 
 # logical twin of europarl_index.json (content:text → caption per input_hint)
 INDEX_DOCS = T.StructType(
@@ -107,7 +108,10 @@ def reset_postprocessing(
     documents table, so "data=NULL" is a keyed tombstone; "unindex=indexed"
     is a semi-join of the victims against the serving table into the
     ``unindex_queue`` table. ``CrawlEngine.reextract`` is the re-run half.
+    The tombstone is a maintenance epoch on the crawl clock (it ends with a
+    ledger row); the queue, an index-side table, keeps its own chain.
     """
+    de = open_epoch(store)
     docs = store.read("documents", spark, schema=S.DOCUMENTS)
     victims = docs if rulename is None else docs.filter(F.col("rulename") == rulename)
     try:
@@ -119,8 +123,8 @@ def reset_postprocessing(
     )
     qe = (store.latest("unindex_queue") or 0) + 1
     mq = store.merge("unindex_queue", queued, qe, keys=["image_id"])
-    de = (store.latest("documents") or 0) + 1
     md = store.delete("documents", victims, de, keys=["image_id"])
+    commit_epoch(store, spark, de)
     return {"reset": md["rows"], "queued_unindex": mq["rows"]}
 
 

@@ -29,13 +29,16 @@ about 10^10-row scale:
   (Iceberg expire_snapshots) so the store footprint is bounded at 10^10-row
   scale; expired time travel / pre-watermark incremental reads raise.
 - a data dir without its manifest is an aborted write: ignored on read,
-  clobbered on retry. Resume = read manifests, continue from max committed
-  epoch. Equivalent to the reference's "only fully-processed work commits"
-  shutdown protocol (SURVEY T7).
+  clobbered on retry. A commit is per table; where a crawl epoch ends is
+  the caller's ledger: the crawl engine's ``epochs`` row is an epoch's
+  commit point, and ``rollback`` drops whatever a crashed epoch committed
+  above it (plans/epoch.py ``open_epoch``). Equivalent to the reference's
+  "only fully-processed work commits" shutdown protocol (SURVEY T7).
 
 On a real cluster this module is swapped for Iceberg tables: the call sites
-(plans/epoch.py) use only merge/append/overwrite/read/latest, which map to
-``MERGE INTO``, ``INSERT INTO``, ``INSERT OVERWRITE`` and snapshot reads.
+(plans/epoch.py) use only merge/append/overwrite/read/latest/rollback,
+which map to ``MERGE INTO``, ``INSERT INTO``, ``INSERT OVERWRITE``,
+snapshot reads and the ``rollback_to_snapshot`` procedure.
 The crawl loop's writes keep the contracts above, so an Iceberg port needs
 no change to the engine.
 """
@@ -137,11 +140,12 @@ class EpochStore:
         return max((int(p.stem) for p in mdir.glob("*.json")), default=None)
 
     def rollback(self, table: str, to_epoch: int) -> None:
-        """Drop every commit after ``to_epoch`` (manifests first, then data)."""
-        for m in self.manifests(table):
-            if m["epoch"] > to_epoch:
-                (self._mdir(table) / f"{m['epoch']:08d}.json").unlink()
-                shutil.rmtree(self.root / table / f"epoch={m['epoch']}", ignore_errors=True)
+        """Drop every commit after ``to_epoch``, newest first (manifest, then
+        data), found by manifest file name without parsing any manifest."""
+        for p in sorted(self._mdir(table).glob("*.json"), reverse=True):
+            if int(p.stem) > to_epoch:
+                p.unlink()
+                shutil.rmtree(self.root / table / f"epoch={int(p.stem)}", ignore_errors=True)
 
     # -- write paths ---------------------------------------------------------
 

@@ -5,8 +5,9 @@ crawl — frontier membership, request log, drain order — must be bit-identica
 to a crawl whose gate is the exact anti-join alone. The exact-only engine is
 a test fake: it never opens the sketch checkpoint. This pins that, plus the
 checkpoint's lifecycle: stamped with every frontier commit, opened on
-restart without a rescan, rebuilt after a crash between commit and stamp,
-and evicted in place at shutdown_compact (D4).
+restart without a rescan, reopened after a crash between commit and stamp
+(the restart rolls the commit back), and evicted in place at
+shutdown_compact (D4).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import numpy as np
 import pytest
 
 from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
-from europarl_crawler_spark.plans.epoch import CrawlEngine
+from europarl_crawler_spark.plans.epoch import CrawlEngine, commit_epoch, open_epoch
 from europarl_crawler_spark.sources.epochstore import EpochStore
 from europarl_crawler_spark.sources.synthetic import session_days_df, simulated_web
 
@@ -111,8 +112,9 @@ def _copy(runs, name):
 
 def _grow_unrequested(eng, n: int) -> np.ndarray:
     """Commit ``n`` never-requested frontier rows the way run_epoch grows
-    the frontier: a keyed append, its url_ids added to the checkpoint, then
-    the stamp moved to the new head. Returns the added url_ids."""
+    the frontier: on the crawl clock, a keyed append, its url_ids added to
+    the checkpoint, the stamp moved to the new head, then the ledger row.
+    Returns the added url_ids."""
     from pyspark.sql import functions as F
 
     store = eng.store
@@ -120,12 +122,13 @@ def _grow_unrequested(eng, n: int) -> np.ndarray:
     extra = frontier.limit(n).withColumn(
         "url_id", F.xxhash64("url_id", F.lit("never-requested"))
     )
-    head = store.latest("frontier") + 1
-    store.append("frontier", extra, head, keys=["url_id"])
+    e = open_epoch(store)
+    store.append("frontier", extra, e, keys=["url_id"])
     ids = np.array([r.url_id for r in extra.select("url_id").collect()], dtype=np.int64)
     sketch = _checkpoint(store)
     sketch.add_many(ids)
-    sketch.set_stamp(head)
+    sketch.set_stamp(e)
+    commit_epoch(store, eng.spark, e)
     return ids
 
 
@@ -178,18 +181,19 @@ def test_restart_rebuilds_sketch_even_without_new_urls(runs, monkeypatch):
     assert sketch.might_contain(_frontier_ids(copy, eng2.spark)).all()
 
 
-def test_crash_after_frontier_append_rebuilds(spark, tmp_path, monkeypatch):
+def test_crash_after_frontier_append_reopens_the_checkpoint(spark, tmp_path, monkeypatch):
     """A crash in the sketch maintenance after the frontier append leaves
-    the checkpoint stamped with the previous head, so it is never opened
-    as a sketch that misses the appended url_ids. A small prefetch limit
-    leaves calendar days unprobed for the crashed epoch, so the re-run
-    epoch regenerates that append's pending probes, which a sketch without
-    them would pass as new. The next engine rebuilds, and reaches the
-    frontier of an exact-only engine restarted on the same crashed store."""
+    the checkpoint stamped with the previous head and the append above the
+    ledger. A small prefetch limit leaves calendar days unprobed for the
+    crashed epoch, so the re-run epoch regenerates that append's pending
+    probes. The next engine rolls the append back, so the stamp equals the
+    head again: it opens the checkpoint without a rebuild and reaches the
+    frontier of an uninterrupted crawl."""
     import shutil
 
     eng, store = _run(spark, tmp_path, "crash", n_epochs=2, prefetch_limit=4)
     assert _checkpoint(store).stamp == store.latest("frontier")
+    clean = EpochStore(shutil.copytree(store.root, tmp_path / "store-crash-clean"))
 
     class Crash(Exception):
         pass
@@ -204,23 +208,20 @@ def test_crash_after_frontier_append_rebuilds(spark, tmp_path, monkeypatch):
             eng.run(1, start=START)
     assert store.latest("frontier") == head + 1  # the append committed
     assert _checkpoint(store).stamp == head
-    exact = EpochStore(shutil.copytree(store.root, tmp_path / "store-crash-exact"))
 
     def restart(st):
         CrawlEngine(
             spark, st, eng.web, prefetch_limit=4, epoch_secs=600.0
         ).run(1, start=START)
 
+    restart(clean)
     builds = _count_builds(monkeypatch)
     restart(store)
-    assert len(builds) == 1
+    assert builds == []
     assert _checkpoint(store).stamp == store.latest("frontier")
-    with monkeypatch.context() as mp:
-        mp.setattr(CrawlEngine, "_open_sketch", lambda self: None)
-        restart(exact)
     cols = ["url_id", "url_hash", "rule_id", "url"]
     got = _snapshot(store, spark, "frontier", cols)
-    assert got == _snapshot(exact, spark, "frontier", cols)
+    assert got == _snapshot(clean, spark, "frontier", cols)
     assert len(got) == len({r[0] for r in got})
 
 
@@ -330,3 +331,41 @@ def test_crash_mid_eviction_leaves_no_loadable_checkpoint(runs, monkeypatch):
     with pytest.raises(RuntimeError, match="simulated crash"):
         eng.shutdown_compact()
     assert _checkpoint(store).stamp != store.latest("frontier")
+
+
+def test_crash_mid_rebuild_leaves_no_loadable_checkpoint(runs, monkeypatch):
+    """An overflowing ``add_many`` makes the epoch rebuild the sketch into
+    the checkpoint's directory, whose stamp is still the previous frontier
+    head. A crash inside that build leaves shard files missing, and the
+    restart rolls the frontier back to that head — so the build must drop
+    the checkpoint before touching a shard, or the restart would open a
+    sketch that calls seen url_ids new."""
+    from pyspark.sql import functions as F
+
+    eng, store = _copy(runs, "crash-build")
+    head = store.latest("frontier")
+    assert _checkpoint(store).stamp == head
+    real_build = CuckooShardStore.build
+
+    def overflow(self, hashes):
+        raise RuntimeError("cuckoo shard full")
+
+    def crashing_build(seen, root, *a, **k):
+        seen = seen.withColumn("url_id", F.raise_error(F.lit("crash mid-build")).cast("long"))
+        return real_build(seen, root, *a, **k)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(CuckooShardStore, "add_many", overflow)
+        mp.setattr(CuckooShardStore, "build", crashing_build)
+        with pytest.raises(Exception, match="crash mid-build"):
+            eng.run(1, start=START)
+    restarted = CrawlEngine(
+        eng.spark, store, eng.web, prefetch_limit=50, epoch_secs=600.0
+    )
+    restarted.run(1, start=START)
+    assert store.latest("frontier") == head + 1
+    ids = _frontier_ids(store, eng.spark)
+    assert len(ids) == len(np.unique(ids))
+    sketch = _checkpoint(store)
+    assert sketch.stamp == store.latest("frontier")
+    assert sketch.might_contain(ids).all()

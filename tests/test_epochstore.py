@@ -59,11 +59,22 @@ def test_append_table(spark, store):
     assert store.read("log", spark).count() == 2
 
 
-def test_rollback(spark, store):
+def test_rollback(spark, store, monkeypatch):
     store.merge("t", _df(spark, [(1, "a")]), 1, keys=["k"])
     store.merge("t", _df(spark, [(1, "A2")]), 2, keys=["k"])
-    store.rollback("t", 1)
+    store.merge("t", _df(spark, [(1, "A3")]), 3, keys=["k"])
+    from europarl_crawler_spark.sources import epochstore
+
+    # every crawl writer rolls back on open: file names only, no parse
+    loads = []
+    real_load = epochstore.json.load
+    with monkeypatch.context() as mp:
+        mp.setattr(epochstore.json, "load", lambda f: loads.append(f) or real_load(f))
+        store.rollback("t", 1)
+        store.rollback("missing", 0)
+    assert loads == []
     assert store.latest("t") == 1
+    assert not (store.root / "t" / "epoch=2").exists()
     assert store.read("t", spark).first().v == "a"
 
 
