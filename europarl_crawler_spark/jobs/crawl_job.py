@@ -8,7 +8,9 @@ Resumable: re-running against the same --store continues after the last
 epoch of the store's ``epochs`` ledger, whose row is each epoch's commit
 point; whatever a crashed run committed above it is rolled back first
 (plans/epoch.py ``open_epoch``), so the re-run epoch reaches the tables an
-uninterrupted run would. Prints one JSON line per epoch.
+uninterrupted run would. That rollback would also remove a live run's epoch
+in flight: run one crawl (or crawl-table maintenance writer) per store at a
+time. Prints one JSON line per epoch.
 """
 
 from __future__ import annotations

@@ -22,12 +22,17 @@ Usage:
     ... reextract --web /data/web
     ... index --limit 500
 
-Every command first rolls the crawl tables back to the ``epochs`` ledger
-(``plans/epoch.py::open_epoch``), so ``expire`` never drops epochs below a
-base that a later rollback would remove and ``index`` never serves a crashed
-epoch's documents. A command that writes a crawl table (reset-postprocessing,
-reextract, shutdown-compact, compact-table and rewrite-zorder of a crawl
-table) commits at the ledger's next epoch and ends with its ledger row.
+A command that writes a crawl table (reset-postprocessing, reextract,
+shutdown-compact, compact-table and rewrite-zorder of a crawl table) is a
+crawl-table writer: it opens the ledger's next epoch
+(``plans/epoch.py::open_epoch``, which rolls back what a crash left above
+the ledger), commits there and ends with its ledger row. Like the crawl, it
+must not run while another crawl-table writer does. The other commands only
+read crawl tables and delete nothing: ``index`` and ``text-features`` read
+``documents`` as of the ledger head, so they never serve an epoch still in
+flight, and ``expire`` of a crawl table drops only commits older than the
+newest base at or below the ledger head, never below a base that a later
+rollback would remove. They are safe to run beside a crawl.
 
 Each command prints one JSON line with the action's row counts; all actions
 are idempotent (keyed merges/tombstones over EpochStore snapshots), so a
@@ -112,13 +117,13 @@ def main(argv=None) -> dict:
     from pyspark.sql import SparkSession
 
     from ..plans import indexer
-    from ..plans.epoch import CRAWL_TABLES, CrawlEngine, commit_epoch, open_epoch
+    from ..plans.epoch import CRAWL_TABLES, CrawlEngine, commit_epoch, ledger_head, open_epoch
     from ..sources import schema as S
     from ..sources.epochstore import EpochStore
 
     spark = SparkSession.builder.appName("europarl-maintenance").getOrCreate()
     store = EpochStore(args.store)
-    e = open_epoch(store)
+    crawl = getattr(args, "table", None) in CRAWL_TABLES
 
     def engine():
         if not args.web:
@@ -148,8 +153,7 @@ def main(argv=None) -> dict:
         out = {"compacted": True}
     elif args.cmd in ("compact-table", "rewrite-zorder"):
         # a crawl table commits on the crawl clock, any other on its own chain
-        crawl = args.table in CRAWL_TABLES
-        nxt = e if crawl else (store.latest(args.table) or 0) + 1
+        nxt = open_epoch(store) if crawl else (store.latest(args.table) or 0) + 1
         if args.cmd == "compact-table":
             out = store.compact(
                 args.table, spark, nxt, target_partitions=args.target_partitions
@@ -167,9 +171,9 @@ def main(argv=None) -> dict:
             )
             out = {k: v for k, v in out.items() if k != "file_stats"}
         if crawl:
-            commit_epoch(store, spark, e)
+            commit_epoch(store, spark, nxt)
     elif args.cmd == "expire":
-        out = store.expire(args.table)
+        out = store.expire(args.table, as_of=ledger_head(store) if crawl else None)
     out = {"cmd": args.cmd, **out}
     print(json.dumps(out, default=str), flush=True)
     return out

@@ -14,7 +14,9 @@ first rolls back every crawl-table commit above L (a crash's leftovers) and
 returns L + 1, commits every table write at that one epoch, and ends with
 ``commit_epoch``'s ledger row. So a restart after a crash at any point of
 an epoch re-runs that epoch from the same snapshot and reaches the same
-tables as a run without the crash.
+tables as a run without the crash. The rollback makes crawl-table writers
+single-writer; readers outside an epoch (the indexer) read as of
+``ledger_head`` and roll nothing back.
 
 Between epochs only the store holds crawl state; the engine keeps none.
 The seen sketch is a checkpoint under ``_seen_sketch/store``, stamped with
@@ -24,9 +26,15 @@ head, so a first epoch, a steady-state epoch and a restart run one path, and
 a crash between a commit and its stamp costs a rebuild, never a false
 negative. ``open_epoch`` unstamps a checkpoint stamped above L: after the
 rollback, a re-run epoch can commit a different frontier under the same
-number. A growing table (``frontier``, ``url_state``) whose live chain
-holds ``MAX_LIVE_COMMITS`` commits takes the epoch's growth as one folded
-base instead of another append, so reads never list more than that many
+number. The invariant is one-sided: a stamp equal to the head means the
+shards hold a superset of the frontier's url_ids. A crash inside
+``add_many`` leaves the old stamp and fingerprints of the append that the
+restart rolls back; they stay until the next rebuild, costing load and an
+exact anti-join for those ids, never a wrong answer.
+
+A growing table (``frontier``, ``url_state``) whose live chain holds
+``MAX_LIVE_COMMITS`` commits takes the epoch's growth as one folded base
+instead of another append, so reads never list more than that many
 directories however long the crawl.
 
 Determinism: with a fixed ``now`` per epoch, the whole crawl — frontier
@@ -84,13 +92,30 @@ def _checkpoint(store: EpochStore) -> CuckooShardStore | None:
     return CuckooShardStore(root) if (root / "meta.json").exists() else None
 
 
+def ledger_head(store: EpochStore) -> int:
+    """The crawl clock's last committed epoch L: the head of the ``epochs``
+    ledger, 0 when it is empty. Crawl-table readers outside an epoch read
+    ``as_of`` it, so they never see an epoch still in flight."""
+    return store.latest("epochs") or 0
+
+
 def open_epoch(store: EpochStore) -> int:
     """Open the next epoch on the crawl clock: roll every crawl table back
-    to the ``epochs`` ledger's head L (0 when empty), unstamp a seen-sketch
-    checkpoint stamped above L, and return L + 1. Without a crash this
-    lists each table's manifest names once: no manifest parse, no Spark
-    job."""
-    head = store.latest("epochs") or 0
+    to the ledger head L, unstamp a seen-sketch checkpoint stamped above L,
+    and return L + 1. Without a crash this lists each table's manifest
+    names once: no manifest parse, no Spark job.
+
+    The rollback cannot tell a crash's leftovers from an epoch another
+    writer has in flight, so crawl-table writers must be single-writer:
+    one crawl or maintenance writer at a time. It refuses (and touches
+    nothing) when a crawl table is expired up to a base above L, since
+    every commit older than that base is gone and the rollback would leave
+    the table empty; a store written before the crawl clock existed can
+    hold such a base."""
+    head = ledger_head(store)
+    expired = [t for t in CRAWL_TABLES if (store.expiry_watermark(t) or 0) > head]
+    if expired:
+        raise ValueError(f"{expired}: expired up to a base above the epochs ledger head {head}")
     for table in CRAWL_TABLES:
         store.rollback(table, head)
     sketch = _checkpoint(store)
@@ -183,7 +208,8 @@ class CrawlEngine:
         """The seen-sketch checkpoint, opened only when its stamp is the
         frontier head. ``run_epoch`` stamps it with every frontier commit
         it makes, after the commit's url_ids are in the shard files, so a
-        matching stamp means every frontier ``url_id`` is in the sketch;
+        matching stamp means every frontier ``url_id`` is in the sketch (a
+        superset: ids of a rolled-back append can stay);
         any other stamp (a crash between the commit and the stamp, or a
         frontier commit made outside the loop) means a rebuild."""
         sketch = _checkpoint(self.store)
@@ -228,7 +254,7 @@ class CrawlEngine:
             self.store.overwrite("session_days", clustered, 0, keys=["date_id"])
 
     def current_epoch(self) -> int:
-        return self.store.latest("epochs") or 0
+        return ledger_head(self.store)
 
     def _estimated_hosts(self) -> int:
         """Host-count estimate from the politeness table's live chain — one

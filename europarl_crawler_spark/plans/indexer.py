@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 from ..functions.rules import rules_df
 from ..sources import schema as S
 from ..sources.epochstore import EpochStore
-from .epoch import commit_epoch, open_epoch
+from .epoch import commit_epoch, ledger_head, open_epoch
 
 # logical twin of europarl_index.json (content:text → caption per input_hint)
 INDEX_DOCS = T.StructType(
@@ -76,9 +76,10 @@ def index_epoch(
     """One indexing pass: batch of unindexed docs → MERGE into index_docs.
 
     Idempotent (T8): re-running after a partial failure re-merges the same
-    keys with the same values.
+    keys with the same values. Reads ``documents`` as of the crawl ledger's
+    head: an epoch in flight (or crashed) is never served.
     """
-    docs = store.read("documents", spark, schema=S.DOCUMENTS)
+    docs = store.read("documents", spark, schema=S.DOCUMENTS, as_of=ledger_head(store))
     try:
         idx = store.read("index_docs", spark, schema=INDEX_DOCS)
     except ValueError:
@@ -156,10 +157,11 @@ def text_features_epoch(store: EpochStore, spark: SparkSession) -> dict:
     pairs (north_rule), so the caption IS the document's text: feed it
     through the fused textstats profile (token count, quality, language-ID —
     one projection, operators/textstats.py:text_profile) and merge the
-    result keyed by image_id."""
+    result keyed by image_id, from ``documents`` as of the crawl ledger's
+    head."""
     from ..operators import textstats
 
-    docs = store.read("documents", spark, schema=S.DOCUMENTS)
+    docs = store.read("documents", spark, schema=S.DOCUMENTS, as_of=ledger_head(store))
     feats = textstats.text_profile(docs, text_col="caption", id_col="image_id")
     e = (store.latest("doc_text_stats") or 0) + 1
     m = store.merge("doc_text_stats", feats, e, keys=["image_id"])

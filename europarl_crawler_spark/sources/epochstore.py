@@ -32,8 +32,10 @@ about 10^10-row scale:
   clobbered on retry. A commit is per table; where a crawl epoch ends is
   the caller's ledger: the crawl engine's ``epochs`` row is an epoch's
   commit point, and ``rollback`` drops whatever a crashed epoch committed
-  above it (plans/epoch.py ``open_epoch``). Equivalent to the reference's
-  "only fully-processed work commits" shutdown protocol (SURVEY T7).
+  above it (plans/epoch.py ``open_epoch``). That rollback cannot tell a
+  crash from a writer in flight, so the crawl tables take one writer at a
+  time. Equivalent to the reference's "only fully-processed work commits"
+  shutdown protocol (SURVEY T7).
 
 On a real cluster this module is swapped for Iceberg tables: the call sites
 (plans/epoch.py) use only merge/append/overwrite/read/latest/rollback,
@@ -395,17 +397,19 @@ class EpochStore:
         preds = [(col, lo, hi)] + [tuple(e) for e in (extra or [])]
         return self._prune(table, self.live_manifests(table, as_of), preds)
 
-    def expire(self, table: str) -> dict:
+    def expire(self, table: str, as_of: int | None = None) -> dict:
         """Iceberg ``expire_snapshots`` analog: physically drop every epoch
-        STRICTLY OLDER than the newest base snapshot — they are superseded
-        for latest reads (``read`` starts at the newest base), so at
-        10^10-row scale this is what bounds the store's footprint.
+        STRICTLY OLDER than the newest base snapshot at ``as_of`` (default:
+        latest) — they are superseded for reads from that base on, so at
+        10^10-row scale this is what bounds the store's footprint. A crawl
+        table expires as of the ledger head, never past a base that the next
+        epoch's rollback could remove (plans/epoch.py ``open_epoch``).
 
         The trade is the same one Iceberg makes: time travel to an expired
         snapshot and incremental reads from before the expiry watermark are
         gone — both now RAISE (watermark recorded in ``_expired.json``)
         instead of silently answering from missing data."""
-        ms = self.manifests(table)
+        ms = [m for m in self.manifests(table) if as_of is None or m["epoch"] <= as_of]
         bases = [m for m in ms if m["kind"] == "base"]
         if not bases:
             return {"table": table, "expired": [], "watermark": None}
@@ -425,7 +429,7 @@ class EpochStore:
         os.replace(tmp, wpath)
         return {"table": table, "expired": expired, "watermark": wm}
 
-    def _expiry_watermark(self, table: str) -> int | None:
+    def expiry_watermark(self, table: str) -> int | None:
         wpath = self.root / table / "_expired.json"
         if not wpath.is_file():
             return None
@@ -465,7 +469,7 @@ class EpochStore:
         directory), read them once, run the latest-wins window only if a
         keyed delta is live, drop tombstones, apply the residual filter.
         A given ``schema`` is pinned on the reader: no inference job."""
-        wm = self._expiry_watermark(table)
+        wm = self.expiry_watermark(table)
         if as_of is not None and wm is not None and as_of < wm:
             raise ValueError(
                 f"snapshot {as_of} of {table} was expired (watermark {wm})"
@@ -569,7 +573,7 @@ class EpochStore:
         answerable from data files — the same rule Iceberg's incremental
         read enforces for overwrite snapshots).
         """
-        wm = self._expiry_watermark(table)
+        wm = self.expiry_watermark(table)
         if wm is not None and since < wm:
             raise ValueError(
                 f"incremental read of {table} since epoch {since} crosses the "

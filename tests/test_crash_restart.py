@@ -7,7 +7,9 @@ the crawl, and asserts that every crawl table and the ledger equal an
 uninterrupted run's, row for row. The maintenance writers (a crawl-table
 compaction, the documents tombstone of ``reset_postprocessing``) commit on
 the same clock, so a crawl epoch after them neither conflicts with them
-nor rolls them back.
+nor rolls them back. The maintenance readers (``index``, ``expire``) work as
+of the ledger head and roll nothing back, so an epoch in flight beside them
+finishes as if they had not run.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ from europarl_crawler_spark.plans.epoch import (
     CRAWL_TABLES,
     CrawlEngine,
     _fold_url_state,
+    commit_epoch,
+    open_epoch,
 )
 from europarl_crawler_spark.sources.epochstore import EpochStore
 from europarl_crawler_spark.sources.synthetic import session_days_df, simulated_web
@@ -136,6 +140,72 @@ def test_crash_in_shutdown_compact_restarts_to_the_same_tables(world, monkeypatc
     assert written == list(SHUTDOWN_WRITES[:n])
     _engine(world, store).shutdown_compact()
     _assert_like_clean(world, store)
+
+
+def test_index_beside_an_epoch_in_flight_deletes_nothing(world, monkeypatch):
+    """A maintenance ``index`` run while a crawl epoch is in flight (its
+    frontier, requests, url_state and documents committed, its ledger row
+    not yet) reads ``documents`` as of the ledger head and rolls nothing
+    back: the epoch finishes to the uninterrupted run's tables, and the
+    index serves only the documents of committed epochs."""
+    from europarl_crawler_spark.jobs.maintenance_job import main as maint
+
+    spark = world["spark"]
+    store = _copy(world, "index-in-flight")
+    real = EpochStore._commit
+    ran = []
+
+    def commit(self, table, *a, **kw):
+        if table == "politeness" and not ran:
+            assert self.latest("documents") == 3 > self.latest("epochs")
+            ran.append(maint(["--store", str(self.root), "index"]))
+        return real(self, table, *a, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(EpochStore, "_commit", commit)
+        _finish(world, store)
+    assert ran and ran[0]["indexed"] > 0
+    _assert_like_clean(world, store)
+
+    def ids(table, **kw):
+        return {r.image_id for r in store.read(table, spark, **kw).collect()}
+
+    assert ids("index_docs") == ids("documents", as_of=2) < ids("documents", as_of=3)
+
+
+def test_expire_of_a_crawl_table_keeps_what_a_rollback_needs(world):
+    """``expire`` of a crawl table drops only commits older than the newest
+    base at or below the ledger head. A base above it (here an epoch-3
+    ``url_state`` fold of a crawl that then crashed) does not count: the
+    restart rolls it back and still finds the commits below it."""
+    from europarl_crawler_spark.jobs.maintenance_job import main as maint
+
+    store = _copy(world, "expire-in-flight")
+    store.compact("url_state", world["spark"], 3)
+    out = maint(["--store", str(store.root), "expire", "--table", "url_state"])
+    assert (out["expired"], out["watermark"]) == ([], None)
+    _finish(world, store)
+    _assert_like_clean(world, store)
+
+
+def test_open_epoch_refuses_a_table_expired_above_the_ledger(world):
+    """A crawl table expired up to a base above the ledger head (a store
+    written before the crawl clock, whose maintenance commits have no ledger
+    rows) has no commit left at or below the head: ``open_epoch`` raises
+    instead of rolling the table back to nothing, and touches no table. The
+    README's migration, one ledger row at the newest crawl-table commit,
+    lets the store open again with that base kept."""
+    spark = world["spark"]
+    store = _copy(world, "expired-above")
+    store.compact("url_state", spark, 3)
+    store.expire("url_state")
+    before = {t: store.latest(t) for t in CRAWL_TABLES}
+    with pytest.raises(ValueError, match="ledger head 2"):
+        open_epoch(store)
+    assert {t: store.latest(t) for t in CRAWL_TABLES} == before
+    commit_epoch(store, spark, max(store.latest(t) or 0 for t in CRAWL_TABLES))
+    assert open_epoch(store) == 4
+    assert {t: store.latest(t) for t in CRAWL_TABLES} == before
 
 
 def test_crawl_epoch_after_compacting_a_crawl_table(world):
