@@ -718,7 +718,7 @@ def q_o8_spaced_refresh(spark, sf_dir):
     """O8: the piecewise recrawl-spacing schedule (downloader.py:39-68):
     every day ×14, every 2nd to 42, every 5th to 322, every 10th to 3132.
     The predicate is THE engine expression (plans/frontier.py
-    spaced_refresh_keep_expr — the same one recrawl_candidates drains by)."""
+    spaced_refresh_keep_expr — the same one drain_candidates drains by)."""
     from europarl_crawler_spark.plans.frontier import spaced_refresh_keep_expr
 
     cal = _calendar(spark, sf_dir)

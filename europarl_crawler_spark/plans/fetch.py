@@ -14,7 +14,9 @@ file sizing:
                      key+tag shuffle, bytes not involved.
 2. store filter    : web LEFT SEMI broadcast(ok url_hashes) — a map-side
                      filter over the content store's own partitions (the
-                     broadcast is 8 bytes/URL, budget-bounded).
+                     broadcast is 8 bytes/URL, budget-bounded). The keys
+                     go in as fetched, with no ``distinct``: a left semi
+                     join never duplicates a row.
 3. extract         : the hit rows are hash-repartitioned on ``url_hash``
                      into ``defaultParallelism`` partitions, then Arrow
                      ``mapInPandas`` decodes + phashes them. An epoch's hits
@@ -33,10 +35,11 @@ At 10^10-URL scale the drained side is politeness-budget-bounded
 when a deployment exceeds broadcast comfort
 (EngineConfig.broadcast_threshold_rows), the engine passes
 ``hint_broadcast=False`` and steps 2/4 degrade to thin-key shuffles with AQE
-choosing the strategy — the payload-stationarity of the STORE is what
-matters (a naive drained ⋈ web join shuffles the store's binary columns and
-turns the epoch disk-bound; measured 2.3× slower at 32 cores on the scale
-bench).
+choosing the strategy, as the drain's politeness lookup does on the same
+threshold (plans/politeness.py:host_budgets) — the payload-stationarity of
+the STORE is what matters (a naive drained ⋈ web join shuffles the store's
+binary columns and turns the epoch disk-bound; measured 2.3× slower at 32
+cores on the scale bench).
 
 Status codes are pure column expressions (epoch-dependent for flaky rows);
 dead-letter lanes (408/429/460/5xx) stay in the request log and are re-drained
@@ -159,9 +162,8 @@ def extract_documents(
     """
     maybe_b = F.broadcast if hint_broadcast else (lambda df: df)
     ok = fetched.filter(F.col("status_code") == 200)
-    keys = ok.select("url_hash").distinct()
     hit = (
-        web.join(maybe_b(keys), "url_hash", "left_semi")
+        web.join(maybe_b(ok.select("url_hash")), "url_hash", "left_semi")
         .filter(F.col("bytes").isNotNull())
         .select(
             "url_hash",

@@ -77,7 +77,7 @@ def spaced_refresh_keep_expr(off_col) -> F.Column:
     document's age in days (reference downloader.py:39-68 spaced_out_dates,
     scaled to the engine's day domain): re-fetch daily for 2 weeks, every 2nd
     day to 42, every 5th to 322, every 10th to 3132. The SAME expression
-    drives the engine's recrawl lane (``recrawl_candidates``) and the
+    drives the engine's recrawl lane (``drain_candidates``) and the
     ``o8_spaced_refresh`` catalog query."""
     off = F.col(off_col) if isinstance(off_col, str) else off_col
     return (off >= 0) & (
@@ -139,16 +139,21 @@ def crawl_state(frontier: DataFrame, url_state: DataFrame) -> DataFrame:
     return frontier.join(url_state, "url_id", "left")
 
 
-def recrawl_candidates(state: DataFrame, now_date) -> DataFrame:
-    """O8 wiring: terminal-200 doc URLs re-enter pending when their
-    session-date age matches the spaced-refresh schedule (reference
-    downloader.py:39-68 — the standalone downloader's daily recrawl pass).
+def drain_candidates(state: DataFrame, now_date) -> DataFrame:
+    """The epoch's drain candidates, one filter over the crawl state
+    (``crawl_state``): pending rows, which have no terminal outcome yet
+    (never fetched, or dead-letter retries: T6 keeps 408/460/429/5xx
+    eligible), and the O8 recrawl lane, whose ``priority`` becomes the
+    recrawl band, after all fresh work.
 
-    Guards: doc lanes only (the checker never re-probes terminal days),
-    at most one recrawl per calendar day (``last 200 fetch < today`` — the
-    reference runs the downloader daily), and the recrawl band orders after
-    all fresh work. Scale shape: filters over the crawl state
-    (``crawl_state``) — no join of its own, no window, no collect."""
+    Recrawl rows are terminal-200 doc URLs whose session-date age matches
+    the spaced-refresh schedule (reference downloader.py:39-68, the
+    standalone downloader's daily recrawl pass). Guards: doc lanes only
+    (the checker never re-probes terminal days) and at most one recrawl
+    per calendar day (``last 200 fetch < today``; the reference runs the
+    downloader daily). The two sets are disjoint: the url_state fold makes
+    ``has_ok`` imply ``terminal``. Scale shape: one filter and one
+    projection, no join of its own, no window, no collect."""
     # "last 200 fetch was before today" compared as INSTANTS against today's
     # UTC midnight — to_date(last_ok_at) would evaluate in the session
     # timezone and shift the guard by a day on a non-UTC cluster (ADVICE r2);
@@ -156,13 +161,18 @@ def recrawl_candidates(state: DataFrame, now_date) -> DataFrame:
     midnight_utc = datetime(
         now_date.year, now_date.month, now_date.day, tzinfo=timezone.utc
     )
+    recrawl = (
+        (F.col("rule_id") != SESSION_DAY_RULE_ID)
+        & spaced_refresh_keep_expr(F.datediff(F.lit(now_date), F.col("dates")))
+        & F.col("has_ok")
+        & (F.col("last_ok_at") < F.lit(midnight_utc))
+    )
+    priority = F.when(recrawl, recrawl_priority_expr("dates", "rule_id")).otherwise(
+        F.col("priority")
+    )
     return (
-        state.filter(F.col("rule_id") != SESSION_DAY_RULE_ID)
-        .filter(spaced_refresh_keep_expr(F.datediff(F.lit(now_date), F.col("dates"))))
-        .filter(F.col("has_ok") & (F.col("last_ok_at") < F.lit(midnight_utc)))
-        .withColumn(
-            "priority", recrawl_priority_expr("dates", "rule_id").cast("long")
-        )
+        state.filter(~F.col("terminal").eqNullSafe(True) | recrawl)
+        .withColumn("priority", priority.cast("long"))
         .select(*S.FRONTIER.fieldNames())
     )
 
@@ -290,16 +300,14 @@ def todo_combos(
     return frontier_columns(batch, epoch, doc_priority_expr("dates", "rule_id"))
 
 
-def priority_drain(
-    frontier_batch: DataFrame,
-    budgets: DataFrame,
-    hint_broadcast: bool = True,
-) -> DataFrame:
+def priority_drain(batch: DataFrame) -> DataFrame:
     """Politeness-bounded drain: the EXACT top-``budget`` rows per host in
     the deterministic order (priority, created_epoch, url_hash).
 
-    Two stages so the exactness survives skew at 10^10-URL scale
-    (SURVEY §4.1/§4.3):
+    ``batch``: frontier rows that already carry their host's ``budget``
+    (> 0), as ``plans/politeness.py:host_budgets`` returns them, so the
+    drain joins nothing. Two stages so the exactness survives skew at
+    10^10-URL scale (SURVEY §4.1/§4.3):
 
     1. per-(host, salt) prune: each of the N_SALTS shards keeps its own top
        ``budget`` rows — a parallel window over uniformly-sized shards. Any
@@ -309,22 +317,14 @@ def priority_drain(
        heavy frontier never hits a single-task window; only the pruned
        sliver does (budget ≤ 100/host, so ≤ 1600 rows/host).
 
-    ``budgets``: (host_hash, budget>0) — politeness-bounded, computed as a
-    join against the politeness state table (plans/politeness.py:host_budgets
-    — not a driver dict). ``hint_broadcast``: broadcast the budgets frame
-    when the host-count estimate fits the configured threshold; above it the
-    hint is dropped and AQE picks the strategy (a 10^8-host budgets frame is
-    multi-GB — thin-key shuffle territory). drain_seq = position in the
-    host's crawl order — the reproducible ordering the equivalence suite
-    asserts (SURVEY §7.4.1); the reference's single-host regime makes
-    per-host == global order.
+    drain_seq = position in the host's crawl order — the reproducible
+    ordering the equivalence suite asserts (SURVEY §7.4.1); the
+    reference's single-host regime makes per-host == global order.
     """
     order = [F.asc("priority"), F.asc("created_epoch"), F.asc("url_hash")]
     w_salt = Window.partitionBy("host_hash", "salt").orderBy(*order)
-    budgets = F.broadcast(budgets) if hint_broadcast else budgets
     pruned = (
-        frontier_batch.join(budgets, ["host_hash"], "inner")
-        .withColumn("_srank", F.row_number().over(w_salt))
+        batch.withColumn("_srank", F.row_number().over(w_salt))
         .filter(F.col("_srank") <= F.col("budget"))
         .drop("_srank")
     )

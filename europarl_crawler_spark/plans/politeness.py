@@ -21,6 +21,10 @@ engine runs its data-plane twin below (``host_budgets`` /
 bit-identical to it. The per-epoch fetch budget replaces the queue: budget =
 floor(epoch_secs / INTERVAL_SECS), capped at bucket capacity 100 (reference
 jobs/crawler.py:64 — excess tokens are discarded, tokenbucket.py:135-141).
+``host_budgets`` attaches it to the drain candidates as a column looked up
+from the ``politeness`` table; the engine's broadcast gate
+(``EngineConfig.broadcast_threshold_rows`` against the table's manifest row
+count) decides whether that lookup is broadcast.
 """
 
 from __future__ import annotations
@@ -114,43 +118,44 @@ def budget_expr(interval_col, epoch_secs: float):
     )
 
 
-def host_budgets(pending_hosts, politeness, epoch_secs: float,
+def host_budgets(pending, politeness, epoch_secs: float,
                  min_interval_secs: float = MIN_INTERVAL_SECS,
-                 crawl_delays=None):
-    """(host_hash, budget>0) for the epoch: pending hosts left-join the
-    politeness state table; unknown hosts get the default interval. The
-    output is politeness-bounded (≤ n_hosts rows of 12 bytes) — small enough
-    to broadcast into the drain.
+                 crawl_delays=None, hint_broadcast: bool = True):
+    """The ``pending`` rows whose host has a budget > 0 this epoch, each
+    carrying its ``budget`` column: a lookup of the host's interval in the
+    politeness state table (one row per seen host; unknown hosts take the
+    default interval), not an aggregate over the hosts. ``pending`` may be
+    any frame with a ``host_hash``: the engine passes its drain
+    candidates, a host frame gives one budget row per host.
+
+    ``hint_broadcast`` broadcasts the politeness lookup; the engine sets it
+    when the host-count estimate fits the configured threshold. Above it
+    the hint is dropped and AQE picks the strategy (a 10^8-host state table
+    is multi-GB — thin-key shuffle territory).
 
     ``crawl_delays`` (optional, (host_hash, crawl_delay) from
     robots.crawl_delays_df): a robots Crawl-delay FLOORS the effective
     interval — the adaptive token-bucket interval may back off above it on
     errors, but polite crawling never requests faster than the host asked.
-    Another broadcast-class dimension join; no new shuffle of anything big.
-    A delay ≥ epoch_secs accrues under one token per epoch and yields
+    Another broadcast-class dimension lookup; no new shuffle of anything
+    big. A delay ≥ epoch_secs accrues under one token per epoch and yields
     budget 0 (host skipped) — same as an error-backed-off interval; the
     epoch cadence is the scheduling quantum, so size epoch_secs at or above
     the largest delay you intend to honor.
     """
     from pyspark.sql import functions as F
 
-    joined = pending_hosts.join(
-        politeness.select("host_hash", "interval_secs"), "host_hash", "left"
-    ).select(
-        "host_hash",
-        F.coalesce("interval_secs", F.lit(float(min_interval_secs))).alias("_iv"),
-    )
+    pol = politeness.select("host_hash", "interval_secs")
+    joined = pending.join(F.broadcast(pol) if hint_broadcast else pol, "host_hash", "left")
+    interval = F.coalesce("interval_secs", F.lit(float(min_interval_secs)))
     if crawl_delays is not None:
         joined = joined.join(
-            F.broadcast(crawl_delays.select("host_hash", "crawl_delay")),
-            "host_hash",
-            "left",
-        ).select(
-            "host_hash",
-            F.greatest("_iv", F.coalesce("crawl_delay", F.lit(0.0))).alias("_iv"),
+            F.broadcast(crawl_delays.select("host_hash", "crawl_delay")), "host_hash", "left"
         )
+        interval = F.greatest(interval, F.coalesce("crawl_delay", F.lit(0.0)))
     return (
-        joined.select("host_hash", budget_expr(F.col("_iv"), epoch_secs).alias("budget"))
+        joined.withColumn("budget", budget_expr(interval, epoch_secs))
+        .drop("interval_secs", "crawl_delay")
         .filter(F.col("budget") > 0)
     )
 
@@ -187,7 +192,7 @@ def politeness_update(politeness, flags, now: float,
     - host with events, cadence not due → no-op;
     - host without events → state unchanged (no check fires).
 
-    Output schema matches the ``politeness`` table minus the epoch column.
+    Output schema matches the ``politeness`` table.
     """
     from pyspark.sql import functions as F
 
@@ -275,11 +280,13 @@ def budget_audit(requests, politeness, epoch_secs: float,
                  min_interval_secs: float = MIN_INTERVAL_SECS):
     """(epoch, host_hash) groups of the ENGINE's request log that exceed the
     politeness budget in force for that epoch — must be empty for a healthy
-    crawl (pinned by tests/test_politeness_audit.py on a real engine run).
+    crawl (pinned by tests/test_crawl_e2e.py on a real engine run).
 
     The budget is recomputed from the politeness STATE TABLE as written at
     the PREVIOUS epoch's commit (the state that governed this epoch's
-    drain), via the same ``budget_expr`` the scheduler used — so the audit
+    drain), via the same ``budget_expr`` the scheduler used. ``politeness``
+    is that table's history: each snapshot read ``as_of`` an epoch, tagged
+    with that epoch as an ``epoch`` column. So the audit
     shares the production formula rather than re-deriving constants. Hosts
     absent from the state table use the default interval. One groupBy on
     (epoch, host_hash) + a broadcast-class join against the state table.

@@ -146,8 +146,9 @@ DELAY_SCHEMA = T.StructType(
 
 def crawl_delays_df(spark: SparkSession, robots_by_host: dict[str, str]) -> DataFrame:
     """Per-host Crawl-delay dimension (hosts without a valid delay omitted).
-    Joined into host_budgets as a broadcast — it is ≤ n_hosts rows of
-    16 bytes, the same class as the politeness state table."""
+    ``host_budgets`` looks each drain candidate's delay up in it through a
+    broadcast join — it is ≤ n_hosts rows of 16 bytes, the same class as
+    the politeness state table."""
     rows = []
     for host, text in sorted(robots_by_host.items()):
         d = parse_crawl_delay(text)

@@ -54,10 +54,11 @@ REQUESTS = T.StructType(
     ]
 )
 
-# per-URL crawl-state summary, incrementally merged from each epoch's fetch
-# delta (keys=[url_id]) and periodically compacted: the frontier's terminal
-# anti-join and the O8 recrawl lane read THIS O(urls) table instead of
-# re-scanning the unbounded append-only requests log every epoch
+# per-URL crawl-state summary: an unkeyed append log of each epoch's fetch
+# delta, folded on read (max per url_id) and folded into a base once its
+# live chain holds MAX_LIVE_COMMITS commits. The drain's one filter (pending
+# and O8 recrawl rows) reads THIS O(urls) table instead of re-scanning the
+# unbounded append-only requests log every epoch
 URL_STATE = T.StructType(
     [
         T.StructField("url_id", T.LongType(), False),
@@ -95,14 +96,14 @@ DOCUMENTS = T.StructType(
     ]
 )
 
-# per-host politeness state checkpoint
+# per-host politeness state checkpoint: one base per crawl epoch, dated by
+# its commit epoch (the store's _epoch)
 POLITENESS = T.StructType(
     [
         T.StructField("host_hash", T.LongType(), False),
         T.StructField("interval_secs", T.DoubleType(), False),
         T.StructField("last_check", T.DoubleType(), True),
         T.StructField("next_check", T.DoubleType(), True),
-        T.StructField("epoch", T.IntegerType(), False),
     ]
 )
 

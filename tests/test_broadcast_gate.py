@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from europarl_crawler_spark.config import EngineConfig
-from europarl_crawler_spark.plans.frontier import priority_drain
+from europarl_crawler_spark.plans.politeness import host_budgets
 from europarl_crawler_spark.sources import schema as S
 
 
@@ -28,22 +28,22 @@ def no_auto_broadcast(spark):
     spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
-def _frontier_and_budgets(spark):
+def _frontier_and_politeness(spark):
     rows = [
         (i, 1, 2, date(2021, 1, 1), f"u{i}", i, i % 3, 0, i, 1) for i in range(20)
     ]
     frontier = spark.createDataFrame(rows, S.FRONTIER)
-    budgets = spark.createDataFrame(
-        [(i, 5) for i in range(3)], "host_hash long, budget int"
+    politeness = spark.createDataFrame(
+        [(i, 120.0, None, None) for i in range(3)], S.POLITENESS
     )
-    return frontier, budgets
+    return frontier, politeness
 
 
 def test_drain_hint_off_uses_sort_merge_join(no_auto_broadcast):
     spark = no_auto_broadcast
-    frontier, budgets = _frontier_and_budgets(spark)
+    frontier, politeness = _frontier_and_politeness(spark)
     plan = (
-        priority_drain(frontier, budgets, hint_broadcast=False)
+        host_budgets(frontier, politeness, 600.0, hint_broadcast=False)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -54,9 +54,9 @@ def test_drain_hint_off_uses_sort_merge_join(no_auto_broadcast):
 
 def test_drain_hint_on_broadcasts(no_auto_broadcast):
     spark = no_auto_broadcast
-    frontier, budgets = _frontier_and_budgets(spark)
+    frontier, politeness = _frontier_and_politeness(spark)
     plan = (
-        priority_drain(frontier, budgets, hint_broadcast=True)
+        host_budgets(frontier, politeness, 600.0, hint_broadcast=True)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

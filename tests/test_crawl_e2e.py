@@ -271,9 +271,11 @@ def test_shutdown_drops_uncrawled(world):
 @pytest.fixture(scope="module")
 def folded(spark, tmp_path_factory):
     """A 4-epoch toy crawl at a live-chain bound of 2, with every
-    ``EpochStore.read`` recorded per epoch as (table, jobs it ran), and
-    after each epoch the live chain lengths of frontier and url_state and
-    the frontier's committed rows and distinct url_ids."""
+    ``EpochStore.read`` recorded per epoch as (table, jobs it ran), the
+    physical plan of each epoch's ``requests`` write (file locations
+    printed in full), and after each epoch the live chain lengths of
+    frontier and url_state and the frontier's committed rows and distinct
+    url_ids."""
     from europarl_crawler_spark.plans import epoch as ep
 
     root = tmp_path_factory.mktemp("reads")
@@ -293,22 +295,36 @@ def folded(spark, tmp_path_factory):
         reads.append((table, int(dag.nextJobId()) - j0))
         return out
 
+    plans: list[str] = []
+    real_commit = EpochStore._commit
+
+    def planned(self, table, df, *a, **kw):
+        if table == "requests":
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_commit(self, table, df, *a, **kw)
+
     per_epoch, chains = [], []
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(ep, "MAX_LIVE_COMMITS", 2)
-        mp.setattr(EpochStore, "read", counted)
-        for i in range(4):
-            reads.clear()
-            eng.run_epoch(START + timedelta(seconds=600.0 * i))
-            per_epoch.append(list(reads))
-            ids = real_read(store, "frontier", spark).select("url_id")
-            chains.append(dict(
-                frontier=len(store.live_manifests("frontier")),
-                url_state=len(store.live_manifests("url_state")),
-                rows=sum(m["rows"] for m in store.live_manifests("frontier")),
-                distinct=ids.distinct().count(),
-            ))
-    return dict(store=store, eng=eng, reads=per_epoch, chains=chains)
+    meta_len = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(ep, "MAX_LIVE_COMMITS", 2)
+            mp.setattr(EpochStore, "read", counted)
+            mp.setattr(EpochStore, "_commit", planned)
+            for i in range(4):
+                reads.clear()
+                eng.run_epoch(START + timedelta(seconds=600.0 * i))
+                per_epoch.append(list(reads))
+                ids = real_read(store, "frontier", spark).select("url_id")
+                chains.append(dict(
+                    frontier=len(store.live_manifests("frontier")),
+                    url_state=len(store.live_manifests("url_state")),
+                    rows=sum(m["rows"] for m in store.live_manifests("frontier")),
+                    distinct=ids.distinct().count(),
+                ))
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", meta_len)
+    return dict(store=store, eng=eng, reads=per_epoch, chains=chains, plans=plans)
 
 
 def test_url_state_commits_on_crawl_clock(folded, spark):
@@ -360,6 +376,23 @@ def test_run_epoch_reads_each_table_once_without_jobs(folded):
             "session_days": 2, "frontier": 2, "url_state": 1, "politeness": 1,
         }
         assert [j for _, j in reads] == [0] * len(reads)
+
+
+def test_requests_write_scans_the_crawl_state_once(folded):
+    """The drain reads the crawl state once: from epoch 2 on (epoch 1 has
+    no url_state yet), the plan of the ``requests`` write, which carries
+    the drain candidates, the budget lookup and the drain, scans
+    ``frontier`` and ``url_state`` once each, and its only aggregate is
+    the url_state fold (its partial and final halves)."""
+    import re
+
+    plans = folded["plans"]
+    assert len(plans) == 4
+    for plan in plans[1:]:
+        scans = re.findall(r"Location: InMemoryFileIndex[^\n]*", plan)
+        assert sum("/store/frontier/" in s for s in scans) == 1, plan
+        assert sum("/store/url_state/" in s for s in scans) == 1, plan
+        assert len(re.findall(r"HashAggregate\(", plan)) == 2, plan
 
 
 def test_politeness_reads_parse_only_the_live_manifest(folded, monkeypatch):

@@ -9,10 +9,12 @@ from datetime import date, datetime, timezone
 from pyspark.sql import functions as F
 
 from europarl_crawler_spark.plans.frontier import (
+    BAND,
+    RECRAWL_BAND,
     SESSION_DAY_RULE_ID,
     confirmed_days,
     crawl_state,
-    recrawl_candidates,
+    drain_candidates,
     recrawl_priority_expr,
     spaced_refresh_keep_expr,
 )
@@ -92,7 +94,55 @@ def test_recrawl_candidates_equal_the_join_form(spark):
         .withColumn("priority", recrawl_priority_expr("dates", "rule_id").cast("long"))
         .drop("last_ok_at")
     )
-    got = recrawl_candidates(crawl_state(frontier, url_state), NOW)
+    got = drain_candidates(crawl_state(frontier, url_state), NOW).filter(
+        F.col("priority") >= RECRAWL_BAND * BAND
+    )
     assert got.columns == S.FRONTIER.fieldNames()
     assert _rows(got) == _rows(joined.select(*got.columns))
     assert [r.url_id for r in got.collect()] == [5]
+
+
+def test_drain_candidates_equal_pending_union_recrawl(spark):
+    """One filter over the crawl state equals the union it replaced:
+    pending rows (``terminal`` not true) ∪ the O8 recrawl filters, over a
+    never-fetched URL, a 404, a 503-only URL, a 200 doc due for recrawl, a
+    200 doc not yet due and a 200 probe."""
+    rows = [
+        (1, 10, 2, date(2020, 12, 31), "never-fetched", 1, 9, 0, 5, 1),
+        (2, 11, 2, date(2020, 12, 20), "doc-404", 2, 9, 0, 6, 1),
+        (3, 12, 2, date(2020, 12, 21), "doc-503-only", 3, 9, 1, 7, 1),
+        (4, 13, 2, date(2020, 12, 31), "doc-200-due", 4, 9, 1, 8, 1),
+        # age 17 days: past daily, odd, not a multiple of 5: not due
+        (5, 14, 2, date(2020, 12, 16), "doc-200-not-due", 5, 9, 2, 9, 1),
+        (6, 15, 1, date(2020, 12, 31), "probe-200", 6, 9, 2, 1, 1),
+    ]
+    frontier = spark.createDataFrame(rows, S.FRONTIER)
+    url_state = spark.createDataFrame(
+        [
+            (2, True, False, None, None),
+            (3, False, False, None, None),
+            (4, True, True, OK_AT, 1),
+            (5, True, True, OK_AT, 1),
+            (6, True, True, OK_AT, 1),
+        ],
+        S.URL_STATE,
+    )
+    state = crawl_state(frontier, url_state)
+    midnight = datetime(NOW.year, NOW.month, NOW.day, tzinfo=timezone.utc)
+    pending = state.filter(~F.col("terminal").eqNullSafe(True)).select(
+        *S.FRONTIER.fieldNames()
+    )
+    recrawl = (
+        state.filter(F.col("rule_id") != SESSION_DAY_RULE_ID)
+        .filter(spaced_refresh_keep_expr(F.datediff(F.lit(NOW), F.col("dates"))))
+        .filter(F.col("has_ok") & (F.col("last_ok_at") < F.lit(midnight)))
+        .withColumn("priority", recrawl_priority_expr("dates", "rule_id").cast("long"))
+        .select(*S.FRONTIER.fieldNames())
+    )
+    union = pending.unionByName(recrawl)
+    got = drain_candidates(state, NOW)
+    assert got.dtypes == union.dtypes
+    assert _rows(got) == _rows(union)
+    assert {r.url_id: r.priority >= RECRAWL_BAND * BAND for r in got.collect()} == {
+        1: False, 3: False, 4: True,
+    }

@@ -164,6 +164,57 @@ def test_distributed_update_matches_tokenbucket(spark):
         assert got_b.get(h, 0) == want[h], h
 
 
+def test_host_budgets_lookup_equals_the_distinct_host_form(spark):
+    """Each pending row's budget, looked up from the politeness table and
+    the crawl delays, equals the budget of the old form: distinct pending
+    hosts, their budgets, joined back into the rows. Hosts: one in
+    politeness only, one with a Crawl-delay only, one with both, one with
+    neither, and one whose budget is 0, which contributes no rows."""
+    from pyspark.sql import functions as F
+
+    from europarl_crawler_spark.plans.politeness import budget_expr, host_budgets
+    from europarl_crawler_spark.plans.robots import DELAY_SCHEMA
+    from europarl_crawler_spark.sources.schema import POLITENESS
+
+    epoch_secs = 600.0
+    # (url_id, host_hash): hosts 1 politeness only, 2 delay only, 3 both,
+    # 4 neither, 5 backed off past the epoch (budget 0)
+    pending = spark.createDataFrame(
+        [(u, h) for h in (1, 2, 3, 4, 5) for u in range(10 * h, 10 * h + 3)],
+        "url_id long, host_hash long",
+    )
+    politeness = spark.createDataFrame(
+        [(1, 24.0, 1.0, 2.0), (3, 12.0, None, None), (5, 1200.0, 1.0, 2.0)],
+        POLITENESS,
+    )
+    delays = spark.createDataFrame([(2, 60.0), (3, 30.0)], DELAY_SCHEMA)
+
+    hosts = pending.select("host_hash").distinct()
+    budgets = (
+        hosts.join(politeness.select("host_hash", "interval_secs"), "host_hash", "left")
+        .join(delays, "host_hash", "left")
+        .select(
+            "host_hash",
+            budget_expr(
+                F.greatest(
+                    F.coalesce("interval_secs", F.lit(MIN_INTERVAL_SECS)),
+                    F.coalesce("crawl_delay", F.lit(0.0)),
+                ),
+                epoch_secs,
+            ).alias("budget"),
+        )
+        .filter(F.col("budget") > 0)
+    )
+    want = pending.join(budgets, "host_hash")
+    got = host_budgets(pending, politeness, epoch_secs, crawl_delays=delays)
+
+    def rows(df):
+        return sorted((r.url_id, r.host_hash, r.budget) for r in df.collect())
+
+    assert rows(got) == rows(want)
+    assert {r.host_hash: r.budget for r in got.collect()} == {1: 25, 2: 10, 3: 20, 4: 100}
+
+
 def test_asof_throttle_audit_time_varying_interval(spark):
     import datetime as dt
 

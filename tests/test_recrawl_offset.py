@@ -150,12 +150,19 @@ def test_recrawl_plan_has_no_global_window(spark):
     """Scale shape: recrawl candidate generation is filters over the
     crawl-state join — no window, no cartesian product anywhere in the
     physical plan."""
-    from europarl_crawler_spark.plans.frontier import crawl_state, recrawl_candidates
+    from europarl_crawler_spark.plans.frontier import (
+        BAND,
+        RECRAWL_BAND,
+        crawl_state,
+        drain_candidates,
+    )
     from europarl_crawler_spark.sources import schema as S
 
     frontier = spark.createDataFrame([], S.FRONTIER)
     url_state = spark.createDataFrame([], S.URL_STATE)
-    out = recrawl_candidates(crawl_state(frontier, url_state), date(2021, 1, 1))
+    out = drain_candidates(crawl_state(frontier, url_state), date(2021, 1, 1)).filter(
+        F.col("priority") >= RECRAWL_BAND * BAND
+    )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert "Cartesian" not in plan
@@ -169,7 +176,12 @@ def test_recrawl_guard_is_session_timezone_independent(spark):
     old to_date() guard saw Jan 2 and wrongly suppressed the recrawl."""
     from datetime import datetime, timezone
 
-    from europarl_crawler_spark.plans.frontier import crawl_state, recrawl_candidates
+    from europarl_crawler_spark.plans.frontier import (
+        BAND,
+        RECRAWL_BAND,
+        crawl_state,
+        drain_candidates,
+    )
     from europarl_crawler_spark.sources import schema as S
 
     frontier = spark.createDataFrame(
@@ -184,7 +196,9 @@ def test_recrawl_guard_is_session_timezone_independent(spark):
         for tz in ("UTC", "Asia/Tokyo", "America/New_York"):
             spark.conf.set("spark.sql.session.timeZone", tz)
             state = crawl_state(frontier, url_state)
-            got = recrawl_candidates(state, date(2021, 1, 2)).count()
+            got = drain_candidates(state, date(2021, 1, 2)).filter(
+                F.col("priority") >= RECRAWL_BAND * BAND
+            ).count()
             assert got == 1, f"recrawl suppressed under session tz {tz}"
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)

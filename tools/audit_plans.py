@@ -12,14 +12,17 @@ plan regression (a lost broadcast hint, a filter that stopped pushing, a
 Python stage sneaking into a JVM lane) shows up as a diff of this table
 rather than a benchmark surprise two rounds later.
 
-``--engine`` audits three crawl-engine stages instead, over the toy
+``--engine`` audits four crawl-engine stages instead, over the toy
 simulated web (10 days): ``extract_documents`` over one drained batch, the
 URL-seen gate (``anti_join_seen`` over a toy frontier, pre-filtered by the
-shard store the engine builds for it), and ``EpochStore.read`` of a toy
-frontier grown by one keyed append. A change that moves the decode back
-onto the content store's scan partitions, a seen probe that regresses to a
-broadcast UDF, or a frontier read that runs the latest-wins window again
-shows up as a diff of those rows.
+shard store the engine builds for it), ``EpochStore.read`` of a toy
+frontier grown by one keyed append, and the drain (``drain_candidates`` →
+``host_budgets`` → ``priority_drain``) over a toy frontier, url_state and
+politeness table. A change that moves the decode back onto the content
+store's scan partitions, a seen probe that regresses to a broadcast UDF, a
+frontier read that runs the latest-wins window again, or a drain that
+scans the crawl state twice or aggregates its hosts again shows up as a
+diff of those rows.
 
 Usage:
     python tools/audit_plans.py [query ...]       # default: all queries
@@ -152,6 +155,56 @@ def engine_frontier_read(spark, drained, root: str):
     return store.read("frontier", spark)
 
 
+def engine_drain(spark, web, drained, root: str):
+    """The drain as ``run_epoch`` plans it, over a store holding the toy
+    batch as the frontier, every third URL fetched (its url_state row
+    terminal, a 200 for the even ones) and one politeness row per host."""
+    from datetime import date, datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    from europarl_crawler_spark.plans.epoch import CrawlEngine
+    from europarl_crawler_spark.plans.frontier import (
+        crawl_state,
+        doc_priority_expr,
+        drain_candidates,
+        priority_drain,
+    )
+    from europarl_crawler_spark.plans.politeness import host_budgets
+    from europarl_crawler_spark.sources import schema as S
+    from europarl_crawler_spark.sources.epochstore import EpochStore
+
+    eng = CrawlEngine(spark, EpochStore(root + "/drain-store"), web)
+    frontier = drained.select(
+        "url_id", F.lit(0).cast("long").alias("date_id"),
+        F.col("rule_id").cast("int").alias("rule_id"), "dates", "url",
+        "url_hash", "host_hash", F.pmod("url_id", F.lit(16)).cast("int").alias("salt"),
+        doc_priority_expr().cast("long").alias("priority"),
+        F.lit(1).alias("created_epoch"),
+    )
+    ok = F.pmod("url_id", F.lit(2)) == 0
+    url_state = drained.filter(F.pmod("url_id", F.lit(3)) == 0).select(
+        "url_id", F.lit(True).alias("terminal"), ok.alias("has_ok"),
+        F.when(ok, F.lit(datetime(2021, 1, 1, tzinfo=timezone.utc))).alias("last_ok_at"),
+        F.when(ok, F.lit(1)).alias("last_ok_epoch"),
+    )
+    politeness = drained.select("host_hash").distinct().select(
+        "host_hash", F.lit(3.0).alias("interval_secs"),
+        F.lit(None).cast("double").alias("last_check"),
+        F.lit(None).cast("double").alias("next_check"),
+    )
+    eng.store.append("frontier", frontier, 1, keys=["url_id"])
+    eng.store.append("url_state", url_state, 1)
+    eng.store.overwrite("politeness", politeness, 1, keys=["host_hash"])
+    state = crawl_state(eng._read("frontier", S.FRONTIER), eng._url_state())
+    batch = host_budgets(
+        drain_candidates(state, date(2021, 1, 2)),
+        eng._read("politeness", S.POLITENESS),
+        600.0,
+    )
+    return priority_drain(batch)
+
+
 def engine_main(spark) -> None:
     import tempfile
 
@@ -175,6 +228,13 @@ reaches the exact anti-join. `tests/test_cuckoo.py` pins the probe's shape.
 `store.read("frontier")`: a keyed base plus a keyed append is a plain scan
 with no latest-wins window; only a live `merge`/`delete` delta brings the
 window back. `tests/test_epochstore.py` pins the rule.
+
+`drain`: one scan each of `frontier`, `url_state` and `politeness` (3
+scans): the pending and recrawl rows are one filter over the crawl state,
+and each row's budget is a broadcast lookup in the politeness table, with
+no host `distinct`. Its windows are the drain's two (per host and salt,
+then per host). `tests/test_crawl_e2e.py` pins the one state scan on the
+engine's `requests` write.
 """)
     print(HEADER)
     with tempfile.TemporaryDirectory() as root:
@@ -183,6 +243,7 @@ window back. `tests/test_epochstore.py` pins the rule.
             ("extract_documents", engine_extract(spark, web, drained)),
             ("seen gate (anti_join_seen)", engine_seen_gate(spark, web, drained, root)),
             ('store.read("frontier")', engine_frontier_read(spark, drained, root)),
+            ("drain", engine_drain(spark, web, drained, root)),
         ):
             print(row(name, features(executed_plan(df))))
 
