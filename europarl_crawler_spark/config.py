@@ -6,10 +6,11 @@ worker sections (settings.ini:6,16,19,30,33,55,63,78). Here the same knobs
 are one dataclass, loadable from the same INI shape, consumed by
 CrawlEngine / bench / jobs.
 
-The URL-seen sketch has no knobs: the engine always maintains its cuckoo
-shard store once a frontier exists (falling back to the exact anti-join
-until then) and derives the shard count from the frontier's manifest row
-count (``functions.cuckoo.shard_count_policy``). The token bucket's
+The URL-seen sketch has no knobs of its own: the engine maintains its
+cuckoo shard store only while the frontier's manifest row count is above
+``broadcast_threshold_rows`` (below it the seen gate is the exact anti-join
+with a broadcast seen side) and derives the shard count from that row count
+(``functions.cuckoo.shard_count_policy``). The token bucket's
 throttling factor and capacity are the reference constants of
 ``plans.politeness``. Keys that earlier versions read — ``Salts``,
 ``BloomFpp``, ``UseBloom``, ``SeenSketch``, ``CuckooShards``,
@@ -36,11 +37,13 @@ class EngineConfig:
     # (reference get_unchecked_dates offset, db/sessionDay.py:36,104)
     probe_offset_days: int = 30
     # drop the F.broadcast hints on the hot-path dimension joins (budgets,
-    # ok-url keys, crawl metadata) when their estimated row count exceeds
-    # this — AQE then picks the join strategy, so a 10^8-host deployment
-    # degrades to thin-key shuffles instead of a forced multi-GB broadcast
-    # (VERDICT r2 #1). ~4M rows × tens of bytes ≈ low hundreds of MB, the
-    # upper edge of broadcast comfort on a 128 GiB executor.
+    # ok-url keys, crawl metadata, the seen gate's frontier keys) when their
+    # estimated row count exceeds this — AQE then picks the join strategy,
+    # so a 10^8-host deployment degrades to thin-key shuffles instead of a
+    # forced multi-GB broadcast (VERDICT r2 #1). ~4M rows × tens of bytes ≈
+    # low hundreds of MB, the upper edge of broadcast comfort on a 128 GiB
+    # executor. It is also the seen gate's switch: the cuckoo pre-filter
+    # runs only over a frontier above this many rows.
     broadcast_threshold_rows: int = 4_000_000
 
     @classmethod

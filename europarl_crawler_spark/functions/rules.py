@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.schema import local_df
+
 BASE_URL = "https://europarl.europa.eu/doceo/document/"
 
 # Parliament terms, strict '<' on BOTH ends (reference rule.py:46-61: out-of-range
@@ -116,7 +118,7 @@ def rules_df(spark: SparkSession, active_only: bool = False) -> DataFrame:
         for i, r in enumerate(RULES)
         if (r.active or not active_only)
     ]
-    return spark.createDataFrame(rows, RULES_SCHEMA)
+    return local_df(spark, rows, RULES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

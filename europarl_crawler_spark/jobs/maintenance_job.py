@@ -148,7 +148,7 @@ def main(argv=None) -> dict:
     elif args.cmd == "shutdown-compact":
         # shutdown-compact touches only frontier/url_state; a content store
         # is unnecessary — build the engine with an empty web frame
-        eng = CrawlEngine(spark, store, spark.createDataFrame([], S.WEB))
+        eng = CrawlEngine(spark, store, S.local_df(spark, [], S.WEB))
         eng.shutdown_compact()
         out = {"compacted": True}
     elif args.cmd in ("compact-table", "rewrite-zorder"):

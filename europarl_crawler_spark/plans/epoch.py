@@ -19,18 +19,25 @@ single-writer; readers outside an epoch (the indexer) read as of
 ``ledger_head`` and roll nothing back.
 
 Between epochs only the store holds crawl state; the engine keeps none.
-The seen sketch is a checkpoint under ``_seen_sketch/store``, stamped with
-the frontier commit whose url_ids it holds: ``run_epoch`` stamps it after
-every frontier commit and opens it only while the stamp equals the frontier
-head, so a first epoch, a steady-state epoch and a restart run one path, and
-a crash between a commit and its stamp costs a rebuild, never a false
-negative. ``open_epoch`` unstamps a checkpoint stamped above L: after the
-rollback, a re-run epoch can commit a different frontier under the same
-number. The invariant is one-sided: a stamp equal to the head means the
-shards hold a superset of the frontier's url_ids. A crash inside
-``add_many`` leaves the old stamp and fingerprints of the append that the
-restart rolls back; they stay until the next rebuild, costing load and an
-exact anti-join for those ids, never a wrong answer.
+The seen sketch runs only while the frontier holds more than
+``broadcast_threshold_rows`` rows: below that the seen gate's exact
+anti-join broadcasts the frontier's url_ids, so no candidate shuffles and a
+pre-filter has nothing to save, and an epoch opens, builds and stamps no
+sketch. Above it the sketch is a checkpoint under ``_seen_sketch/store``,
+stamped with the frontier commit whose url_ids it holds: ``run_epoch``
+stamps it after every frontier commit and opens it only while the stamp
+equals the frontier head, so the first epoch above the threshold, a
+steady-state epoch and a restart run one path, and a crash between a commit
+and its stamp costs a rebuild, never a false negative. An epoch under the
+threshold commits the frontier without a stamp, so a crawl that grows past
+it rebuilds the sketch from its grown frontier. ``open_epoch`` unstamps a
+checkpoint stamped above L: after the rollback, a re-run epoch can commit a
+different frontier under the same number. The invariant is one-sided: a
+stamp equal to the head means the shards hold a superset of the frontier's
+url_ids. A crash inside ``add_many`` leaves the old stamp and fingerprints
+of the append that the restart rolls back; they stay until the next
+rebuild, costing load and an exact anti-join for those ids, never a wrong
+answer.
 
 A growing table (``frontier``, ``url_state``) whose live chain holds
 ``MAX_LIVE_COMMITS`` commits takes the epoch's growth as one folded base
@@ -129,7 +136,7 @@ def commit_epoch(store: EpochStore, spark: SparkSession, e: int, now=None, stats
     commit: its start and the counts of a crawl epoch's ``stats``. A
     maintenance epoch (no stats) records no start and zero counts."""
     counts = [(stats or {}).get(c, 0) for c in ("new_urls", "drained", "fetched_ok", "dead_letter")]
-    store.append("epochs", spark.createDataFrame([(e, now, *counts)], LEDGER), e)
+    store.append("epochs", S.local_df(spark, [(e, now, *counts)], LEDGER), e)
 
 
 def _url_state_delta(fetched: DataFrame) -> DataFrame:
@@ -219,12 +226,14 @@ class CrawlEngine:
         return sketch
 
     def _build_sketch(self, frontier: DataFrame) -> CuckooShardStore:
-        """(Re)build the seen sketch from the frontier, unstamped. It sizes
-        at load 0.21 (~4.7× headroom), so per-epoch increments fit for many
-        epochs between rebuilds. The shard count comes from the row count
-        of the frontier's live manifests (``shard_count_policy``),
-        recomputed on every build, so an overflowing frontier re-shards
-        itself.
+        """(Re)build the seen sketch from the frontier, unstamped: in the
+        first epoch whose frontier is above ``broadcast_threshold_rows``
+        rows, after an overflow, or when no checkpoint is stamped with the
+        frontier head. It sizes at load 0.21 (~4.7× headroom), so per-epoch
+        increments fit for many epochs between rebuilds. The shard count
+        comes from the row count of the frontier's live manifests
+        (``shard_count_policy``), recomputed on every build, so an
+        overflowing frontier re-shards itself.
 
         The sketch is a :class:`~europarl_crawler_spark.functions.cuckoo.
         CuckooShardStore`: shard tables live as files under the store
@@ -303,21 +312,28 @@ class CrawlEngine:
         combos = todo_combos(spark, days, state, self.prefetch_limit, e)
         new_urls = probes.unionByName(combos)
 
-        # 2. URL-seen gate on the hashed key: exact anti-join, pre-filtered
-        #    by the cuckoo shard store (north_rule). Seen key = url_id
-        #    (= rule_id × url, the reference's UNIQUE constraint,
-        #    db/url.py:45). No checkpoint stamped with the frontier head
-        #    (epoch 1, or a crash before the last stamp) means the plain
-        #    anti-join.
-        sketch = self._open_sketch()
-        fresh = anti_join_seen(new_urls, state, sketch, hash_col="url_id")
+        # 2. URL-seen gate on the hashed key: the exact anti-join. Seen key
+        #    = url_id (= rule_id × url, the reference's UNIQUE constraint,
+        #    db/url.py:45). Up to broadcast_threshold_rows frontier rows
+        #    (the live manifests' row count) the seen side is a broadcast,
+        #    no candidate shuffles, and a pre-filter has nothing to skip:
+        #    the epoch keeps no sketch. Above it the cuckoo shard store
+        #    (north_rule) pre-filters the anti-join; no checkpoint stamped
+        #    with the frontier head (the first epoch above the threshold,
+        #    or a crash before the last stamp) means the plain anti-join.
+        chain = self.store.live_manifests("frontier")
+        thr = self.config.broadcast_threshold_rows
+        large = sum(m["rows"] for m in chain) > thr
+        sketch = self._open_sketch() if large else None
+        fresh = anti_join_seen(
+            new_urls, state, sketch, hash_col="url_id", hint_broadcast=not large
+        )
         if sketch is not None:
             fresh = fresh.persist()
         # the gate's exact anti-join leaves only url_ids the frontier lacks,
         # so growth is a keyed insert-only append: reads need no latest-wins
         # window for it. A full live chain folds into one key-unique base of
         # frontier ∪ fresh.
-        chain = self.store.live_manifests("frontier")
         if len(chain) < MAX_LIVE_COMMITS:
             m = self.store.append("frontier", fresh, e, keys=["url_id"])
             new_rows = m["rows"]
@@ -340,10 +356,11 @@ class CrawlEngine:
         # the grown frontier: with a pinned schema the re-read runs no job
         frontier = self._read("frontier", S.FRONTIER)
         state = crawl_state(frontier, url_state)
-        if sketch is None:
-            sketch = self._build_sketch(frontier)
-        # only now does the checkpoint hold every url_id of commit e
-        sketch.set_stamp(e)
+        if large:
+            if sketch is None:
+                sketch = self._build_sketch(frontier)
+            # only now does the checkpoint hold every url_id of commit e
+            sketch.set_stamp(e)
 
         # 3. drain candidates: one filter over the crawl state — rows
         #    without a terminal outcome, never fetched (null) or dead-letter
@@ -365,7 +382,6 @@ class CrawlEngine:
         #    (thin-key shuffles at the 10^8-host regime).
         politeness = self._read("politeness", S.POLITENESS)
         est_hosts = self._estimated_hosts()
-        thr = self.config.broadcast_threshold_rows
         batch = host_budgets(
             candidates,
             politeness,

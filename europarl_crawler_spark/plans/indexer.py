@@ -83,7 +83,7 @@ def index_epoch(
     try:
         idx = store.read("index_docs", spark, schema=INDEX_DOCS)
     except ValueError:
-        idx = spark.createDataFrame([], INDEX_DOCS)
+        idx = S.local_df(spark, [], INDEX_DOCS)
     batch = unindexed(docs, idx, limit)
     rows = build_index_rows(batch, rules_df(spark))
     e = (store.latest("index_docs") or 0) + 1
@@ -118,7 +118,7 @@ def reset_postprocessing(
     try:
         idx = store.read("index_docs", spark, schema=INDEX_DOCS)
     except ValueError:
-        idx = spark.createDataFrame([], INDEX_DOCS)
+        idx = S.local_df(spark, [], INDEX_DOCS)
     queued = victims.join(idx.select("image_id"), "image_id", "left_semi").select(
         "image_id"
     )
@@ -141,7 +141,7 @@ def process_unindex(store: EpochStore, spark: SparkSession) -> dict:
     try:
         q = store.read("unindex_queue", spark, schema=UNINDEX_QUEUE)
     except ValueError:
-        q = spark.createDataFrame([], UNINDEX_QUEUE)
+        q = S.local_df(spark, [], UNINDEX_QUEUE)
     q = q.select("image_id")
     e = (store.latest("index_docs") or 0) + 1
     m = store.delete("index_docs", q, e, keys=["image_id"])

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.schema import local_df
+
 ROBOTS_SCHEMA = T.StructType(
     [
         T.StructField("host_hash", T.LongType(), False),
@@ -154,7 +156,7 @@ def crawl_delays_df(spark: SparkSession, robots_by_host: dict[str, str]) -> Data
         d = parse_crawl_delay(text)
         if d is not None:
             rows.append((_host_hash_py(spark, host), float(d)))
-    return spark.createDataFrame(rows, DELAY_SCHEMA)
+    return local_df(spark, rows, DELAY_SCHEMA)
 
 
 def robots_df(
@@ -169,7 +171,7 @@ def robots_df(
         hh = _host_hash_py(spark, host)
         for pattern, allow in parse_robots(text, agent):
             rows.append((hh, host, pattern, pattern_regex(pattern), allow))
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    return local_df(spark, rows, ROBOTS_SCHEMA)
 
 
 def _host_hash_py(spark: SparkSession, host: str) -> int:

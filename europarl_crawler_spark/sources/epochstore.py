@@ -56,6 +56,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .schema import local_df
+
 
 def _stat_value(v):
     """Footer min/max → a JSON-able, ORDER-PRESERVING scalar: numbers and
@@ -478,7 +480,7 @@ class EpochStore:
         if not live:
             if schema is None:
                 raise ValueError(f"table {table} is empty and no schema given")
-            return spark.createDataFrame([], schema)
+            return local_df(spark, [], schema)
         paths = [str(self.root / table / f"epoch={m['epoch']}") for m in live]
         kept = total = None
         if predicates:
@@ -586,7 +588,7 @@ class EpochStore:
         if not ms:
             if schema is None:
                 raise ValueError(f"no commits after epoch {since} and no schema given")
-            return spark.createDataFrame([], schema).withColumn(
+            return local_df(spark, [], schema).withColumn(
                 "_change", F.lit("upsert")
             )
         if any(m["kind"] == "base" for m in ms):

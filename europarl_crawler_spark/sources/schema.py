@@ -6,11 +6,44 @@ requests.py:25-39) re-keyed for Spark: SERIAL ids become content-derived
 xxhash64 keys so merges are idempotent without sequence state (SURVEY §7.4.2),
 and the documents table carries the image+caption payload of BASELINE.json's
 ``input_hint`` instead of a filesystem blob pointer.
+
+``local_df`` is how the engine builds a frame from driver-side rows.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+def local_df(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order; ``schema`` a
+    ``StructType`` or a DDL string) as a local relation.
+
+    ``spark.createDataFrame(<python list>, schema)`` parallelizes the rows
+    into an RDD that PySpark re-pickles through a ``PythonRDD``, so every
+    scan of it starts Python workers. A ``pyarrow.Table`` goes to the JVM
+    as one ``LocalTableScan`` instead: building it starts no job and
+    scanning it starts no Python worker, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. Timestamps convert
+    the way the list path converts them (an aware value by its instant, a
+    naive one in local time), so both give the same rows.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = [
+        pa.array([f.dataType.toInternal(v) for v in col], pa.int64()).cast(a.type)
+        if isinstance(f.dataType, T.TimestampType)
+        else pa.array(col, a.type)
+        for f, a, col in zip(schema.fields, arrow, cols)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
+
 
 # the seed domain (reference session_days table)
 SESSION_DAYS = T.StructType(

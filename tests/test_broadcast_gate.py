@@ -64,10 +64,34 @@ def test_drain_hint_on_broadcasts(no_auto_broadcast):
     assert "BroadcastHashJoin" in plan
 
 
+def _seen_gate_plan(spark, hint_broadcast: bool) -> str:
+    from europarl_crawler_spark.functions.seen import anti_join_seen
+
+    frontier, _ = _frontier_and_politeness(spark)
+    candidates = frontier.withColumn("url_id", F.col("url_id") + 10)
+    fresh = anti_join_seen(
+        candidates, frontier, hash_col="url_id", hint_broadcast=hint_broadcast
+    )
+    return fresh._jdf.queryExecution().executedPlan().toString()
+
+
+def test_seen_gate_hint_off_uses_sort_merge_join(no_auto_broadcast):
+    plan = _seen_gate_plan(no_auto_broadcast, hint_broadcast=False)
+    assert "SortMergeJoin" in plan
+    assert "BroadcastHashJoin" not in plan
+
+
+def test_seen_gate_hint_on_broadcasts(no_auto_broadcast):
+    plan = _seen_gate_plan(no_auto_broadcast, hint_broadcast=True)
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+
+
 def test_forced_large_config_e2e_matches_default(spark, tmp_path):
-    """threshold=0 (every hint dropped, AQE decides) must produce the exact
-    same crawl as the default config — the gate changes physical strategy
-    only."""
+    """threshold=0 (every hint dropped, AQE decides, the seen sketch on)
+    must produce the exact same crawl as the default config (broadcast
+    hints, no sketch) — the gate changes physical strategy only. So this
+    is also the sketch-on vs exact-only equivalence."""
     from europarl_crawler_spark.plans.epoch import CrawlEngine
     from europarl_crawler_spark.sources.epochstore import EpochStore
     from europarl_crawler_spark.sources.synthetic import session_days_df, simulated_web
@@ -77,7 +101,7 @@ def test_forced_large_config_e2e_matches_default(spark, tmp_path):
     simulated_web(spark, days).write.parquet(web_path)
     web = spark.read.parquet(web_path)
 
-    outcomes = {}
+    outcomes, stores = {}, {}
     for name, cfg in {
         "default": EngineConfig(),
         "forced_large": EngineConfig(broadcast_threshold_rows=0),
@@ -86,6 +110,7 @@ def test_forced_large_config_e2e_matches_default(spark, tmp_path):
             spark, EpochStore(str(tmp_path / name)), web,
             prefetch_limit=30, epoch_secs=600.0, config=cfg,
         )
+        stores[name] = eng.store
         eng.bootstrap(days)
         stats = eng.run(2, start=datetime(2021, 1, 1, tzinfo=timezone.utc))
         docs = eng._read("documents", S.DOCUMENTS)
@@ -97,3 +122,11 @@ def test_forced_large_config_e2e_matches_default(spark, tmp_path):
             ),
         )
     assert outcomes["default"] == outcomes["forced_large"]
+    # the forced-large crawl ran the sketch: a checkpoint stamped at its
+    # frontier head; the default one never made a checkpoint
+    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
+
+    large = stores["forced_large"]
+    sketch = CuckooShardStore(large.root / "_seen_sketch" / "store")
+    assert sketch.stamp == large.latest("frontier") is not None
+    assert not (stores["default"].root / "_seen_sketch").exists()

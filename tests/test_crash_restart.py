@@ -20,6 +20,7 @@ from pathlib import Path
 
 import pytest
 
+from europarl_crawler_spark.config import EngineConfig
 from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
 from europarl_crawler_spark.plans import indexer
 from europarl_crawler_spark.plans.epoch import (
@@ -45,8 +46,11 @@ class Crash(Exception):
 
 
 def _engine(world, store):
+    # a threshold of 0 keeps the seen sketch on, so the sweep crashes its
+    # maintenance too
     return CrawlEngine(
-        world["spark"], store, world["web"], prefetch_limit=4, epoch_secs=600.0
+        world["spark"], store, world["web"], prefetch_limit=4, epoch_secs=600.0,
+        config=EngineConfig(broadcast_threshold_rows=0),
     )
 
 

@@ -2,9 +2,11 @@
 
 The seen sketch is strictly a pre-filter over the exact anti-join, so the
 crawl — frontier membership, request log, drain order — must be bit-identical
-to a crawl whose gate is the exact anti-join alone. The exact-only engine is
-a test fake: it never opens the sketch checkpoint. This pins that, plus the
-checkpoint's lifecycle: stamped with every frontier commit, opened on
+to a crawl whose gate is the exact anti-join alone. The sketch runs only
+above ``broadcast_threshold_rows`` frontier rows, so the sketch engines here
+run at a threshold of 0, and the exact-only engine is a default-config
+engine, whose toy frontier keeps it under the threshold. This pins that,
+plus the checkpoint's lifecycle: stamped with every frontier commit, opened on
 restart without a rescan, reopened after a crash between commit and stamp
 (the restart rolls the commit back), and evicted in place at
 shutdown_compact (D4).
@@ -18,22 +20,27 @@ from pathlib import Path
 import numpy as np
 import pytest
 
+from europarl_crawler_spark.config import EngineConfig
 from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
 from europarl_crawler_spark.plans.epoch import CrawlEngine, commit_epoch, open_epoch
 from europarl_crawler_spark.sources.epochstore import EpochStore
 from europarl_crawler_spark.sources.synthetic import session_days_df, simulated_web
 
 START = datetime(2021, 1, 1, tzinfo=timezone.utc)
+# the seen sketch runs above this many frontier rows: at 0, from epoch 2 on
+SKETCH_ON = EngineConfig(broadcast_threshold_rows=0)
 
 
-def _run(spark, root, name: str, n_epochs: int = 3, prefetch_limit: int = 50):
+def _run(spark, root, name: str, n_epochs: int = 3, prefetch_limit: int = 50,
+         config=SKETCH_ON):
     days = session_days_df(spark, start=date(2019, 7, 2), n_days=12)
     web = simulated_web(spark, days)
     web.write.mode("overwrite").parquet(str(root / "web"))
     web = spark.read.parquet(str(root / "web"))
     store = EpochStore(root / f"store-{name}")
     eng = CrawlEngine(
-        spark, store, web, prefetch_limit=prefetch_limit, epoch_secs=600.0
+        spark, store, web, prefetch_limit=prefetch_limit, epoch_secs=600.0,
+        config=config,
     )
     eng.bootstrap(days)
     eng.run(n_epochs, start=START)
@@ -43,16 +50,28 @@ def _run(spark, root, name: str, n_epochs: int = 3, prefetch_limit: int = 50):
 @pytest.fixture(scope="module")
 def runs(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("crawl-cuckoo")
-    asked = []
+    calls = []
     with pytest.MonkeyPatch.context() as mp:
-        # the exact-only engine: the checkpoint is never opened, so every
-        # epoch's gate is the plain anti-join
-        mp.setattr(CrawlEngine, "_open_sketch", lambda self: asked.append(1))
-        exact = _run(spark, root, "exact")
-    assert len(asked) == 3  # one gate an epoch, each without a sketch
+        # the exact-only engine: the default config, under the threshold,
+        # so every epoch's gate is the plain anti-join
+        for name in ("build", "tag_maybe"):
+            real = getattr(CuckooShardStore, name)
+            mp.setattr(
+                CuckooShardStore, name,
+                lambda *a, _n=name, _r=real, **k: calls.append(_n) or _r(*a, **k),
+            )
+        exact = _run(spark, root, "exact", config=EngineConfig())
     # last: the later tests reuse this engine's web, which each run rewrites
     cuckoo = _run(spark, root, "cuckoo")
-    return dict(exact=exact, cuckoo=cuckoo)
+    return dict(exact=exact, cuckoo=cuckoo, exact_sketch_calls=calls)
+
+
+def test_default_toy_crawl_keeps_no_sketch(runs):
+    """Under the broadcast threshold an epoch opens, builds, probes and
+    stamps no sketch: the default-config toy crawl never touches the shard
+    store and never creates its checkpoint directory."""
+    assert runs["exact_sketch_calls"] == []
+    assert not (runs["exact"][1].root / "_seen_sketch").exists()
 
 
 def _snapshot(store, spark, table, cols):
@@ -105,7 +124,7 @@ def _copy(runs, name):
     shutil.copytree(store.root, root)
     eng = CrawlEngine(
         old_eng.spark, EpochStore(root), old_eng.web,
-        prefetch_limit=50, epoch_secs=600.0,
+        prefetch_limit=50, epoch_secs=600.0, config=SKETCH_ON,
     )
     return eng, eng.store
 
@@ -171,6 +190,7 @@ def test_restart_rebuilds_sketch_even_without_new_urls(runs, monkeypatch):
     _checkpoint(copy).set_stamp(None)
     eng2 = CrawlEngine(
         old_eng.spark, copy, old_eng.web, prefetch_limit=0, epoch_secs=600.0,
+        config=SKETCH_ON,
     )
     builds = _count_builds(monkeypatch)
     stats = eng2.run(1, start=START)
@@ -211,7 +231,7 @@ def test_crash_after_frontier_append_reopens_the_checkpoint(spark, tmp_path, mon
 
     def restart(st):
         CrawlEngine(
-            spark, st, eng.web, prefetch_limit=4, epoch_secs=600.0
+            spark, st, eng.web, prefetch_limit=4, epoch_secs=600.0, config=SKETCH_ON
         ).run(1, start=START)
 
     restart(clean)
@@ -228,8 +248,11 @@ def test_crash_after_frontier_append_reopens_the_checkpoint(spark, tmp_path, mon
 def test_shutdown_on_a_fresh_engine_evicts_in_place(runs, monkeypatch):
     """shutdown_compact on an engine that ran no epoch (maintenance_job
     shutdown-compact) opens the checkpoint, evicts the dropped url_ids in
-    place and re-stamps it with the compaction commit — no rebuild."""
+    place and re-stamps it with the compaction commit — no rebuild. It runs
+    at the default threshold: the eviction guard reads the same threshold,
+    and at 0 any dropped id abandons the eviction."""
     eng, store = _copy(runs, "fresh-shutdown")
+    eng.config = EngineConfig()
     dropped = _grow_unrequested(eng, 5)
     size_before = _checkpoint(store).size
     builds = _count_builds(monkeypatch)
@@ -270,7 +293,9 @@ def test_shutdown_checkpoint_loads_on_restart(spark, tmp_path, monkeypatch):
     assert list(sdir.glob("shard_*.npy"))
     assert _checkpoint(store).stamp == store.latest("frontier")
 
-    eng2 = CrawlEngine(spark, store, eng.web, prefetch_limit=50, epoch_secs=600.0)
+    eng2 = CrawlEngine(
+        spark, store, eng.web, prefetch_limit=50, epoch_secs=600.0, config=SKETCH_ON
+    )
 
     # any rebuild attempt would call CuckooShardStore.build — make that an error
     def boom(*a, **k):
@@ -360,7 +385,8 @@ def test_crash_mid_rebuild_leaves_no_loadable_checkpoint(runs, monkeypatch):
         with pytest.raises(Exception, match="crash mid-build"):
             eng.run(1, start=START)
     restarted = CrawlEngine(
-        eng.spark, store, eng.web, prefetch_limit=50, epoch_secs=600.0
+        eng.spark, store, eng.web, prefetch_limit=50, epoch_secs=600.0,
+        config=SKETCH_ON,
     )
     restarted.run(1, start=START)
     assert store.latest("frontier") == head + 1

@@ -273,9 +273,9 @@ def folded(spark, tmp_path_factory):
     """A 4-epoch toy crawl at a live-chain bound of 2, with every
     ``EpochStore.read`` recorded per epoch as (table, jobs it ran), the
     physical plan of each epoch's ``requests`` write (file locations
-    printed in full), and after each epoch the live chain lengths of
-    frontier and url_state and the frontier's committed rows and distinct
-    url_ids."""
+    printed in full) and of every write as (table, plan) per epoch, and
+    after each epoch the live chain lengths of frontier and url_state and
+    the frontier's committed rows and distinct url_ids."""
     from europarl_crawler_spark.plans import epoch as ep
 
     root = tmp_path_factory.mktemp("reads")
@@ -296,11 +296,14 @@ def folded(spark, tmp_path_factory):
         return out
 
     plans: list[str] = []
+    writes: list[list[tuple[str, str]]] = []
     real_commit = EpochStore._commit
 
     def planned(self, table, df, *a, **kw):
+        plan = df._jdf.queryExecution().executedPlan().toString()
         if table == "requests":
-            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            plans.append(plan)
+        writes[-1].append((table, plan))
         return real_commit(self, table, df, *a, **kw)
 
     per_epoch, chains = [], []
@@ -313,6 +316,7 @@ def folded(spark, tmp_path_factory):
             mp.setattr(EpochStore, "_commit", planned)
             for i in range(4):
                 reads.clear()
+                writes.append([])
                 eng.run_epoch(START + timedelta(seconds=600.0 * i))
                 per_epoch.append(list(reads))
                 ids = real_read(store, "frontier", spark).select("url_id")
@@ -324,7 +328,9 @@ def folded(spark, tmp_path_factory):
                 ))
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", meta_len)
-    return dict(store=store, eng=eng, reads=per_epoch, chains=chains, plans=plans)
+    return dict(
+        store=store, eng=eng, reads=per_epoch, chains=chains, plans=plans, writes=writes
+    )
 
 
 def test_url_state_commits_on_crawl_clock(folded, spark):
@@ -393,6 +399,22 @@ def test_requests_write_scans_the_crawl_state_once(folded):
         assert sum("/store/frontier/" in s for s in scans) == 1, plan
         assert sum("/store/url_state/" in s for s in scans) == 1, plan
         assert len(re.findall(r"HashAggregate\(", plan)) == 2, plan
+
+
+def test_only_the_extract_runs_python_workers(folded):
+    """Driver-built frames (the rules table, the ledger row) are local
+    relations, and under the broadcast threshold the seen gate keeps no
+    sketch: no write of a default-config epoch scans a parallelized Python
+    list (``ExistingRDD``, a ``PythonRDD`` underneath), and the one Python
+    stage is the extract's decode in the ``documents`` write."""
+    for writes in folded["writes"]:
+        assert [t for t, _ in writes] == [
+            "frontier", "requests", "url_state", "documents", "politeness",
+            "metrics", "epochs",
+        ]
+        for table, plan in writes:
+            assert "ExistingRDD" not in plan, (table, plan)
+            assert ("MapInPandas" in plan) == (table == "documents"), (table, plan)
 
 
 def test_politeness_reads_parse_only_the_live_manifest(folded, monkeypatch):

@@ -3,7 +3,9 @@ scale-relevant physical features of its Spark plan in one table —
 
 - exchanges (shuffles) and whether AQE is in play,
 - broadcast-hash vs sort-merge joins,
-- Arrow/Python stages (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas),
+- Arrow/Python stages (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas,
+  and scans of a frame parallelized from a Python list, ``Scan ExistingRDD``,
+  whose ``PythonRDD`` starts Python workers too),
 - parquet scans and how many carry PushedFilters,
 - whole-stage-codegen spans.
 
@@ -12,17 +14,19 @@ plan regression (a lost broadcast hint, a filter that stopped pushing, a
 Python stage sneaking into a JVM lane) shows up as a diff of this table
 rather than a benchmark surprise two rounds later.
 
-``--engine`` audits four crawl-engine stages instead, over the toy
+``--engine`` audits five crawl-engine stages instead, over the toy
 simulated web (10 days): ``extract_documents`` over one drained batch, the
-URL-seen gate (``anti_join_seen`` over a toy frontier, pre-filtered by the
-shard store the engine builds for it), ``EpochStore.read`` of a toy
-frontier grown by one keyed append, and the drain (``drain_candidates`` →
-``host_budgets`` → ``priority_drain``) over a toy frontier, url_state and
-politeness table. A change that moves the decode back onto the content
-store's scan partitions, a seen probe that regresses to a broadcast UDF, a
-frontier read that runs the latest-wins window again, or a drain that
-scans the crawl state twice or aggregates its hosts again shows up as a
-diff of those rows.
+URL-seen gate in both of its forms (``anti_join_seen`` over a toy frontier,
+pre-filtered by the shard store the engine builds for it above
+``broadcast_threshold_rows``, and the broadcast exact anti-join the engine
+runs under it), ``EpochStore.read`` of a toy frontier grown by one keyed
+append, and the drain (``drain_candidates`` → ``host_budgets`` →
+``priority_drain``) over a toy frontier, url_state and politeness table. A
+change that moves the decode back onto the content store's scan
+partitions, a seen probe that regresses to a broadcast UDF, a gate under
+the threshold that shuffles or runs Python, a frontier read that runs the
+latest-wins window again, or a drain that scans the crawl state twice or
+aggregates its hosts again shows up as a diff of those rows.
 
 Usage:
     python tools/audit_plans.py [query ...]       # default: all queries
@@ -59,6 +63,7 @@ def features(plan: str) -> dict:
             plan.count("ArrowEvalPython")
             + plan.count("MapInPandas")
             + plan.count("FlatMapGroupsInPandas")
+            + plan.count("Scan ExistingRDD")
         ),
         "scans": len(scans),
         "pushed": len(pushed),
@@ -122,22 +127,27 @@ def engine_extract(spark, web, drained):
     return extract_documents(fetched, web, rules_df(spark))
 
 
-def engine_seen_gate(spark, web, drained, root: str):
+def engine_seen_gate(spark, web, drained, root: str, sketched: bool):
     """The URL-seen gate as ``run_epoch`` plans it: half the toy batch is
-    the committed frontier, the whole batch is the candidate set, and the
-    pre-filter is the shard store the engine builds over that frontier."""
+    the committed frontier and the whole batch is the candidate set. Above
+    the threshold (``sketched``) the pre-filter is the shard store the
+    engine builds over that frontier; under it the seen side is broadcast
+    and there is no pre-filter."""
     from pyspark.sql import functions as F
 
     from europarl_crawler_spark.functions.seen import anti_join_seen
     from europarl_crawler_spark.plans.epoch import CrawlEngine
     from europarl_crawler_spark.sources.epochstore import EpochStore
 
-    eng = CrawlEngine(spark, EpochStore(root + "/store"), web)
+    name = "sketched" if sketched else "exact"
+    eng = CrawlEngine(spark, EpochStore(f"{root}/{name}-store"), web)
     seen = drained.filter(F.pmod("url_id", F.lit(2)) == 0)
     eng.store.overwrite("frontier", seen, 1, keys=["url_id"])
     frontier = eng.store.read("frontier", spark).select("url_id")
-    sketch = eng._build_sketch(frontier)
-    return anti_join_seen(drained, frontier, sketch, hash_col="url_id")
+    sketch = eng._build_sketch(frontier) if sketched else None
+    return anti_join_seen(
+        drained, frontier, sketch, hash_col="url_id", hint_broadcast=not sketched
+    )
 
 
 def engine_frontier_read(spark, drained, root: str):
@@ -220,10 +230,21 @@ and the byte-sized `documents` repartition. The store scan feeds the
 left-semi filter with no exchange between them, so the store's payloads
 never shuffle. `tests/test_extract_balance.py` pins both properties.
 
-`seen gate`: the candidates' `pmod(url_id, n_shards)` repartition feeds the
-shard-local cuckoo probe, a py stage that appears once in each branch of
-the fresh ∪ rechecked union (2 py stages); only the maybe-seen slice
-reaches the exact anti-join. `tests/test_cuckoo.py` pins the probe's shape.
+`seen gate, sketched`: above `broadcast_threshold_rows` frontier rows the
+candidates' `pmod(url_id, n_shards)` repartition feeds the shard-local
+cuckoo probe, a py stage that appears once in each branch of the fresh ∪
+rechecked union (2 py stages); only the maybe-seen slice reaches the exact
+anti-join. `tests/test_cuckoo.py` pins the probe's shape.
+
+`seen gate, exact`: at or under the threshold the engine keeps no sketch;
+the exact anti-join broadcasts the frontier's url_ids, so no candidate
+shuffles and no py stage runs. `tests/test_broadcast_gate.py` pins the
+hint, `tests/test_crawl_e2e.py` the engine's write plans.
+
+`py stages` also counts `Scan ExistingRDD`: a frame built with
+`spark.createDataFrame(<python list>)` is a `PythonRDD`, and each scan of it
+starts Python workers. The engine builds its driver-side frames with
+`sources.schema.local_df` (a `LocalTableScan`) instead.
 
 `store.read("frontier")`: a keyed base plus a keyed append is a plain scan
 with no latest-wins window; only a live `merge`/`delete` delta brings the
@@ -241,7 +262,10 @@ engine's `requests` write.
         web, drained = toy_batch(spark, root)
         for name, df in (
             ("extract_documents", engine_extract(spark, web, drained)),
-            ("seen gate (anti_join_seen)", engine_seen_gate(spark, web, drained, root)),
+            ("seen gate, sketched (anti_join_seen)",
+             engine_seen_gate(spark, web, drained, root, sketched=True)),
+            ("seen gate, exact (anti_join_seen, broadcast)",
+             engine_seen_gate(spark, web, drained, root, sketched=False)),
             ('store.read("frontier")', engine_frontier_read(spark, drained, root)),
             ("drain", engine_drain(spark, web, drained, root)),
         ):
@@ -284,9 +308,11 @@ Generated by `python tools/audit_plans.py`. How to read it:
   dimension-side smj anywhere else is the regression. `j15_skew_salted`
   shows 0 broadcasts BY DESIGN: the salted rewrite exists for dimensions
   too big to broadcast, so the lane pins the shuffled-hash path.
-- **py stages** — Arrow/Pandas stages. Nonzero ONLY in multimodal/codec
-  lanes and the exact-cosine verify; a Python stage in a relational lane is
-  a bug.
+- **py stages** — Arrow/Pandas stages, plus `Scan ExistingRDD` (a frame
+  parallelized from a Python list, whose `PythonRDD` starts Python workers).
+  Arrow/Pandas stages belong ONLY in multimodal/codec lanes and the
+  exact-cosine verify; a Python stage in a relational lane is a bug, and a
+  list-built input in one is a fixed cost worth removing.
 - **scans (pushed)** — parquet scans, and how many carry non-empty
   PushedFilters. Scans with no filter to push legitimately show 0.
 - **wscg** — distinct whole-stage-codegen spans; 0 would mean an
